@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -98,7 +99,7 @@ object Stress {
     if (marker.exists() &&
         java.nio.file.Files.readString(marker.toPath) == stamp) return
     new java.io.File(dst).mkdirs()
-    def raw(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def raw(t: String): DataFrame = Tables.table(spark, src, t)
     def maxOf(df: DataFrame, c: String): Long =
       df.agg(max(col(c).cast("long"))).head.getLong(0) + 1L
     val oMax = maxOf(raw("orders"), "o_orderkey")

@@ -54,7 +54,7 @@ object Pipelines {
     // kernel (WKT build/parse/makevalid) and the partial union aggregate —
     // the single-row-group local file otherwise plans the whole map side
     // onto ≤3 tasks (no-op at production scale, see Par.fanOut)
-    val li = Par.fanOut(spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Par.fanOut(Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_shipdate")))
     val rawParcel = st_makevalid(st_geomfromwkt(
       parcelWkt(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))))
@@ -68,7 +68,7 @@ object Pipelines {
     // 25-row dimension: parse the region polygon once per region, here,
     // not once per fact row after the join (J1 broadcast, like the
     // reference's F.broadcast at process_geodata.py:101)
-    val regions = spark.read.parquet(s"$dir/nation.parquet")
+    val regions = Tables.table(spark, dir, "nation")
       .select(col("n_nationkey").cast("int").as("id"),
         st_makevalid(st_geomfromwkt(regionWkt(col("n_nationkey")))).as("geo_region_mod"))
 
@@ -112,7 +112,7 @@ object Pipelines {
     * semi rollup and oracle mirrors. */
   private def parcelRelation(spark: SparkSession, dir: String): DataFrame = {
     import GeoFixtures._
-    val li = Par.fanOut(spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Par.fanOut(Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey")))
     val px0 = parcelX0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
     val py0 = parcelY0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
@@ -132,7 +132,7 @@ object Pipelines {
   /** The broadcast dimension side: region polygons from WKT. */
   private def regionRelation(spark: SparkSession, dir: String): DataFrame = {
     import GeoFixtures._
-    spark.read.parquet(s"$dir/nation.parquet")
+    Tables.table(spark, dir, "nation")
       .select(col("n_nationkey").cast("int").as("region_id"),
         regionX0(col("n_nationkey")).cast("long").as("rx0"),
         regionY0(col("n_nationkey")).cast("long").as("ry0"),
@@ -158,7 +158,7 @@ object Pipelines {
     * (never all-pairs at scale — the tree prunes), output |targets|. */
   def arealInterp(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.registerAll(spark)
-    val vals = Par.fanOut(spark.read.parquet(s"$dir/lineitem.parquet")
+    val vals = Par.fanOut(Tables.table(spark, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity")))
       .select((col("l_partkey") % 25L).cast("int").as("region_id"),
         col("l_quantity").cast("long").as("q"))
@@ -421,7 +421,7 @@ object Pipelines {
     // partials out); aggregating straight off the scan reduces to ≤
     // |slots| per scan task before the one exchange, and the heavy
     // envelope build runs AFTER the dedup on the slot rows only
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
     val ex0 = parcelX0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
     val ey0 = parcelY0(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))
@@ -675,7 +675,7 @@ object Pipelines {
     * per-row cell assignment is shuffle-free; the one shuffle is the
     * counting rollup on the packed key, map-side partials included. */
   def hexBuckets(spark: SparkSession, dir: String, sizeM: Double = 500.0): DataFrame = {
-    val ev = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val ev = Par.fanOut(Tables.table(spark, dir, "events")
       .select(col("event_id"), col("user_id")))
     val x = (col("user_id") % 100L).cast("double") * 137.0 - 6850.0
     val y = (col("event_id") % 100L).cast("double") * 173.0 - 8650.0
@@ -725,7 +725,7 @@ object Pipelines {
       |FROM ax GROUP BY 1, 2 ORDER BY hq, hr""".stripMargin
 
   def geohashBuckets(spark: SparkSession, dir: String, precision: Int = 6): DataFrame = {
-    val ev = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val ev = Par.fanOut(Tables.table(spark, dir, "events")
       .select(col("event_id"), col("user_id")))
     val lon = (col("user_id") % 1440L) / lit(4.0) - lit(180.0)
     val lat = (col("event_id") % 720L) / lit(4.0) - lit(90.0)
@@ -779,7 +779,7 @@ object Pipelines {
     * bounded-cardinality cell relation. At 100 TB the cell grid is the
     * partition key and the anchor distance is free column math. */
   def distanceSphereRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -828,7 +828,7 @@ object Pipelines {
     * the worst-case cross-engine libm drift for this op chain) and same
     * scale shape (ONE counting shuffle on the dense integer key). */
   def distanceSpheroidRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -887,7 +887,7 @@ object Pipelines {
     * the funnel's verified margins even where the iteration has not
     * fully converged (the near-antipodal cells). */
   def geodesicRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -981,7 +981,7 @@ object Pipelines {
     * counting shuffle, all geometry/trig on the ≤648-row cell relation,
     * ROUND(·,1) into DECIMAL(14,1) to absorb last-ulp libm drift. */
   def areaSphereRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1047,7 +1047,7 @@ object Pipelines {
     * corpus carries — no shuffle is ever keyed on the buffered payload. */
   def geodesicBufferRollup(spark: SparkSession, dir: String): DataFrame = {
     val r = 50000.0
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1111,7 +1111,7 @@ object Pipelines {
     * per-row projection over the ≤648-row cell relation — at 100 TB it is
     * a map-side rewrite of the geometry column, no shuffle touches it. */
   def subdivideRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1168,7 +1168,7 @@ object Pipelines {
     * Scale shape: identical to the other cell rollups — one counting
     * shuffle, per-row geometry on the bounded cell relation. */
   def inscribedCircleRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1217,7 +1217,7 @@ object Pipelines {
     * Scale shape: one counting shuffle on the cell key, geometry on the
     * bounded cell relation — the [[distanceSphereRollup]] pattern. */
   def emptyCircleRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1273,7 +1273,7 @@ object Pipelines {
     * per-row geometry on the bounded cell relation; at 100 TB the locate
     * is a scalar projection over any trajectory column. */
   def lineLocateRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1341,7 +1341,7 @@ object Pipelines {
     * trajectory columns (DF is O(mn) in the VERTEX counts — bounded by
     * simplify-before-compare, not by corpus size). */
   def frechetRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1430,7 +1430,7 @@ object Pipelines {
     * ≤648-row cell relation (O(hull vertices) each). At 100 TB both are
     * scalar projections over a footprint column. */
   def orientedEnvelopeRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1492,7 +1492,7 @@ object Pipelines {
     * median solve is a per-row scalar over bounded vertex sets (at
     * 100 TB: per-group collect of bounded clusters, then this scalar). */
   def geometricMedianRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1564,7 +1564,7 @@ object Pipelines {
     * Scale shape: the standard cell rollup — ONE counting shuffle,
     * per-row scalar trig on the bounded cell relation. */
   def angleRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1626,7 +1626,7 @@ object Pipelines {
     * shuffle is the counting groupBy on the dense integer cell key; WKT
     * build, parse and spherical trig run on the ≤648-row cell relation. */
   def lengthSphereRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1685,7 +1685,7 @@ object Pipelines {
     * final bounded-key (25-bucket) partial-aggregated sum, whose
     * exchange carries 25 rows of longs per task at any input size. */
   def overlayRollup(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val ev = Par.fanOut(Tables.table(spark, dir, "events")
       .select(col("event_id"), col("user_id")))
     val ax0 = (col("event_id") % 100L).cast("double")
     val ay0 = (col("user_id") % 100L).cast("double")
@@ -1727,7 +1727,7 @@ object Pipelines {
     * Scale shape: the predicates are per-row scalar work; the ONLY
     * shuffle is the bounded-key (25-bucket) partial-aggregated count. */
   def predicatesRollup(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val ev = Par.fanOut(Tables.table(spark, dir, "events")
       .select(col("event_id"), col("user_id")))
     val ax0 = (col("event_id") % 100L).cast("double")
     val ay0 = (col("user_id") % 100L).cast("double")
@@ -1842,7 +1842,7 @@ object Pipelines {
     * [[distanceSphereRollup]] — one counting shuffle, trig on the
     * bounded cell relation only. */
   def azimuthRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 36L).cast("int").as("gx"),
         (col("event_id") % 18L).cast("int").as("gy"))
@@ -1908,7 +1908,7 @@ object Pipelines {
     * relation. The accessors themselves are per-row scalar projections
     * (no data movement) at any scale. */
   def geomAccessorsRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -1970,7 +1970,7 @@ object Pipelines {
     * to BIGINT, compared by pure integer arithmetic — no rounding funnel
     * needed. Scale shape: identical to [[geomAccessorsRollup]]. */
   def lineInterpolateRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2030,7 +2030,7 @@ object Pipelines {
     * arrival-dependent; every measured accessor (type, count, envelope)
     * is order-invariant. */
   def collectRollup(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val pts = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"),
         expr("CAST((user_id DIV 25) % 4 AS INT)").as("s"))
@@ -2095,7 +2095,7 @@ object Pipelines {
     * arity is the member count — at scale the explode's row growth IS the
     * part relation being asked for. */
   def dumpRollup(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val pts = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"),
         expr("CAST((user_id DIV 25) % 4 AS INT)").as("s"))
@@ -2147,7 +2147,7 @@ object Pipelines {
     * Scale shape: identical to [[geomAccessorsRollup]] — one counting
     * shuffle on the dense key, all geometry on the ≤25-row relation. */
   def affineRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2221,7 +2221,7 @@ object Pipelines {
     * Scale shape: identical to [[geomAccessorsRollup]] — one counting
     * shuffle on the dense key, geometry on the ≤25-row cell relation. */
   def geomToolboxRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2296,7 +2296,7 @@ object Pipelines {
     * boolean cast to INT — pure integer oracle, no funnel needed.
     * Scale shape: identical to [[geomAccessorsRollup]]. */
   def ringAccessorsRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2382,7 +2382,7 @@ object Pipelines {
     * — exact integers again.
     * Scale shape: identical to [[geomAccessorsRollup]]. */
   def triangulateRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2448,7 +2448,7 @@ object Pipelines {
     * promote/access pair. All-integer oracle.
     * Scale shape: identical to [[geomAccessorsRollup]]. */
   def normPrecisionRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("user_id")))
       .select((col("user_id") % 25L).cast("int").as("r"))
       .groupBy(col("r"))
@@ -2518,7 +2518,7 @@ object Pipelines {
       |FROM c ORDER BY r""".stripMargin
 
   def transformCrsRollup(spark: SparkSession, dir: String): DataFrame = {
-    val cells = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val cells = Par.fanOut(Tables.table(spark, dir, "events")
         .select(col("event_id"), col("user_id")))
       .select((col("user_id") % 12L).cast("int").as("gx"),
         (col("event_id") % 9L).cast("int").as("gy"))
@@ -2661,7 +2661,7 @@ object Pipelines {
     * compaction pass: grouped collect + per-row JTS kernel, no cross-key
     * data movement beyond the one groupBy shuffle. */
   def trajectorySimplify(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Par.fanOut(spark.read.parquet(s"$dir/events.parquet")
+    val ev = Par.fanOut(Tables.table(spark, dir, "events")
       .select(col("event_id"), col("user_id"), col("ts")))
     val x = (col("event_id") % 1000L) / lit(4.0)
     val y = (col("event_id") % 640L) / lit(8.0)

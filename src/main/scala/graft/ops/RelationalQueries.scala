@@ -1977,7 +1977,7 @@ object RelationalQueries {
     * the reader count). The join itself re-evaluates the condition, so
     * pruning is pure I/O elimination, never a correctness dependency. */
   def latticeRuntimeFilter(spark: SparkSession, dir: String): DataFrame = {
-    val dim = spark.read.parquet(s"$dir/nation.parquet")
+    val dim = Tables.table(spark, dir, "nation")
       .filter(col("n_name").isin("NATION_2", "NATION_3", "NATION_17"))
       .select(col("n_nationkey").cast("int").as("rk"))
     spark.read.format("graft.sources.LatticeSource")

@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, unix_micros}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType, TimestampNTZType, TimestampType}
@@ -11,10 +13,59 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   * parallelize via splits automatically, and Catalyst pushes projections
   * and filters into the scan, which is what the reference achieved manually
   * with SQL-in-string JDBC subqueries (process_geodata.py:165-174).
+  *
+  * [[table]] is the one read path for every corpus table, and it reads
+  * with a memoized schema: `spark.read.parquet(path)` alone runs a Spark
+  * job per call to infer the schema from the footers, which for a small
+  * query was most of its construction time. The memo works like a
+  * catalog's schema entry:
+  *  - key: the qualified path, the (name, length, modification time) of
+  *    every file under it, and the session's schema-affecting confs (all
+  *    `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` values plus
+  *    `spark.sql.caseSensitive`). A table rewritten in place, or a flip of
+  *    `nanosAsLong` (see [[rawEvents]]), changes the key;
+  *  - miss: Spark's own inference, `spark.read.parquet(path).schema`, the
+  *    same job the unmemoized read ran. A path that does not exist is
+  *    never memoized, so it fails exactly as the plain read does;
+  *  - hit: `spark.read.schema(memoized).parquet(path)`, no job.
+  * It holds one schema per path (the latest key), never rows or query
+  * results: every read still lists and scans the files.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Leaf files (name, length, mtime) and schema-affecting confs. */
+  private type SchemaKey = (Vector[(String, Long, Long)], Vector[(String, String)])
+
+  /** Latest (key, schema) per qualified path. */
+  private val schemas = new ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(hPath)) return spark.read.parquet(path).schema
+    val qualified = fs.makeQualified(hPath).toString
+    val leaves = fs.listFiles(hPath, true)
+    val files = Vector.newBuilder[(String, Long, Long)]
+    while (leaves.hasNext) {
+      val f = leaves.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.toVector.sorted :+ ("spark.sql.caseSensitive" -> spark.conf.get("spark.sql.caseSensitive"))
+    val key: SchemaKey = (files.result().sorted, confs)
+    schemas.get(qualified) match {
+      case (k, schema) if k == key => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        schemas.put(qualified, (key, schema))
+        schema
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

@@ -343,7 +343,7 @@ object StreamQueries {
     * [[streamWindowCounts]], so the batch mirror is deterministic. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val stream = eventsStream(spark, dir)
-    val dim = spark.read.parquet(s"$dir/nation.parquet")
+    val dim = Tables.table(spark, dir, "nation")
       .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
     val joined = stream
       .withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

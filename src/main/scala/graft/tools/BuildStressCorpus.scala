@@ -3,8 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dev tool: build (or reuse) a replica-shifted stress corpus without
-  * running the full Stress gate — so [[graft.Profile]] can decompose a
-  * single query at 10×/30× scale. Usage:
+  * running the full Stress gate — so a single query can be timed at
+  * 10×/30× scale (`SPARK_GRAFT_SF_DIR=<dstDir> runMain graft.Bench <query>`).
+  * Usage:
   *
   *   sbt "runMain graft.tools.BuildStressCorpus <dstDir> <replicas>"
   */

@@ -1,14 +1,30 @@
 package graft.ops
 
 import graft.SparkFixture
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-class MaterializeSpec extends AnyFunSuite {
+class MaterializeSpec extends AnyFunSuite with BeforeAndAfterEach {
   private lazy val spark = SparkFixture.spark
 
-  private def freshBase(): String =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), "mat_spec").toString
+  /** Store roots made by the running test, deleted after it. */
+  private val bases = mutable.Buffer.empty[Path]
+
+  private def freshBase(): String = {
+    val base = Files.createTempDirectory("mat_spec")
+    bases += base
+    base.toString
+  }
+
+  override def afterEach(): Unit =
+    try super.afterEach()
+    finally {
+      bases.foreach(b => Files.walk(b).iterator().asScala.toSeq.reverse.foreach(Files.delete))
+      bases.clear()
+    }
 
   test("publish -> current round-trips; re-publish swaps atomically") {
     import spark.implicits._
