@@ -12,10 +12,14 @@ object Plans {
 
   private val entries = Seq(
     Entry("q_geo_flagship",
-      "The reference's flagship spatial aggregation. The exchange carries " +
-        "only the three integer grouping keys (no geometry bytes); the union " +
-        "aggregate runs as ObjectHashAggregate with a map-side partial stage; " +
-        "the 25-row region table broadcasts and joins AFTER the aggregate."),
+      "The reference's flagship spatial aggregation. No exchange carries " +
+        "geometry bytes, only the three integer grouping keys. On a narrow " +
+        "scan (fewer splits than cores, as here) one range exchange on those " +
+        "keys, before any geometry is built, serves both the union aggregate " +
+        "and the final sort; on a wide scan the union aggregate runs map-side " +
+        "partial, then a hash exchange on the keys, then a range exchange for " +
+        "the sort. The union runs as ObjectHashAggregate; the 25-row region " +
+        "table broadcasts and joins AFTER the aggregate."),
     Entry("q_s3_pushdown",
       "Predicate and projection both reach the parquet scan: PushedFilters " +
         "carries the quantity filter, ReadSchema is exactly the three output " +

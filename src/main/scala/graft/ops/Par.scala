@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parallelism floor for map-side-expensive pipelines.
   *
@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single row group, so a scan plans 1-3 tasks no matter how many cores the
   * session has — and any per-row kernel downstream (JTS geometry, minhash,
   * array math) runs nearly single-threaded. `fanOut` restores scan-side
-  * parallelism by round-robin repartitioning ONLY when the source collapsed
-  * below the session's core count.
+  * parallelism by repartitioning (round-robin, or by range on given keys)
+  * ONLY when the source collapsed below the session's core count.
   *
   * At production scale this is the identity: a 100 TB table scans as tens of
   * thousands of splits, the condition is false, and no shuffle is added.
@@ -25,7 +25,7 @@ object Par {
     * Under AQE the executed plan is the adaptive wrapper; reading its
     * `initialPlan` runs no job (the r17 lesson: `.rdd` on an
     * exchange-bearing plan MATERIALIZES every non-final query stage). */
-  private def initialPhysical(df: DataFrame): SparkPlan =
+  private[ops] def initialPhysical(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p => p
@@ -57,7 +57,13 @@ object Par {
     case _ => None
   }
 
-  def fanOut(df: DataFrame): DataFrame = {
+  /** With `keys`, the widen is a range exchange on them instead of
+    * round-robin: a pipeline that groups or sorts on those keys
+    * downstream (ascending, as `orderBy` does) then finds its clustering
+    * and ordering already satisfied, so EnsureRequirements plans no
+    * further exchange above it. The decision is the same job-free probe
+    * either way; a wide scan is still passed through untouched. */
+  def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     val want = df.sparkSession.sparkContext.defaultParallelism
     val plan = initialPhysical(df)
     // A shuffle exchange anywhere in the plan already re-widens the data
@@ -72,7 +78,8 @@ object Par {
     // instead of a silent skip.
     if (plan.collectFirst { case e: ShuffleExchangeLike => e }.isDefined) df
     else staticWidth(plan) match {
-      case Some(w) if w < want => df.repartition(want)
+      case Some(w) if w < want =>
+        if (keys.isEmpty) df.repartition(want) else df.repartitionByRange(want, keys: _*)
       case _ => df
     }
   }
@@ -109,7 +116,7 @@ object Par {
     * stacking one under it. Same stats-conditional guard: identity on
     * estimated-large (production-scale) inputs and when AQE coalescing
     * is off. Key cardinality must exceed the session width to help. */
-  def widenDenseBy(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
+  def widenDenseBy(df: DataFrame, keys: Column*): DataFrame =
     if (denselySmall(df))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism, keys: _*)
     else df

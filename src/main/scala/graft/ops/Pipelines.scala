@@ -23,8 +23,19 @@ object Pipelines {
     * and strictly cheaper at scale: the exchange carries integers + the
     * partial union buffers, never the region polygon; the region WKT is
     * parsed 25 times instead of once per fact row; and the post-agg join
-    * touches only #groups rows. Map-side partial union (the
-    * TypedImperativeAggregate) bounds the shuffle payload per group.
+    * touches only #groups rows.
+    *
+    * The exchanges depend on the scan's width (see [[Par.fanOut]]):
+    *  - narrow scan (fewer splits than cores, the local corpus): the
+    *    integer scan is range-partitioned on the three keys before any
+    *    geometry is built. That one exchange satisfies both the union
+    *    aggregate's clustering and the final `orderBy`, so the plan has
+    *    a single shuffle carrying integers only, and union, clip,
+    *    reprojection and area run once, over every core;
+    *  - wide scan (production): no widen; map-side partial union (the
+    *    TypedImperativeAggregate) bounds the payload of the hash
+    *    exchange on the keys, and the `orderBy` adds a range exchange
+    *    over the #groups aggregated rows.
     *
     * @param gapBuffer the reference's gap-sealing buffer distance
     *                  (1e-7 at process_geodata.py:102). 0.0 skips the
@@ -50,20 +61,23 @@ object Pipelines {
   private[ops] def flagshipMeasured(spark: SparkSession, dir: String,
                                     gapBuffer: Double, to5880: Boolean): DataFrame = {
     import GeoFixtures._
-    // fan the narrow key columns out across cores BEFORE the per-row JTS
-    // kernel (WKT build/parse/makevalid) and the partial union aggregate —
-    // the single-row-group local file otherwise plans the whole map side
-    // onto ≤3 tasks (no-op at production scale, see Par.fanOut)
+    // compute the group keys on the integer scan and fan out on them
+    // BEFORE the per-row JTS kernel (WKT build/parse/makevalid): the
+    // single-row-group local file otherwise plans the whole map side onto
+    // ≤3 tasks, and a range exchange on the keys is the one shuffle the
+    // aggregate and the final orderBy both need (no-op at production
+    // scale, see Par.fanOut)
+    val keys = Seq(col("region_id"), col("season_id"), col("land_type_id"))
     val li = Par.fanOut(Tables.table(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_shipdate")))
+      .select((col("l_partkey") % 25).cast("int").as("region_id"),
+        (month(col("l_shipdate")) % 4).cast("int").as("season_id"),
+        (col("l_partkey") % 7).cast("int").as("land_type_id"),
+        col("l_orderkey"), col("l_linenumber")), keys: _*)
     val rawParcel = st_makevalid(st_geomfromwkt(
-      parcelWkt(col("l_partkey") % 25, parcelIdx(col("l_orderkey"), col("l_linenumber")))))
-    val parcels = li.select(
-      (col("l_partkey") % 25).cast("int").as("region_id"),
-      (month(col("l_shipdate")) % 4).cast("int").as("season_id"),
-      (col("l_partkey") % 7).cast("int").as("land_type_id"),
+      parcelWkt(col("region_id"), parcelIdx(col("l_orderkey"), col("l_linenumber")))))
+    val parcels = li.select(keys :+
       (if (gapBuffer != 0.0) st_buffer(rawParcel, lit(gapBuffer)) else rawParcel)
-        .as("geo_land_use_mod"))
+        .as("geo_land_use_mod"): _*)
 
     // 25-row dimension: parse the region polygon once per region, here,
     // not once per fact row after the join (J1 broadcast, like the
@@ -79,7 +93,7 @@ object Pipelines {
       parcels("region_id") === col("id"), "left_semi")
 
     val unioned = kept
-      .groupBy(col("region_id"), col("season_id"), col("land_type_id"))
+      .groupBy(keys: _*)
       .agg(st_makevalid(st_union_agg(col("geo_land_use_mod"))).as("geo_union"))
 
     val clipped = unioned

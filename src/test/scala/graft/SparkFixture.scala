@@ -21,4 +21,15 @@ object SparkFixture {
     graft.functions.registerAll(s)
     s
   }
+
+  /** Runs `body` with one session conf set, restoring its prior value. */
+  def withConf(key: String, value: String)(body: => Unit): Unit = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

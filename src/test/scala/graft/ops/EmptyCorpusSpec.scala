@@ -1,7 +1,12 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkFixture}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Every registered query must RUN (possibly to zero rows) on an
   * all-empty corpus — the empty-daily-partition reality of a production
@@ -9,11 +14,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * chi-square cells, vector query-vector/centroid reads): a driver-side
   * `.head`/`.collect` on a relation that can be empty must degrade to an
   * empty result, never throw. */
-class EmptyCorpusSpec extends AnyFunSuite {
+class EmptyCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkFixture.spark
 
+  /** Fixture corpora live under the system temp directory, one root per
+    * suite run, removed once the suite is done. */
+  private lazy val root: Path = Files.createTempDirectory("empty_corpus_spec")
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally if (Files.exists(root))
+      Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+
   private lazy val dir: String = {
-    val d = "/root/repo/target/fixtures/empty_corpus"
+    val d = root.resolve("empty_corpus").toString
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
@@ -29,7 +43,7 @@ class EmptyCorpusSpec extends AnyFunSuite {
     // vector divides by zero, which ANSI mode turns into a crash. The
     // guards must early-return instead.
     import org.apache.spark.sql.functions._
-    val d = "/root/repo/target/fixtures/no_query_vec"
+    val d = root.resolve("no_query_vec").toString
     val kept = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
       .filter(col("vec_id") >= 100)
     assert(kept.count() > 0, "fixture must keep rows for the crash path to evaluate")
@@ -72,6 +86,18 @@ class EmptyCorpusSpec extends AnyFunSuite {
       assert(rows.length == 1, s"$q: expected the grand-total row, got ${rows.length}")
       val r = rows.head
       assert(r.isNullAt(0) && r.isNullAt(1) && r.getLong(2) == 0L, s"$q: ${r.toString}")
+    }
+  }
+
+  test("both flagship faces run through their range exchange to zero rows on an empty corpus") {
+    Seq("q_geo_flagship", "q_geo_flagship_5880").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, dir)
+      val planned = Par.initialPhysical(df)
+      assert(planned.exists {
+        case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      }, s"$q: no range exchange:\n$planned")
+      assert(df.collect().isEmpty, q)
     }
   }
 

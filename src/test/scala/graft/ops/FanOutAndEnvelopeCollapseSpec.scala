@@ -3,6 +3,9 @@ package graft.ops
 import graft.SparkFixture
 import graft.exprs.{StEnvelopeBoundsPoint, StEnvelopeBoundsRect}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    under AQE, `df.rdd` on a plan that already contains exchanges
   *    materializes every non-final query stage — a full wasted pass over
   *    the input (one orphaned 600k-row scan+shuffle job per spatial-join
-  *    query before the fix).
+  *    query before the fix). Given keys, the widen is a range exchange
+  *    on them at the session width, decided the same job-free way.
   * 2. The envelope-of-constructor collapse
   *    (st_envelope_bounds(st_makeenvelope|st_point) →
   *    st_envelope_bounds_rect / _point) must be value-identical to the
@@ -27,6 +31,20 @@ class FanOutAndEnvelopeCollapseSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
   import spark.implicits._
 
+  /** Jobs `body` launches, counted after the listener bus drains. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("fanOut widens a collapsed scan-like source") {
     val df = spark.range(0, 1000, 1, numPartitions = 2).toDF("id")
     val out = Par.fanOut(df)
@@ -34,20 +52,28 @@ class FanOutAndEnvelopeCollapseSpec extends AnyFunSuite {
   }
 
   test("fanOut on an exchange-bearing plan runs no job and adds no repartition") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = spark.range(0, 1000, 1, numPartitions = 2).toDF("id").repartition(4)
-      val out = Par.fanOut(df)
-      // let any asynchronously-posted job events drain
-      org.apache.spark.GraftSparkShims.drainListenerBus(spark.sparkContext)
-      assert(jobs.get() == 0,
+    val df = spark.range(0, 1000, 1, numPartitions = 2).toDF("id").repartition(4)
+    // unkeyed and keyed alike
+    Seq(Seq.empty, Seq(col("id"))).foreach { keys =>
+      val (out, jobs) = jobsDuring(Par.fanOut(df, keys: _*))
+      assert(jobs == 0,
         "fanOut materialized the input's exchanges as a job (the AQE .rdd trap)")
-      assert(out eq df, "already-widened plan must pass through untouched")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(out eq df, s"already-widened plan must pass through untouched (keys $keys)")
+    }
+  }
+
+  test("keyed fanOut range-partitions a collapsed source on its keys, deciding without a job") {
+    val df = spark.range(0, 1000, 1, numPartitions = 2).toDF("id")
+      .select((col("id") % 7).as("k1"), (col("id") % 3).as("k2"), col("id"))
+    val (out, jobs) = jobsDuring(Par.fanOut(df, col("k1"), col("k2")))
+    assert(jobs == 0, "the widen decision launched a job")
+    val plan = Par.initialPhysical(out)
+    plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning } match {
+      case Seq(r: RangePartitioning) =>
+        assert(r.numPartitions == spark.sparkContext.defaultParallelism, r)
+        assert(r.ordering.map(_.child.asInstanceOf[Attribute].name) == Seq("k1", "k2"), r)
+      case other => fail(s"expected one range exchange, got $other:\n$plan")
+    }
   }
 
   private def bitEq(a: Row, b: Row): Boolean =

@@ -1,6 +1,12 @@
 package graft.ops
 
 import graft.{SparkEntry, SparkFixture}
+import graft.SparkFixture.withConf
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guardrails for the 100 TB plan contract: predicates/projections reach
@@ -25,16 +31,62 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(planOf("q_j1_broadcast_agg").contains("BroadcastHashJoin"))
   }
 
+  /** The flagship's physical plan with every exchange inserted, before
+    * anything runs (the adaptive wrapper's initial plan). */
+  private def flagshipPlan(name: String): SparkPlan =
+    Par.initialPhysical(SparkEntry.queries(name)(spark, dir))
+
+  /** Every shuffle exchange partitions on integer keys, hash or range,
+    * and carries no geometry column. */
+  private def assertIntegerShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = {
+    val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.nonEmpty, p.toString.take(1500))
+    exchanges.foreach { e =>
+      val keys = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions
+        case r: RangePartitioning => r.ordering.map(_.child)
+        case other => fail(s"unexpected partitioning $other:\n$p")
+      }
+      assert(keys.nonEmpty && keys.forall(_.dataType == IntegerType),
+        s"non-integer shuffle key in ${e.outputPartitioning}:\n$p")
+      assert(!e.output.exists(_.name.startsWith("geo_")),
+        s"geometry column in a shuffle: ${e.output.mkString(", ")}\n$p")
+    }
+    assert(p.toString.contains("partial_st_union_agg"),
+      "union agg must have a map-side partial stage")
+    exchanges
+  }
+
   test("flagship aggregate shuffles no geometry: exchange partitions on integer keys only") {
-    val qe = SparkEntry.queries("q_geo_flagship")(spark, dir).queryExecution
-    qe.executedPlan // force planning; the tree below is the adaptive plan
-    val p = qe.executedPlan.toString
-    val exchangeLines = p.linesIterator.filter(_.contains("hashpartitioning")).toSeq
-    assert(exchangeLines.nonEmpty, p.take(1500))
-    assert(!exchangeLines.exists(_.contains("geo_")),
-      s"geometry column in a shuffle key:\n${exchangeLines.mkString("\n")}")
-    assert(p.contains("ObjectHashAggregate"), "union agg should run as ObjectHashAggregate with partial merge")
-    assert(p.contains("partial_st_union_agg"), "union agg must have a map-side partial stage")
+    val scanWidth = Tables.table(spark, dir, "lineitem").rdd.getNumPartitions
+    assert(scanWidth < spark.sparkContext.defaultParallelism,
+      s"the fixture scan ($scanWidth splits) must be narrower than the session")
+    Seq("q_geo_flagship", "q_geo_flagship_5880").foreach { q =>
+      val p = flagshipPlan(q)
+      // narrow scan: the one range exchange on the group keys is both
+      // the aggregate's clustering and the final orderBy's ordering
+      val exchanges = assertIntegerShuffles(p)
+      assert(exchanges.size == 1 && exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+        s"$q: expected exactly one range exchange:\n$p")
+      val sort = p.collectFirst { case s: SortExec => s }.getOrElse(fail(s"$q: no sort:\n$p"))
+      val agg = sort.collectFirst { case a: ObjectHashAggregateExec => a }
+        .getOrElse(fail(s"$q: union agg should run as ObjectHashAggregate:\n$p"))
+      val between = sort.collect { case e: ShuffleExchangeExec => e }
+        .filterNot(e => agg.find(_ eq e).isDefined)
+      assert(between.isEmpty, s"$q: exchange between the aggregate and the sort:\n$p")
+    }
+  }
+
+  test("flagship on a wide scan: map-side partial union, hash on the keys, range sort") {
+    // splitting the fixture file finer than the session width makes the
+    // scan wide, as a production table is, so fanOut leaves it alone
+    withConf("spark.sql.files.maxPartitionBytes", "8k") {
+      val scanWidth = Tables.table(spark, dir, "lineitem").rdd.getNumPartitions
+      assert(scanWidth >= spark.sparkContext.defaultParallelism, s"scan still narrow: $scanWidth")
+      val p = flagshipPlan("q_geo_flagship")
+      val kinds = assertIntegerShuffles(p).map(_.outputPartitioning.getClass.getSimpleName)
+      assert(kinds.sorted == Seq("HashPartitioning", "RangePartitioning"), s"$kinds:\n$p")
+    }
   }
 
   test("global top-k plans as TakeOrderedAndProject, not a full sort") {

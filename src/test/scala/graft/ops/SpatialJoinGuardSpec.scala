@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkFixture
+import graft.SparkFixture.withConf
 import graft.functions.st_point
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,16 +17,6 @@ class SpatialJoinGuardSpec extends AnyFunSuite {
     import spark.implicits._
     (0 until n).toDF("id")
       .withColumn("g", st_point(col("id").cast("double"), col("id").cast("double")))
-  }
-
-  private def withConf(key: String, value: String)(body: => Unit): Unit = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   test("broadcastIntersects rejects an over-cap build side, naming gridIntersects") {
