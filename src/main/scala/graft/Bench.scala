@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Drift-canary query set: trivial, plan-frozen since round 7, spanning
     * the main plan shapes (scan+agg, broadcast join, anti join, window
@@ -41,7 +40,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // interleaved timed passes per query; per-query time = min across
     // passes. Host contention (proven to inflate single-shot numbers up to
     // 6x in the round-5 forensics) is one-sided noise, so the min of
@@ -49,16 +47,7 @@ object Bench {
     // interleaving means a contention burst at time T cannot hit every
     // sample of one query.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warm the JVM on the tiny scale factor — every query once, so each
     // timed run measures steady-state throughput instead of first-touch
     // JIT/codegen/classloading (profiled at 0.5-2.7 s per query cold, which

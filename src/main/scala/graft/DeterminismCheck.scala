@@ -43,16 +43,8 @@ object DeterminismCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "/root/repo/DETERMINISM.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val widths = Seq(32, 13)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", widths.head.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val streamWidths = Seq(4, 7)
@@ -118,7 +110,7 @@ object DeterminismCheck {
       .mkString("[", ",", "]")
     val digJson = digests.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val json =
-      s"""{"corpus":${q(sfDir)},"widths":[${widths.mkString(",")}],"stream_widths":[${streamWidths.mkString(",")}],"cpus":$cpus,""" +
+      s"""{"corpus":${q(sfDir)},"widths":[${widths.mkString(",")}],"stream_widths":[${streamWidths.mkString(",")}],"cpus":${Session.cores},""" +
       s""""method":"per-query multiset-of-rows equality across shuffle widths (streams: graft.stream.statePartitions, fresh checkpoints); digests diffable across SPARK_GRAFT_CPUS runs",""" +
       s""""n":${all.size},"pass":${all.size - failures.size},"fail":${failures.size},""" +
       s""""failures":$failJson,"digests":$digJson}"""

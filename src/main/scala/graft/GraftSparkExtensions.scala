@@ -1,20 +1,22 @@
 package graft
 
-import graft.exprs._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** `spark.sql.extensions`-style injection of the graft function surface —
-  * the exact mechanism the reference uses to get Sedona's `ST_*` into SQL
+/** `spark.sql.extensions`-style injection of the graft SQL surface — the
+  * exact mechanism the reference uses to get Sedona's `ST_*` into SQL
   * (reference: airflow_dag/dag_geo_pipeline.py:20 sets
   * `spark.sql.extensions=org.apache.sedona.sql.SedonaSqlExtensions`).
   *
-  * Usage: `.config("spark.sql.extensions", "graft.GraftSparkExtensions")`
-  * at session build — every `st_*`/dedup function is then resolvable in
-  * SQL text on any session of that builder, with no per-session
-  * registerAll call. `functions.registerAll` remains as the imperative
-  * alternative for sessions built elsewhere.
+  * Usage: [[Session.local]], or
+  * `.config("spark.sql.extensions", "graft.GraftSparkExtensions")` at
+  * session build. Every entry of the one SQL function table,
+  * `functions.sqlFunctions`, is then resolvable in SQL text on any session
+  * of that context, with no per-session call. `functions.registerAll`
+  * installs the same table on a session built elsewhere; only this
+  * extension also installs the two optimizer rules (`CollapseStTransforms`,
+  * `CollapseEnvelopeBounds`) and the `graft_series` table function.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -60,132 +62,11 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
         org.apache.spark.sql.catalyst.plans.logical.Range(start, end, step, None)
       }))
 
-    // same arity validation as functions.registerAll: wrong SQL-text arity
-    // raises Spark's named analysis error, not IndexOutOfBoundsException
-    def inject(name: String, n: Int)(builder: Seq[Expression] => Expression): Unit =
+    graft.functions.sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, null, "", "", "", "", "", "", "scala_udf"),
-        es => {
-          if (es.length != n)
-            throw org.apache.spark.sql.graftbridge.Bridge.wrongNumArgs(name, n, es.length)
-          builder(es)
-        }))
-
-    inject("st_geomfromwkt", 1)(es => StGeomFromWKT(es.head))
-    inject("st_astext", 1)(es => StAsText(es.head))
-    inject("st_point", 2)(es => StPoint(es.head, es(1)))
-    inject("st_makeenvelope", 4)(es => StMakeEnvelope(es))
-    inject("st_makevalid", 1)(es => StMakeValid(es.head))
-    inject("st_buffer", 2)(es => StBuffer(es.head, es(1)))
-    inject("st_buffer_spheroid", 2)(es => StBufferSpheroid(es.head, es(1)))
-    inject("st_subdivide", 2)(es => StSubdivide(es.head, es(1)))
-    inject("st_maxinscribedcircle", 2)(es => StMaxInscribedCircle(es.head, es(1)))
-    inject("st_largestemptycircle", 3)(es => StLargestEmptyCircle(es.head, es(1), es(2)))
-    inject("st_linelocatepoint", 2)(es => StLineLocatePoint(es.head, es(1)))
-    inject("st_intersection", 2)(es => StIntersection(es.head, es(1)))
-    inject("st_union", 2)(es => StUnion(es.head, es(1)))
-    inject("st_difference", 2)(es => StDifference(es.head, es(1)))
-    inject("st_symdifference", 2)(es => StSymDifference(es.head, es(1)))
-    inject("st_azimuth", 2)(es => StAzimuth(es.head, es(1)))
-    inject("st_area", 1)(es => StArea(es.head))
-    inject("st_length", 1)(es => StLength(es.head))
-    inject("st_centroid", 1)(es => StCentroid(es.head))
-    inject("st_envelope", 1)(es => StEnvelope(es.head))
-    inject("st_x", 1)(es => StX(es.head))
-    inject("st_y", 1)(es => StY(es.head))
-    inject("st_isvalid", 1)(es => StIsValid(es.head))
-    inject("st_intersects", 2)(es => StIntersects(es.head, es(1)))
-    inject("st_contains", 2)(es => StContains(es.head, es(1)))
-    inject("st_within", 2)(es => StWithin(es.head, es(1)))
-    inject("st_touches", 2)(es => StTouches(es.head, es(1)))
-    inject("st_crosses", 2)(es => StCrosses(es.head, es(1)))
-    inject("st_overlaps", 2)(es => StOverlaps(es.head, es(1)))
-    inject("st_disjoint", 2)(es => StDisjoint(es.head, es(1)))
-    inject("st_equals", 2)(es => StEquals(es.head, es(1)))
-    inject("st_covers", 2)(es => StCovers(es.head, es(1)))
-    inject("st_coveredby", 2)(es => StCoveredBy(es.head, es(1)))
-    inject("st_distance", 2)(es => StDistance(es.head, es(1)))
-    inject("st_distance_sphere", 2)(es => StDistanceSphere(es.head, es(1)))
-    inject("st_distance_spheroid", 2)(es => StDistanceSpheroid(es.head, es(1)))
-    inject("st_area_sphere", 1)(es => StAreaSphere(es.head))
-    inject("st_length_sphere", 1)(es => StLengthSphere(es.head))
-    inject("st_geometrytype", 1)(es => StGeometryType(es.head))
-    inject("st_numgeometries", 1)(es => StNumGeometries(es.head))
-    inject("st_boundary", 1)(es => StBoundary(es.head))
-    inject("st_pointonsurface", 1)(es => StPointOnSurface(es.head))
-    inject("st_closestpoint", 2)(es => StClosestPoint(es.head, es(1)))
-    inject("st_perimeter", 1)(es => StPerimeter(es.head))
-    inject("st_flipcoordinates", 1)(es => StFlipCoordinates(es.head))
-    inject("st_reverse", 1)(es => StReverse(es.head))
-    inject("st_lineinterpolatepoint", 2)(es => StLineInterpolatePoint(es.head, es(1)))
-    inject("st_linesubstring", 3)(es => StLineSubstring(es.head, es(1), es(2)))
-    inject("st_collect", 1)(es => StCollect(es.head))
-    inject("st_dump", 1)(es => StDump(es.head))
-    inject("st_translate", 3)(es => StTranslate(es.head, es(1), es(2)))
-    inject("st_scale", 3)(es => StScale(es.head, es(1), es(2)))
-    inject("st_rotate", 2)(es => StRotate(es.head, es(1)))
-    inject("st_hausdorffdistance", 2)(es => StHausdorffDistance(es.head, es(1)))
-    inject("st_frechetdistance", 2)(es => StFrechetDistance(es.head, es(1)))
-    inject("st_shortestline", 2)(es => StShortestLine(es.head, es(1)))
-    inject("st_minimumboundingradius", 1)(es => StMinimumBoundingRadius(es.head))
-    inject("st_minimumrotatedrectangle", 1)(es => StMinimumRotatedRectangle(es.head))
-    inject("st_geometricmedian", 1)(es => StGeometricMedian(es.head))
-    inject("st_angle", 3)(es => StAngle(es.head, es(1), es(2)))
-    inject("st_minimumdiameter", 1)(es => StMinimumDiameter(es.head))
-    inject("st_linemerge", 1)(es => StLineMerge(es.head))
-    inject("st_polygonize", 1)(es => StPolygonize(es.head))
-    inject("st_delaunaytriangles", 1)(es => StDelaunayTriangles(es.head))
-    inject("st_voronoipolygons", 2)(es => StVoronoiPolygons(es.head, es(1)))
-    inject("st_concavehull", 2)(es => StConcaveHull(es.head, es(1)))
-    inject("st_snap", 3)(es => StSnap(es.head, es(1), es(2)))
-    inject("st_reduceprecision", 2)(es => StReducePrecision(es.head, es(1)))
-    inject("st_simplifypreservetopology", 2)(es => StSimplifyPreserveTopology(es.head, es(1)))
-    inject("st_normalize", 1)(es => StNormalize(es.head))
-    inject("st_multi", 1)(es => StMulti(es.head))
-    inject("st_geometryn", 2)(es => StGeometryN(es.head, es(1)))
-    inject("st_geomfromwkb", 1)(es => StGeomFromWKB(es.head))
-    inject("st_aswkb", 1)(es => StAsWKB(es.head))
-    inject("st_isempty", 1)(es => StIsEmpty(es.head))
-    inject("st_dimension", 1)(es => StDimension(es.head))
-    inject("st_isclosed", 1)(es => StIsClosed(es.head))
-    inject("st_isring", 1)(es => StIsRing(es.head))
-    inject("st_startpoint", 1)(es => StStartPoint(es.head))
-    inject("st_endpoint", 1)(es => StEndPoint(es.head))
-    inject("st_pointn", 2)(es => StPointN(es.head, es(1)))
-    inject("st_exteriorring", 1)(es => StExteriorRing(es.head))
-    inject("st_numinteriorrings", 1)(es => StNumInteriorRings(es.head))
-    inject("st_interiorringn", 2)(es => StInteriorRingN(es.head, es(1)))
-    inject("st_dwithin", 3)(es => StDWithin(es.head, es(1), es(2)))
-    inject("st_transform", 3)(es => StTransform(es.head, es(1), es(2)))
-    inject("st_geohash", 2)(es => StGeoHash(es.head, es(1)))
-    inject("st_hexcell", 3)(es => HexCell(es.head, es(1), es(2)))
-    inject("st_makeline", 1)(es => StMakeLine(es.head))
-    inject("st_simplify", 2)(es => StSimplify(es.head, es(1)))
-    inject("st_convexhull", 1)(es => StConvexHull(es.head))
-    inject("st_npoints", 1)(es => StNPoints(es.head))
-    inject("st_union_agg", 1)(es => StUnionAgg(es.head))
-    inject("topk_agg", 3)(es => TopKAgg(es.head, es(1), es(2)))
-    inject("mrl_agg", 2)(es => MrlAgg(es.head, es(1)))
-    inject("minhash_sig", 3)(es => MinHashSig(es.head, es(1), es(2)))
-    inject("minhash_bands", 4)(es => MinHashBands(es))
-    inject("hilbert_index", 3)(es => HilbertIndex(es.head, es(1), es(2)))
-    inject("hilbert_xy", 2)(es => HilbertXY(es.head, es(1)))
-    inject("simhash64", 2)(es => SimHash64(es.head, es(1)))
-    inject("hamming64", 2)(es => Hamming64(es.head, es(1)))
-    inject("ngram_jaccard", 3)(es => NGramJaccard(es.head, es(1), es(2)))
-    inject("sorted_inter_count", 2)(es => SortedInterCount(es.head, es(1)))
-    inject("explode_ngrams", 2)(es => ExplodeNgrams(es.head, es(1)))
-    inject("cms_agg", 1)(es => CmsAgg(es.head))
-    inject("cms_estimate", 2)(es => CmsEstimate(es.head, es(1)))
-    inject("kmv_agg", 2)(es => KmvAgg(es.head, es(1)))
-    inject("bitmap_agg", 2)(es => BitmapAgg(es.head, es(1)))
-    // 1-3 args like Spark's builtin: (key [, estimatedItems [, numBits]])
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo("graft", null, "bloom_filter_agg", null,
-        "", "", "", "", "", "", "scala_udf"),
-      es => graft.functions.bloomFilterAggBuilder(es)))
-    inject("might_contain", 2)(es => GraftMightContain(es.head, es(1)))
+        builder))
+    }
   }
 }

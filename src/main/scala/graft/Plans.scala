@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Regenerates PLANS.md: the executed physical plans of the headline
   * queries with the scale-relevant properties called out. Run with
@@ -255,16 +254,10 @@ object Plans {
 
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      // same injection path as Verify/Bench — the graft_series TVF is
-      // only reachable through the extensions mechanism
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // same injection path as Verify/Bench — the graft_series TVF is only
+    // reachable through the extensions mechanism; width 8 is the width
+    // PLANS.md is generated at
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val sb = new StringBuilder

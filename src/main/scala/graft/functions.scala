@@ -10,9 +10,13 @@ import org.apache.spark.sql.graftbridge.Bridge
   * reference pipeline invokes through Sedona SQL
   * (reference: spark_job/process_geodata.py:102-139).
   *
-  * `registerAll` additionally exposes every function to SQL text
-  * (`spark.sql("... st_area(g) ...")`), the analogue of Sedona's
-  * extension-based registration (reference: airflow_dag/dag_geo_pipeline.py:20).
+  * SQL text (`spark.sql("... st_area(g) ...")`) reaches the same
+  * expressions through one table, [[sqlFunctions]], with two installers:
+  * [[GraftSparkExtensions]] (`spark.sql.extensions`, the analogue of
+  * Sedona's extension-based registration, reference:
+  * airflow_dag/dag_geo_pipeline.py:20; every [[Session]] takes this path)
+  * and [[registerAll]] for a session built without that conf. Only the
+  * extension also installs the optimizer rules and `graft_series`.
   */
 object functions {
   private def col(e: Expression): Column = Bridge.column(e)
@@ -288,162 +292,168 @@ object functions {
   def might_contain(bloom: Column, keyHash: Column): Column =
     col(GraftMightContain(ex(bloom), ex(keyHash)))
 
-  /** SQL-text builder for `bloom_filter_agg`, matching the 1-3 arg arity
-    * of Spark's builtin of the same name: (key [, estimatedItems
-    * [, numBits]]). Shared by [[registerAll]] and GraftSparkExtensions. */
-  private[graft] def bloomFilterAggBuilder(es: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    es match {
-      case Seq(k)       => new BloomFilterAggregate(k)
-      case Seq(k, n)    => new BloomFilterAggregate(k, n)
-      case Seq(k, n, m) => new BloomFilterAggregate(k, n, m)
-      case _ => throw Bridge.wrongNumArgs("bloom_filter_agg", Seq(1, 2, 3), es.length)
-    }
+  /** The SQL function table: every graft function that SQL text can call,
+    * by name, with its builder. Each builder checks the argument count, so
+    * SQL like `st_dwithin(a, b)` fails with Spark's named wrong-num-args
+    * analysis error, not an IndexOutOfBoundsException. Two installers read
+    * it: [[GraftSparkExtensions]] injects it into every session built with
+    * `spark.sql.extensions`, and [[registerAll]] registers it on a session
+    * built without that conf. */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    def fn(name: String, arity: Int)(b: Seq[Expression] => Expression) =
+      name -> { (es: Seq[Expression]) =>
+        if (es.length != arity) throw Bridge.wrongNumArgs(name, arity, es.length)
+        b(es)
+      }
+    def f1(name: String, b: Expression => Expression) =
+      fn(name, 1)(es => b(es.head))
+    def f2(name: String, b: (Expression, Expression) => Expression) =
+      fn(name, 2)(es => b(es.head, es(1)))
+    def f3(name: String, b: (Expression, Expression, Expression) => Expression) =
+      fn(name, 3)(es => b(es.head, es(1), es(2)))
+    Seq(
+      f1("st_geomfromwkt", StGeomFromWKT),
+      f1("st_astext", StAsText),
+      f2("st_point", StPoint),
+      fn("st_makeenvelope", 4)(StMakeEnvelope(_)),
+      f1("st_makevalid", StMakeValid),
+      f2("st_buffer", StBuffer),
+      f2("st_buffer_spheroid", StBufferSpheroid),
+      f2("st_subdivide", StSubdivide),
+      f2("st_maxinscribedcircle", StMaxInscribedCircle),
+      f3("st_largestemptycircle", StLargestEmptyCircle(_, _, _)),
+      f2("st_linelocatepoint", StLineLocatePoint),
+      f2("st_intersection", StIntersection),
+      f2("st_union", StUnion),
+      f2("st_difference", StDifference),
+      f2("st_symdifference", StSymDifference),
+      f2("st_azimuth", StAzimuth),
+      f1("st_area", StArea),
+      f1("st_length", StLength),
+      f1("st_centroid", StCentroid),
+      f1("st_envelope", StEnvelope),
+      f1("st_envelope_bounds", StEnvelopeBounds),
+      f1("st_x", StX),
+      f1("st_y", StY),
+      f1("st_isvalid", StIsValid),
+      f2("st_intersects", StIntersects),
+      f2("st_contains", StContains),
+      f2("st_within", StWithin),
+      f2("st_touches", StTouches),
+      f2("st_crosses", StCrosses),
+      f2("st_overlaps", StOverlaps),
+      f2("st_disjoint", StDisjoint),
+      f2("st_equals", StEquals),
+      f2("st_covers", StCovers),
+      f2("st_coveredby", StCoveredBy),
+      f2("st_distance", StDistance),
+      f2("st_distance_sphere", StDistanceSphere),
+      f2("st_distance_spheroid", StDistanceSpheroid),
+      f2("st_distance_geodesic", StDistanceGeodesic),
+      f1("st_area_sphere", StAreaSphere),
+      f1("st_length_sphere", StLengthSphere),
+      f1("st_geometrytype", StGeometryType),
+      f1("st_numgeometries", StNumGeometries),
+      f1("st_boundary", StBoundary),
+      f1("st_pointonsurface", StPointOnSurface),
+      f2("st_closestpoint", StClosestPoint),
+      f1("st_perimeter", StPerimeter),
+      f1("st_flipcoordinates", StFlipCoordinates),
+      f1("st_reverse", StReverse),
+      f2("st_lineinterpolatepoint", StLineInterpolatePoint),
+      f3("st_linesubstring", StLineSubstring(_, _, _)),
+      f1("st_collect", StCollect),
+      f1("st_dump", StDump),
+      f3("st_translate", StTranslate(_, _, _)),
+      f3("st_scale", StScale(_, _, _)),
+      f2("st_rotate", StRotate),
+      f2("st_hausdorffdistance", StHausdorffDistance),
+      f2("st_frechetdistance", StFrechetDistance),
+      f2("st_shortestline", StShortestLine),
+      f1("st_minimumboundingradius", StMinimumBoundingRadius),
+      f1("st_minimumrotatedrectangle", StMinimumRotatedRectangle),
+      f1("st_geometricmedian", StGeometricMedian),
+      f3("st_angle", StAngle(_, _, _)),
+      f1("st_minimumdiameter", StMinimumDiameter),
+      f1("st_linemerge", StLineMerge),
+      f1("st_polygonize", StPolygonize),
+      f1("st_delaunaytriangles", StDelaunayTriangles),
+      f2("st_voronoipolygons", StVoronoiPolygons),
+      f2("st_concavehull", StConcaveHull),
+      f3("st_snap", StSnap(_, _, _)),
+      f2("st_reduceprecision", StReducePrecision),
+      f2("st_simplifypreservetopology", StSimplifyPreserveTopology),
+      f1("st_normalize", StNormalize),
+      f1("st_multi", StMulti),
+      f2("st_geometryn", StGeometryN),
+      f1("st_geomfromwkb", StGeomFromWKB),
+      f1("st_aswkb", StAsWKB),
+      f1("st_isempty", StIsEmpty),
+      f1("st_dimension", StDimension),
+      f1("st_isclosed", StIsClosed),
+      f1("st_isring", StIsRing),
+      f1("st_startpoint", StStartPoint),
+      f1("st_endpoint", StEndPoint),
+      f2("st_pointn", StPointN),
+      f1("st_exteriorring", StExteriorRing),
+      f1("st_numinteriorrings", StNumInteriorRings),
+      f2("st_interiorringn", StInteriorRingN),
+      f3("st_dwithin", StDWithin(_, _, _)),
+      f3("st_transform", StTransform(_, _, _)),
+      f2("st_geohash", StGeoHash),
+      f3("st_hexcell", HexCell(_, _, _)),
+      f1("st_makeline", StMakeLine),
+      f2("st_simplify", StSimplify),
+      f1("st_convexhull", StConvexHull),
+      f1("st_npoints", StNPoints),
+      f1("st_union_agg", StUnionAgg(_)),
+      f3("topk_agg", TopKAgg(_, _, _)),
+      f1("cms_agg", CmsAgg(_)),
+      f2("mg_agg", MgAgg(_, _)),
+      f2("mrl_agg", MrlAgg(_, _)),
+      f2("mrl_merge_agg", MrlMergeAgg(_, _)),
+      f2("kmv_agg", KmvAgg(_, _)),
+      f2("kmv_merge_agg", KmvMergeAgg(_, _)),
+      f2("bitmap_agg", BitmapAgg(_, _)),
+      f2("cms_estimate", CmsEstimate(_, _)),
+      f3("hilbert_index", HilbertIndex(_, _, _)),
+      f2("hilbert_xy", HilbertXY),
+      f3("minhash_sig", MinHashSig(_, _, _)),
+      fn("minhash_bands", 4)(MinHashBands(_)),
+      f2("simhash64", SimHash64),
+      f2("hamming64", Hamming64),
+      f3("ngram_jaccard", NGramJaccard(_, _, _)),
+      f2("sorted_inter_count", SortedInterCount),
+      f2("explode_ngrams", ExplodeNgrams),
+      // runtime-filter surface in SQL text: build the bloom in a scalar
+      // subquery, probe with might_contain —
+      //   WHERE might_contain((SELECT bloom_filter_agg(xxhash64(k)) FROM dim),
+      //                       xxhash64(fact_k))
+      // 1-3 args like Spark's builtin: (key [, estimatedItems [, numBits]])
+      ("bloom_filter_agg", (es: Seq[Expression]) => {
+        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+        es match {
+          case Seq(k)       => new BloomFilterAggregate(k)
+          case Seq(k, n)    => new BloomFilterAggregate(k, n)
+          case Seq(k, n, m) => new BloomFilterAggregate(k, n, m)
+          case _ => throw Bridge.wrongNumArgs("bloom_filter_agg", Seq(1, 2, 3), es.length)
+        }
+      }),
+      f2("might_contain", GraftMightContain(_, _)))
   }
 
-  /** Register every graft function for SQL-text use on this session.
-    * Idempotent; temp (session-scoped) registrations. Also installs the
-    * spatial-join planner strategy (the imperative equivalent of the
-    * GraftSparkExtensions injection, for sessions built without the
-    * static `spark.sql.extensions` conf). */
+  /** Register every [[sqlFunctions]] entry for SQL-text use on this
+    * session. Idempotent; temp (session-scoped) registrations. Also
+    * installs the spatial-join planner strategy. For sessions built
+    * without `spark.sql.extensions=graft.GraftSparkExtensions`; it does not
+    * install the extension's optimizer rules or `graft_series`. */
   def registerAll(spark: SparkSession): Unit = {
     if (!spark.experimental.extraStrategies.contains(graft.plans.SpatialJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.SpatialJoinStrategy
     val reg = Bridge.functionRegistry(spark)
-    // every registration validates arity so SQL text like `st_dwithin(a, b)`
-    // fails with Spark's named wrong-num-args analysis error, not an
-    // IndexOutOfBoundsException from es(2)
-    def rn(name: String, n: Int)(b: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, es => {
-        if (es.length != n) throw Bridge.wrongNumArgs(name, n, es.length)
-        b(es)
-      }, "scala_udf")
-    def r1(name: String, b: Expression => Expression): Unit =
-      rn(name, 1)(es => b(es.head))
-    def r2(name: String, b: (Expression, Expression) => Expression): Unit =
-      rn(name, 2)(es => b(es.head, es(1)))
-
-    r1("st_geomfromwkt", StGeomFromWKT)
-    r1("st_astext", StAsText)
-    r2("st_point", StPoint)
-    rn("st_makeenvelope", 4)(es => StMakeEnvelope(es))
-    r1("st_makevalid", StMakeValid)
-    r2("st_buffer", StBuffer)
-    r2("st_buffer_spheroid", StBufferSpheroid)
-    r2("st_subdivide", StSubdivide)
-    r2("st_maxinscribedcircle", StMaxInscribedCircle)
-    rn("st_largestemptycircle", 3)(es => StLargestEmptyCircle(es.head, es(1), es(2)))
-    r2("st_linelocatepoint", StLineLocatePoint)
-    r2("st_intersection", StIntersection)
-    r2("st_union", StUnion)
-    r2("st_difference", StDifference)
-    r2("st_symdifference", StSymDifference)
-    r2("st_azimuth", StAzimuth)
-    r1("st_area", StArea)
-    r1("st_length", StLength)
-    r1("st_centroid", StCentroid)
-    r1("st_envelope", StEnvelope)
-    r1("st_envelope_bounds", StEnvelopeBounds)
-    r1("st_x", StX)
-    r1("st_y", StY)
-    r1("st_isvalid", StIsValid)
-    r2("st_intersects", StIntersects)
-    r2("st_contains", StContains)
-    r2("st_within", StWithin)
-    r2("st_touches", StTouches)
-    r2("st_crosses", StCrosses)
-    r2("st_overlaps", StOverlaps)
-    r2("st_disjoint", StDisjoint)
-    r2("st_equals", StEquals)
-    r2("st_covers", StCovers)
-    r2("st_coveredby", StCoveredBy)
-    r2("st_distance", StDistance)
-    r2("st_distance_sphere", StDistanceSphere)
-    r2("st_distance_spheroid", StDistanceSpheroid)
-    r2("st_distance_geodesic", StDistanceGeodesic)
-    r1("st_area_sphere", StAreaSphere)
-    r1("st_length_sphere", StLengthSphere)
-    r1("st_geometrytype", StGeometryType)
-    r1("st_numgeometries", StNumGeometries)
-    r1("st_boundary", StBoundary)
-    r1("st_pointonsurface", StPointOnSurface)
-    r2("st_closestpoint", StClosestPoint)
-    r1("st_perimeter", StPerimeter)
-    r1("st_flipcoordinates", StFlipCoordinates)
-    r1("st_reverse", StReverse)
-    r2("st_lineinterpolatepoint", StLineInterpolatePoint)
-    rn("st_linesubstring", 3)(es => StLineSubstring(es.head, es(1), es(2)))
-    r1("st_collect", StCollect)
-    r1("st_dump", StDump)
-    rn("st_translate", 3)(es => StTranslate(es.head, es(1), es(2)))
-    rn("st_scale", 3)(es => StScale(es.head, es(1), es(2)))
-    r2("st_rotate", StRotate)
-    r2("st_hausdorffdistance", StHausdorffDistance)
-    r2("st_frechetdistance", StFrechetDistance)
-    r2("st_shortestline", StShortestLine)
-    r1("st_minimumboundingradius", StMinimumBoundingRadius)
-    r1("st_minimumrotatedrectangle", StMinimumRotatedRectangle)
-    r1("st_geometricmedian", StGeometricMedian)
-    rn("st_angle", 3)(es => StAngle(es.head, es(1), es(2)))
-    r1("st_minimumdiameter", StMinimumDiameter)
-    r1("st_linemerge", StLineMerge)
-    r1("st_polygonize", StPolygonize)
-    r1("st_delaunaytriangles", StDelaunayTriangles)
-    r2("st_voronoipolygons", StVoronoiPolygons)
-    r2("st_concavehull", StConcaveHull)
-    rn("st_snap", 3)(es => StSnap(es.head, es(1), es(2)))
-    r2("st_reduceprecision", StReducePrecision)
-    r2("st_simplifypreservetopology", StSimplifyPreserveTopology)
-    r1("st_normalize", StNormalize)
-    r1("st_multi", StMulti)
-    r2("st_geometryn", StGeometryN)
-    r1("st_geomfromwkb", StGeomFromWKB)
-    r1("st_aswkb", StAsWKB)
-    r1("st_isempty", StIsEmpty)
-    r1("st_dimension", StDimension)
-    r1("st_isclosed", StIsClosed)
-    r1("st_isring", StIsRing)
-    r1("st_startpoint", StStartPoint)
-    r1("st_endpoint", StEndPoint)
-    r2("st_pointn", StPointN)
-    r1("st_exteriorring", StExteriorRing)
-    r1("st_numinteriorrings", StNumInteriorRings)
-    r2("st_interiorringn", StInteriorRingN)
-    rn("st_dwithin", 3)(es => StDWithin(es.head, es(1), es(2)))
-    rn("st_transform", 3)(es => StTransform(es.head, es(1), es(2)))
-    r2("st_geohash", StGeoHash)
-    rn("st_hexcell", 3)(es => HexCell(es.head, es(1), es(2)))
-    r1("st_makeline", StMakeLine)
-    r2("st_simplify", StSimplify)
-    r1("st_convexhull", StConvexHull)
-    r1("st_npoints", StNPoints)
-    rn("st_union_agg", 1)(es => StUnionAgg(es.head))
-    rn("topk_agg", 3)(es => TopKAgg(es.head, es(1), es(2)))
-    rn("cms_agg", 1)(es => CmsAgg(es.head))
-    rn("mg_agg", 2)(es => MgAgg(es.head, es(1)))
-    rn("mrl_agg", 2)(es => MrlAgg(es.head, es(1)))
-    rn("mrl_merge_agg", 2)(es => MrlMergeAgg(es.head, es(1)))
-    rn("kmv_agg", 2)(es => KmvAgg(es.head, es(1)))
-    rn("kmv_merge_agg", 2)(es => KmvMergeAgg(es.head, es(1)))
-    rn("bitmap_agg", 2)(es => BitmapAgg(es.head, es(1)))
-    rn("cms_estimate", 2)(es => CmsEstimate(es.head, es(1)))
-    rn("hilbert_index", 3)(es => HilbertIndex(es.head, es(1), es(2)))
-    r2("hilbert_xy", HilbertXY)
-    rn("minhash_sig", 3)(es => MinHashSig(es.head, es(1), es(2)))
-    rn("minhash_bands", 4)(es => MinHashBands(es))
-    r2("simhash64", SimHash64)
-    r2("hamming64", Hamming64)
-    rn("ngram_jaccard", 3)(es => NGramJaccard(es.head, es(1), es(2)))
-    r2("sorted_inter_count", SortedInterCount)
-    r2("explode_ngrams", ExplodeNgrams)
-    // runtime-filter surface in SQL text: build the bloom in a scalar
-    // subquery, probe with might_contain —
-    //   WHERE might_contain((SELECT bloom_filter_agg(xxhash64(k)) FROM dim),
-    //                       xxhash64(fact_k))
-    // 1-3 args like Spark's builtin: (key [, estimatedItems [, numBits]])
-    reg.createOrReplaceTempFunction("bloom_filter_agg",
-      es => bloomFilterAggBuilder(es), "scala_udf")
-    rn("might_contain", 2)(es => GraftMightContain(es.head, es(1)))
+    sqlFunctions.foreach { case (name, b) =>
+      reg.createOrReplaceTempFunction(name, b, "scala_udf")
+    }
   }
 }

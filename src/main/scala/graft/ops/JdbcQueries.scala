@@ -36,11 +36,15 @@ object JdbcQueries {
   private[graft] def derbyUrl(dbPath: String): String =
     s"jdbc:derby:$dbPath;create=true"
 
-  // Derby writes its boot log to user.dir by default; keep it in target/.
-  // Idempotent, read before the first engine boot in this JVM.
-  private def quietDerby(): Unit =
-    if (System.getProperty("derby.stream.error.file") == null)
-      System.setProperty("derby.stream.error.file", "/root/repo/target/derby.log")
+  // Derby writes its boot log to user.dir by default; keep it beside the
+  // database being booted. Idempotent, read before the first engine boot
+  // in this JVM.
+  private def quietDerby(dbPath: String): Unit =
+    if (System.getProperty("derby.stream.error.file") == null) {
+      val dir = new java.io.File(dbPath).getAbsoluteFile.getParentFile
+      dir.mkdirs()
+      System.setProperty("derby.stream.error.file", new java.io.File(dir, "derby.log").getPath)
+    }
 
   /** Bulk-load `nation` into Derby, then read it back range-partitioned.
     * Returns the read-back rows keyed-ordered, so the oracle is simply the
@@ -49,7 +53,7 @@ object JdbcQueries {
     roundtrip(spark, dir, DbPath)
 
   private[graft] def roundtrip(spark: SparkSession, dir: String, dbPath: String): DataFrame = {
-    quietDerby()
+    quietDerby(dbPath)
     val url = derbyUrl(dbPath)
     val sink = Jdbc.SinkConfig(url, "nation_rt", "app", "app",
       driver = DerbyDriver, batchSize = 1000)

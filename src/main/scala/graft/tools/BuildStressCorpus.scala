@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Dev tool: build (or reuse) a replica-shifted stress corpus without
   * running the full Stress gate — so a single query can be timed at
@@ -14,16 +14,7 @@ object BuildStressCorpus {
     val dst = args(0)
     val replicas = args(1).toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     graft.Stress.ensureCorpus(spark, src, dst, replicas)
     println(s"[corpus] ready: $dst (replicas=$replicas src=$src)")
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Dev tool: print the scan-pruning-relevant fields (source file, pushed
   * filters, read schema) of every FileScan in selected queries' executed
@@ -9,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   * predicates. Usage: runMain graft.tools.Explain <query...> */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     // pull a named field out of a FileScan line without truncating it:
     // fields are comma-separated `Name: value` pairs, values never nest

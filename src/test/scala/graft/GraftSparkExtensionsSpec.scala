@@ -5,24 +5,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark.sql.extensions injection path (the reference's Sedona
   * mechanism): a session built with the extension class resolves every
-  * graft function from SQL text without registerAll. */
+  * entry of the SQL function table from SQL text without registerAll. */
 class GraftSparkExtensionsSpec extends AnyFunSuite {
 
-  test("session built with graft.GraftSparkExtensions resolves st_* in SQL") {
-    // spark.sql.extensions is a STATIC conf: it must be on the SparkContext
-    // (set by the first builder of the JVM — SparkFixture). A fresh session
-    // over that context re-applies the extension injections; no
-    // registerAll call happens on this session.
+  /** Runs `body` on a fresh session over the shared context that gets the
+    * graft surface only from the extension: no registerAll call happens on
+    * it. spark.sql.extensions is a STATIC conf: it must be on the
+    * SparkContext (set by the first builder of the JVM — SparkFixture); a
+    * fresh session over that context re-applies the extension injections. */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     graft.SparkFixture.spark // ensure the context (with the static conf) exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
+    val s = Session.local(2)
+    s.sparkContext.setLogLevel("ERROR")
+    try body(s)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
+  test("session built with graft.GraftSparkExtensions resolves st_* in SQL") {
+    withExtensionSession { s =>
       val r = s.sql(
         """SELECT st_area(st_buffer(st_geomfromwkt('POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))'), 0.0D)) AS a,
           |       hamming64(simhash64('abc', 3), simhash64('abc', 3)) AS h""".stripMargin).head()
@@ -115,9 +120,39 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       assert(intercept[Exception](
         s.sql("SELECT id FROM graft_series(0, 10, 0)")).getMessage
         .contains("step"))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
+  }
+
+  test("the SQL function table resolves whole on an extension-only session") {
+    withExtensionSession { s =>
+      val names = graft.functions.sqlFunctions.map(_._1)
+      assert(names.distinct == names, s"duplicate names: ${names.diff(names.distinct)}")
+      val missing = names.filterNot(s.catalog.functionExists)
+      assert(missing.isEmpty, s"not resolvable without registerAll: $missing")
+      // the same SQL on a session after registerAll returns the same row
+      val registered = s.newSession()
+      graft.functions.registerAll(registered)
+      Seq(
+        "SELECT st_envelope_bounds(st_geomfromwkt('LINESTRING (1 2, 4 -3)')) AS b",
+        "SELECT st_distance_geodesic(st_point(0.0D, 0.0D), st_point(1.0D, 1.0D)) AS d",
+        "SELECT mg_agg(CAST(x % 3 AS BIGINT), 4) AS m FROM range(30) t(x)",
+        """SELECT mrl_merge_agg(sk, 64) AS m FROM (
+          |  SELECT mrl_agg(CAST(x AS BIGINT), 64) AS sk FROM range(10) t(x)
+          |  GROUP BY x % 2)""".stripMargin,
+        """SELECT kmv_merge_agg(sk, 4) AS m FROM (
+          |  SELECT kmv_agg(CAST(x AS BIGINT), 4) AS sk FROM range(10) t(x)
+          |  GROUP BY x % 2)""".stripMargin
+      ).foreach { sql =>
+        val viaExtension = s.sql(sql).collect().toSeq
+        assert(viaExtension.size == 1 && !viaExtension.head.isNullAt(0), sql)
+        assert(viaExtension == registered.sql(sql).collect().toSeq, sql)
+      }
+    }
+  }
+
+  test("Session.local leaves adaptive execution on, by Spark's default") {
+    assert(org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED
+      .defaultValue.contains(true))
+    withExtensionSession(s => assert(s.conf.get("spark.sql.adaptive.enabled") == "true"))
   }
 }

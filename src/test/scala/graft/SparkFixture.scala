@@ -6,19 +6,11 @@ import org.apache.spark.sql.SparkSession
   * dominates test wall time; Spark sessions are process-global anyway). */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // static conf: must be on the FIRST session of the JVM so the
-      // SparkContext carries it (GraftSparkExtensionsSpec relies on it)
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the first session of the JVM: its SparkContext carries the static
+    // spark.sql.extensions conf (GraftSparkExtensionsSpec relies on it), so
+    // every SQL-text spec resolves graft functions through the extension
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
-    graft.functions.registerAll(s)
     s
   }
 
