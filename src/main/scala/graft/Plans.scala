@@ -18,7 +18,9 @@ object Plans {
         "and the final sort; on a wide scan the union aggregate runs map-side " +
         "partial, then a hash exchange on the keys, then a range exchange for " +
         "the sort. The union runs as ObjectHashAggregate; the 25-row region " +
-        "table broadcasts and joins AFTER the aggregate."),
+        "table broadcasts and joins once, AFTER the aggregate: region_id is " +
+        "a group key, so that inner join drops exactly the groups a join " +
+        "before the aggregate would have emptied."),
     Entry("q_s3_pushdown",
       "Predicate and projection both reach the parquet scan: PushedFilters " +
         "carries the quantity filter, ReadSchema is exactly the three output " +

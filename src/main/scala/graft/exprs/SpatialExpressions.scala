@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.io.ParseException
 
 /** Native Catalyst expressions for the spatial scalar algebra the reference
   * gets from Sedona (reference: spark_job/process_geodata.py:102-139 invokes
@@ -24,6 +25,15 @@ object SpatialExpressions {
   // mutating op copies first — see Geom.fromWkbCached's safety note)
   @inline private[exprs] def geom(v: Any): Geometry = Geom.fromWkbCached(v.asInstanceOf[Array[Byte]])
   @inline private[exprs] def wkb(g: Geometry): Array[Byte] = Geom.toWkb(g)
+
+  /** The error for input a geometry parser rejects: it names the function
+    * and quotes at most 64 characters of the input. */
+  private[exprs] def malformedGeometry(function: String, input: String,
+                                       cause: ParseException): IllegalArgumentException = {
+    val quoted = if (input.length > 64) input.take(64) + "..." else input
+    new IllegalArgumentException(
+      s"$function: malformed input '$quoted': ${cause.getMessage}", cause)
+  }
 }
 import SpatialExpressions._
 
@@ -33,8 +43,11 @@ case class StGeomFromWKT(child: Expression)
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_geomfromwkt"
-  override protected def nullSafeEval(v: Any): Any =
-    wkb(Geom.fromWkt(v.asInstanceOf[UTF8String].toString))
+  override protected def nullSafeEval(v: Any): Any = {
+    val text = v.asInstanceOf[UTF8String].toString
+    try wkb(Geom.fromWkt(text))
+    catch { case e: ParseException => throw malformedGeometry(prettyName, text, e) }
+  }
   override protected def withNewChildInternal(c: Expression): StGeomFromWKT = copy(child = c)
 }
 
@@ -316,14 +329,21 @@ case class StLineLocatePoint(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Defensive geometric intersection (repair-and-retry on TopologyException). */
+/** Defensive geometric intersection (repair-and-retry on TopologyException).
+  * A rectangle that covers a valid polygonal side's envelope clips nothing
+  * from it, so that side's input bytes come back without an overlay
+  * ([[Geom.rectangleCovers]]). */
 case class StIntersection(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
   override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_intersection"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    wkb(Geom.safeIntersection(geom(a), geom(b)))
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val (ga, gb) = (geom(a), geom(b))
+    if (Geom.rectangleCovers(gb, ga)) a
+    else if (Geom.rectangleCovers(ga, gb)) b
+    else wkb(Geom.safeIntersection(ga, gb))
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersection =
     copy(left = l, right = r)
 }
@@ -1318,7 +1338,14 @@ case class StGeomFromWKB(child: Expression)
   override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "st_geomfromwkb"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v))
+  override protected def nullSafeEval(v: Any): Any =
+    try wkb(geom(v))
+    catch {
+      case e: ParseException =>
+        // one byte past the 64 quoted hex digits, so a longer input shows as cut
+        val hex = v.asInstanceOf[Array[Byte]].iterator.take(33).map(b => f"${b & 0xff}%02x").mkString
+        throw malformedGeometry(prettyName, hex, e)
+    }
   override protected def withNewChildInternal(c: Expression): StGeomFromWKB = copy(child = c)
 }
 

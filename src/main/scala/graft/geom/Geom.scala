@@ -2,6 +2,7 @@ package graft.geom
 
 import org.locationtech.jts.geom._
 import org.locationtech.jts.geom.util.GeometryFixer
+import org.locationtech.jts.index.strtree.STRtree
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 
@@ -130,6 +131,16 @@ object Geom {
         }
     }
 
+  /** True when `rect` is a rectangle whose envelope covers the envelope of
+    * `g`, and `g` is polygonal, non-empty and valid. Then `g` lies inside
+    * `rect`, so `g ∩ rect` is `g` itself. */
+  def rectangleCovers(rect: Geometry, g: Geometry): Boolean = rect match {
+    case r: Polygon if r.isRectangle =>
+      g.isInstanceOf[Polygonal] && !g.isEmpty &&
+        r.getEnvelopeInternal.covers(g.getEnvelopeInternal) && g.isValid
+    case _ => false
+  }
+
   /** Defensive A \ B. */
   def safeDifference(a: Geometry, b: Geometry): Geometry =
     safeOverlay(a, b)(_.difference(_))
@@ -138,8 +149,99 @@ object Geom {
   def safeSymDifference(a: Geometry, b: Geometry): Geometry =
     safeOverlay(a, b)(_.symDifference(_))
 
-  /** Union of many geometries (UnaryUnionOp = cascaded union for polygons). */
+  /** Union of many geometries, exact for any input.
+    *
+    * Polygonal input takes an envelope fast path (filter with cheap
+    * bounds, overlay only the survivors):
+    *  - the inputs are exploded into polygons, and empties and exact
+    *    duplicates are dropped (union is idempotent);
+    *  - the parts are split into the connected components of their
+    *    envelope-intersection graph (an STRtree query per part).
+    *    `Envelope.intersects` is closed, so parts that touch, even at a
+    *    corner, share a component;
+    *  - a one-part component is already its own union and goes straight
+    *    into the output; every other component is unioned by
+    *    `UnaryUnionOp` (cascaded union).
+    * Parts of different components lie in disjoint closed envelopes, so
+    * the output polygons never touch: it is a valid `Polygon` or
+    * `MultiPolygon`, topologically equal to `UnaryUnionOp`'s. The parts
+    * are ordered by envelope first, so the output's polygons follow their
+    * envelopes, not the order the inputs came in. Input with a
+    * non-polygonal element or an invalid part, or nothing but empties,
+    * takes `UnaryUnionOp` whole, as before. */
   def unionAll(gs: java.util.Collection[Geometry]): Geometry =
     if (gs.isEmpty) factory.createGeometryCollection()
-    else UnaryUnionOp.union(gs)
+    else {
+      val parts = validDistinctPolygons(gs)
+      if (parts == null || parts.isEmpty) UnaryUnionOp.union(gs)
+      else unionComponents(parts)
+    }
+
+  /** The distinct non-empty polygons of `gs` ordered by envelope, or null
+    * when an element is not polygonal or a part is invalid. JTS
+    * `Geometry.equals` is `equalsExact` and `hashCode` hashes the
+    * envelope, so the set drops exact duplicates only. */
+  private def validDistinctPolygons(gs: java.util.Collection[Geometry]): Array[Polygon] = {
+    val seen = new java.util.HashSet[Geometry]()
+    val it = gs.iterator()
+    while (it.hasNext) it.next() match {
+      case p: Polygon => if (!p.isEmpty) seen.add(p)
+      case mp: MultiPolygon =>
+        var i = 0
+        while (i < mp.getNumGeometries) {
+          val p = mp.getGeometryN(i)
+          if (!p.isEmpty) seen.add(p)
+          i += 1
+        }
+      case _ => return null
+    }
+    val parts = seen.toArray(new Array[Polygon](0))
+    var i = 0
+    while (i < parts.length) { if (!parts(i).isValid) return null; i += 1 }
+    java.util.Arrays.sort(parts, (a: Polygon, b: Polygon) =>
+      a.getEnvelopeInternal.compareTo(b.getEnvelopeInternal))
+    parts
+  }
+
+  /** Union of valid, distinct polygons: one `UnaryUnionOp` per connected
+    * component of the envelope-intersection graph, none for a lone part. */
+  private def unionComponents(parts: Array[Polygon]): Geometry = {
+    val n = parts.length
+    val root = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (root(r) != r) { root(r) = root(root(r)); r = root(r) }
+      r
+    }
+    val tree = new STRtree()
+    var i = 0
+    while (i < n) { tree.insert(parts(i).getEnvelopeInternal, Int.box(i)); i += 1 }
+    i = 0
+    while (i < n) {
+      val a = i
+      tree.query(parts(a).getEnvelopeInternal, (item: AnyRef) => {
+        val ra = find(a)
+        val rb = find(item.asInstanceOf[Integer].intValue)
+        if (ra != rb) root(rb) = ra
+      })
+      i += 1
+    }
+    val members = new java.util.LinkedHashMap[Int, java.util.ArrayList[Geometry]]()
+    i = 0
+    while (i < n) {
+      members.computeIfAbsent(find(i), _ => new java.util.ArrayList[Geometry]()).add(parts(i))
+      i += 1
+    }
+    val out = new java.util.ArrayList[Polygon](n)
+    members.values.forEach { component =>
+      if (component.size == 1) out.add(component.get(0).asInstanceOf[Polygon])
+      else {
+        // polygonal: the union of valid polygons
+        val u = UnaryUnionOp.union(component)
+        var k = 0
+        while (k < u.getNumGeometries) { out.add(u.getGeometryN(k).asInstanceOf[Polygon]); k += 1 }
+      }
+    }
+    if (out.size == 1) out.get(0) else factory.createMultiPolygon(out.toArray(new Array[Polygon](0)))
+  }
 }

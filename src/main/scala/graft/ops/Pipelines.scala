@@ -57,7 +57,14 @@ object Pipelines {
       .orderBy(col("region_id"), col("season_id"), col("land_type_id"))
 
   /** The full pipeline with the UNROUNDED measured area, shared by the
-    * rounded public face and the bucketed 5880 oracle face. */
+    * rounded public face and the bucketed 5880 oracle face.
+    *
+    * The region table is joined once, after the aggregate (one broadcast
+    * hash join). That inner join on `region_id` keeps the reference's
+    * inner-join semantics: `region_id` is a group key, so a group whose
+    * key has no region row drops out there, exactly as its fact rows
+    * would have dropped out of a join before the aggregate, and a null
+    * key fails both joins alike. */
   private[ops] def flagshipMeasured(spark: SparkSession, dir: String,
                                     gapBuffer: Double, to5880: Boolean): DataFrame = {
     import GeoFixtures._
@@ -86,13 +93,7 @@ object Pipelines {
       .select(col("n_nationkey").cast("int").as("id"),
         st_makevalid(st_geomfromwkt(regionWkt(col("n_nationkey")))).as("geo_region_mod"))
 
-    // semi-join against the dimension BEFORE the aggregate preserves the
-    // reference's inner-join semantics (rows without a region drop out)
-    // without carrying any geometry into the shuffle
-    val kept = parcels.join(broadcast(regions.select(col("id"))),
-      parcels("region_id") === col("id"), "left_semi")
-
-    val unioned = kept
+    val unioned = parcels
       .groupBy(keys: _*)
       .agg(st_makevalid(st_union_agg(col("geo_land_use_mod"))).as("geo_union"))
 

@@ -937,4 +937,31 @@ class SpatialSqlSpec extends AnyFunSuite {
     assert(r.getDouble(2) == 0.0)
     assert(r.isNullAt(3))
   }
+  /** The IllegalArgumentException in `body`'s failure, wherever Spark
+    * wrapped it (optimizer-time folding or a failed task). */
+  private def malformedError(body: => Any): IllegalArgumentException = {
+    val e = intercept[Throwable](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+      .getOrElse(fail(s"no IllegalArgumentException in the chain of $e", e))
+  }
+
+  test("malformed WKT: a named error quoting the input, for truncated text and a bad keyword") {
+    val truncated = malformedError(one("SELECT st_geomfromwkt('POLYGON ((0 0, 1 0, 1 1') AS g"))
+    assert(truncated.getMessage.startsWith("st_geomfromwkt: malformed input 'POLYGON ((0 0, 1 0, 1 1'"),
+      truncated.getMessage)
+    val keyword = malformedError(one("SELECT st_geomfromwkt('POLYGN ((0 0, 1 0, 1 1, 0 0))') AS g"))
+    assert(keyword.getMessage.startsWith("st_geomfromwkt: malformed input 'POLYGN ((0 0, 1 0, 1 1, 0 0))'"),
+      keyword.getMessage)
+    // a long input is quoted by its first 64 characters only
+    val long = "LINESTRING (" + (1 to 40).map(i => s"$i $i").mkString(", ")
+    val e = malformedError(spark.sql(s"SELECT st_geomfromwkt('$long') AS g").head())
+    assert(e.getMessage.startsWith(s"st_geomfromwkt: malformed input '${long.take(64)}...'"), e.getMessage)
+  }
+
+  test("malformed WKB: a named error quoting the input in hex") {
+    // 5 bytes: big-endian byte order and the polygon type code, then EOF
+    val e = malformedError(one("SELECT st_geomfromwkb(X'0000000003') AS g"))
+    assert(e.getMessage.startsWith("st_geomfromwkb: malformed input '0000000003'"), e.getMessage)
+  }
 }

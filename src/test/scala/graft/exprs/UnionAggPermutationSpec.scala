@@ -2,7 +2,10 @@ package graft.exprs
 
 import graft.SparkFixture
 import graft.functions._
+import graft.geom.Geom
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Union-aggregate merge correctness (SURVEY.md §5.2): the grouped
@@ -49,5 +52,49 @@ class UnionAggPermutationSpec extends AnyFunSuite {
       assert(math.abs(a - reference) < 1e-6,
         s"seed=$seed parts=$parts: $a != $reference")
     }
+  }
+  test("100,000 rows in one group: exact area, buffer bounded by its union's parts plus one batch") {
+    // row i is square d(i) = i - (i + 1) / 10: every 10th row repeats the
+    // row before it exactly, so 90,000 distinct disjoint unit squares
+    val n = 100000
+    val distinct = 90000
+    def square(i: Long): (Double, Double) = {
+      val d = i - (i + 1) / 10
+      ((d % 300) * 3.0, (d / 300) * 3.0)
+    }
+    val d = col("id") - ((col("id") + 1) / 10).cast("long")
+    val (x, y) = ((d % 300) * 3.0, (d / 300).cast("long") * 3.0)
+    val area = spark.range(0, n, 1, 2)
+      .agg(st_area(st_union_agg(st_makeenvelope(x, y, x + 1.0, y + 1.0))))
+      .head().getDouble(0)
+    assert(area == distinct.toDouble, s"expected $distinct disjoint unit squares, got $area")
+
+    // the same rows through the aggregate's own calls, as two map tasks
+    // (rows dealt round-robin, so duplicates also straddle the tasks),
+    // the shuffle's serialize/deserialize and the reduce-side merge
+    val agg = StUnionAgg(BoundReference(0, BinaryType, nullable = true))
+    def assertBounded(buf: StUnionAgg.Buffer, seen: Int): Unit = {
+      assert(buf.parts.size <= buf.kept + math.max(StUnionAgg.CompactAt, buf.kept),
+        s"${buf.parts.size} entries, ${buf.kept} kept")
+      assert(buf.kept <= seen, s"${buf.kept} kept parts from $seen distinct squares")
+    }
+    val row = new GenericInternalRow(1)
+    val maps = Seq.fill(2)(agg.createAggregationBuffer())
+    val seen = Array.fill(2)(Set.empty[(Double, Double)])
+    for (i <- 0 until n) {
+      val p = i % 2
+      val (x, y) = square(i)
+      row.update(0, Geom.envelopeWkb(x, y, x + 1, y + 1))
+      agg.update(maps(p), row)
+      seen(p) += ((x, y))
+      assertBounded(maps(p), seen(p).size)
+    }
+    val reduce = agg.createAggregationBuffer()
+    maps.map(agg.serialize).foreach { bytes =>
+      agg.merge(reduce, agg.deserialize(bytes))
+      assertBounded(reduce, distinct)
+    }
+    val u = Geom.fromWkb(agg.eval(reduce).asInstanceOf[Array[Byte]])
+    assert(u.getNumGeometries == distinct && u.getArea == distinct.toDouble && u.isValid)
   }
 }

@@ -2,10 +2,12 @@ package graft.ops
 
 import graft.{SparkEntry, SparkFixture}
 import graft.SparkFixture.withConf
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -86,6 +88,23 @@ class PlanShapeSpec extends AnyFunSuite {
       val p = flagshipPlan("q_geo_flagship")
       val kinds = assertIntegerShuffles(p).map(_.outputPartitioning.getClass.getSimpleName)
       assert(kinds.sorted == Seq("HashPartitioning", "RangePartitioning"), s"$kinds:\n$p")
+    }
+  }
+
+  test("flagship joins the regions once: one broadcast hash join, no semi join, narrow and wide scans") {
+    def assertOneRegionJoin(shape: String): Unit =
+      Seq("q_geo_flagship", "q_geo_flagship_5880").foreach { q =>
+        val p = flagshipPlan(q)
+        val joins = p.collect { case j: BroadcastHashJoinExec => j }
+        assert(joins.size == 1, s"$q ($shape scan): ${joins.size} broadcast hash joins:\n$p")
+        assert(joins.head.joinType == Inner, s"$q ($shape scan): ${joins.head.joinType}:\n$p")
+        assert(p.collect { case j: BaseJoinExec if j.joinType == LeftSemi => j }.isEmpty,
+          s"$q ($shape scan): semi join in the plan:\n$p")
+      }
+    assertOneRegionJoin("narrow")
+    withConf("spark.sql.files.maxPartitionBytes", "8k") {
+      assert(Tables.table(spark, dir, "lineitem").rdd.getNumPartitions >= spark.sparkContext.defaultParallelism)
+      assertOneRegionJoin("wide")
     }
   }
 

@@ -1,9 +1,38 @@
 package graft.sources
 
 import graft.SparkFixture
+import java.nio.file.{Files, Path}
+import java.sql.{DriverManager, SQLException}
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-class JdbcSpec extends AnyFunSuite {
+class JdbcSpec extends AnyFunSuite with BeforeAndAfterEach {
+
+  /** Temp directories holding the running test's Derby databases. */
+  private val dbDirs = mutable.Buffer.empty[Path]
+
+  /** A Derby database path in a fresh temp directory, which is deleted
+    * after the test. */
+  private def freshDbPath(): String = {
+    val dir = Files.createTempDirectory("graft-derby-spec")
+    dbDirs += dir
+    dir.resolve("db").toString
+  }
+
+  override def afterEach(): Unit =
+    try super.afterEach()
+    finally {
+      dbDirs.foreach { d =>
+        // shut the database down before deleting its files; a clean
+        // shutdown reports itself as an SQLException (SQLState 08006)
+        try DriverManager.getConnection(s"jdbc:derby:${d.resolve("db")};shutdown=true").close()
+        catch { case _: SQLException => }
+        Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      }
+      dbDirs.clear()
+    }
 
   private val src = Jdbc.SourceConfig(
     url = "jdbc:postgresql://db:5432/postgres_db",
@@ -99,8 +128,7 @@ class JdbcSpec extends AnyFunSuite {
   test("save() then bounds-probed partitioned load() roundtrips through Derby") {
     val spark = SparkFixture.spark
     val dir = "/root/testdata/sf0.001"
-    val dbPath = java.nio.file.Files
-      .createTempDirectory("graft-derby-spec").resolve("db").toString
+    val dbPath = freshDbPath()
     val got = graft.ops.JdbcQueries.roundtrip(spark, dir, dbPath)
     // the partitioned read plans one input slice per range (asserted on a
     // bare load — the roundtrip's final sort coalesces tiny partitions)
@@ -119,8 +147,7 @@ class JdbcSpec extends AnyFunSuite {
   test("Derby roundtrip of an empty table returns empty with the right schema") {
     val spark = SparkFixture.spark
     import spark.implicits._
-    val dbPath = java.nio.file.Files
-      .createTempDirectory("graft-derby-spec").resolve("db").toString
+    val dbPath = freshDbPath()
     val url = Jdbc.SourceConfig(
       graft.ops.JdbcQueries.derbyUrl(dbPath), "empty_t", "app", "app",
       driver = graft.ops.JdbcQueries.DerbyDriver)
