@@ -107,9 +107,10 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString } + "\""
     val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
-    // the COMPLETE artifact lives at a stable repo path the round process
-    // commits, so a truncated stdout capture can always be reconstituted
-    val fullFile = "/root/repo/BENCH_FULL_LATEST.json"
+    // the COMPLETE artifact lives at a stable path relative to the working
+    // directory (sbt's forked `run` starts in the project base), so a
+    // truncated stdout capture can always be reconstituted
+    val fullFile = "BENCH_FULL_LATEST.json"
     // field order is deliberate: the bulky per-query map FIRST, then the
     // pointer to the complete on-disk artifact, then the load-bearing
     // summary (total/n/errors) LAST — the driver's capture truncates from
@@ -144,7 +145,7 @@ object Bench {
     // belt and braces: the full line also lands on disk twice — the env
     // override for dev loops, the stable path for the round artifact
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/target/bench_local.json")
+      "target/bench_local.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(fullFile), json + "\n")
     println(json)

@@ -42,7 +42,7 @@ import java.nio.file.{Files, Paths}
 object DeterminismCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val out = if (args.length > 1) args(1) else "/root/repo/DETERMINISM.json"
+    val out = if (args.length > 1) args(1) else "DETERMINISM.json"
     val widths = Seq(32, 13)
     val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")

@@ -285,12 +285,12 @@ object Plans {
     // hand-written analysis (bench forensics etc.) lives in
     // PLANS_NOTES.md — prose stays in a prose file, and regeneration
     // appends it instead of reverting edits made there
-    val notes = Paths.get("/root/repo/PLANS_NOTES.md")
+    val notes = Paths.get("PLANS_NOTES.md")
     if (Files.exists(notes)) {
       sb.append("\n")
       sb.append(Files.readString(notes))
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"PLANS.md written (${entries.size} plans)")
     spark.stop()
   }

@@ -4,7 +4,7 @@ import graft.ops.{AsofJoin, AuditQueries, GraphQueries, JdbcQueries, Multimodal,
 import graft.streaming.StreamQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` is the engine's declared operator inventory: one entry per
   * implemented operator from SURVEY.md §2 (plus the LLM-data-pipeline

@@ -132,7 +132,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dst = sys.env.getOrElse("SPARK_GRAFT_STRESS_DIR",
-      "/root/repo/target/stress_corpus")
+      "target/stress_corpus")
     val spark = Session.local()
     ensureCorpus(spark, src, dst, replicas = 10)
 
@@ -256,9 +256,9 @@ object Stress {
     val json = s"""{"queries":$qs,"corpus":"10x $src","n":${results.size},""" +
       s""""violations":${violations.size}$growthJson,"metric":"total","unit":"sec","value":${ms(total)}}"""
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/target/stress_local.json"), json + "\n")
+      java.nio.file.Paths.get("target/stress_local.json"), json + "\n")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/STRESS_LATEST.json"), json + "\n")
+      java.nio.file.Paths.get("STRESS_LATEST.json"), json + "\n")
     println(json)
     violations.foreach(v => System.err.println(s"[stress] VIOLATION: $v"))
     spark.stop()

@@ -3,6 +3,7 @@ package graft.exprs
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
@@ -42,40 +43,69 @@ case class KmvAgg(
     right: Expression,  // k: INT literal (foldable)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-  with BinaryLike[Expression] {
-
-  private type Buf = java.util.TreeSet[java.lang.Long]
+  extends KmvSketch {
 
   override def prettyName: String = "kmv_agg"
 
-  @transient private lazy val kVal: Int = right.eval().asInstanceOf[Int]
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != LongType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (BIGINT hash, INT k), got " +
           s"(${left.dataType.sql}, ${right.dataType.sql})")
-    else if (right.dataType != IntegerType || !right.foldable)
+    else checkK
+
+  override def update(buf: Buf, input: InternalRow): Buf = {
+    val h = left.eval(input)
+    if (h != null) {
+      val v = h.asInstanceOf[Long]
+      if (v < 0L)
+        throw new IllegalArgumentException(
+          s"kmv_agg: negative hash $v — the (k-1)*M DIV h_(k) estimator " +
+            "assumes hashes uniform in [0, 2^31); pmod the hash into a " +
+            "non-negative range first (a silently accepted negative h_(k) " +
+            "would yield a nonsensical estimate)")
+      add(buf, v)
+    }
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): KmvAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): KmvAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): KmvAgg =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The ≤ k ordered-set buffer [[KmvAgg]] and [[KmvMergeAgg]] share: the
+  * k smallest distinct non-negative hashes, returned ascending as
+  * `array<bigint>`, serialized as a count followed by the longs. Each
+  * aggregate adds only its own input handling (raw hashes vs stored
+  * sketches) and its type check on the first argument. */
+private[exprs] trait KmvSketch
+  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
+  with BinaryLike[Expression] {
+
+  protected type Buf = java.util.TreeSet[java.lang.Long]
+
+  @transient protected lazy val kVal: Int = right.eval().asInstanceOf[Int]
+
+  /** The k argument's checks, after the first argument's. */
+  protected def checkK: TypeCheckResult =
+    if (right.dataType != IntegerType || !right.foldable)
       TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
     else if (right.eval() == null || right.eval().asInstanceOf[Int] <= 0)
       TypeCheckResult.TypeCheckFailure(s"$prettyName k must be positive")
     else TypeCheckResult.TypeCheckSuccess
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): Buf = new Buf()
 
-  private def add(buf: Buf, h: Long): Unit = {
-    if (h < 0L)
-      throw new IllegalArgumentException(
-        s"kmv_agg: negative hash $h — the (k-1)*M DIV h_(k) estimator " +
-          "assumes hashes uniform in [0, 2^31); pmod the hash into a " +
-          "non-negative range first (a silently accepted negative h_(k) " +
-          "would yield a nonsensical estimate)")
+  /** Keep `h` if it is among the k smallest distinct values seen. */
+  protected def add(buf: Buf, h: Long): Unit = {
     if (buf.size < kVal) { buf.add(h); () }
     else if (h < buf.last()) {
       // full and h beats the current k-th smallest: swap it in (TreeSet
@@ -83,12 +113,6 @@ case class KmvAgg(
       if (buf.add(h)) buf.pollLast()
       ()
     }
-  }
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val h = left.eval(input)
-    if (h != null) add(buf, h.asInstanceOf[Long])
-    buf
   }
 
   override def merge(b1: Buf, b2: Buf): Buf = {
@@ -121,12 +145,4 @@ case class KmvAgg(
     while (i < n) { buf.add(bb.getLong); i += 1 }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): KmvAgg =
-    copy(left = newLeft, right = newRight)
 }

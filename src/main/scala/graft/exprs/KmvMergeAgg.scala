@@ -1,12 +1,9 @@
 package graft.exprs
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** KMV sketch RE-aggregation: `kmv_merge_agg(sketch, k)` folds STORED
@@ -33,46 +30,18 @@ case class KmvMergeAgg(
     right: Expression,  // k: INT literal (foldable)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-  with BinaryLike[Expression] {
-
-  private type Buf = java.util.TreeSet[java.lang.Long]
+  extends KmvSketch {
 
   override def prettyName: String = "kmv_merge_agg"
 
-  @transient private lazy val kVal: Int = right.eval().asInstanceOf[Int]
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  override def checkInputDataTypes(): TypeCheckResult =
     left.dataType match {
-      case ArrayType(LongType, _) =>
-        if (right.dataType != IntegerType || !right.foldable)
-          TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-        else if (right.eval() == null || right.eval().asInstanceOf[Int] <= 0)
-          TypeCheckResult.TypeCheckFailure(s"$prettyName k must be positive")
-        else TypeCheckResult.TypeCheckSuccess
+      case ArrayType(LongType, _) => checkK
       case other =>
         TypeCheckResult.TypeCheckFailure(
           s"$prettyName needs (ARRAY<BIGINT> sketch, INT k), got " +
             s"(${other.sql}, ${right.dataType.sql})")
     }
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Buf = new Buf()
-
-  private def add(buf: Buf, h: Long): Unit = {
-    if (h < 0L)
-      throw new IllegalArgumentException(
-        s"kmv_merge_agg: negative hash $h in input sketch — not a KmvAgg output")
-    if (buf.size < kVal) { buf.add(h); () }
-    else if (h < buf.last()) {
-      if (buf.add(h)) buf.pollLast()
-      ()
-    }
-  }
 
   override def update(buf: Buf, input: InternalRow): Buf = {
     val v = left.eval(input)
@@ -83,39 +52,15 @@ case class KmvMergeAgg(
           s"kmv_merge_agg: input sketch has ${arr.numElements()} values > k=$kVal " +
             "— sketches must be built with the same k they are merged at")
       var i = 0
-      while (i < arr.numElements()) { add(buf, arr.getLong(i)); i += 1 }
+      while (i < arr.numElements()) {
+        val h = arr.getLong(i)
+        if (h < 0L)
+          throw new IllegalArgumentException(
+            s"kmv_merge_agg: negative hash $h in input sketch — not a KmvAgg output")
+        add(buf, h)
+        i += 1
+      }
     }
-    buf
-  }
-
-  override def merge(b1: Buf, b2: Buf): Buf = {
-    val it = b2.iterator()
-    while (it.hasNext) add(b1, it.next())
-    b1
-  }
-
-  override def eval(buf: Buf): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next().longValue(); i += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.size)
-    bb.putInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next().longValue())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = new Buf()
-    var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
     buf
   }
 

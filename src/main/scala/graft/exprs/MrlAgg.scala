@@ -46,20 +46,46 @@ case class MrlAgg(
     right: Expression,  // k: INT literal (foldable), buffer half-width
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MrlAgg.Buf]
-  with BinaryLike[Expression] {
-
-  import MrlAgg.Buf
+  extends MrlSketch {
 
   override def prettyName: String = "mrl_agg"
-
-  @transient private lazy val kVal: Int = right.eval().asInstanceOf[Int]
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (left.dataType != LongType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (BIGINT value, INT k), got ${left.dataType.sql}")
-    else if (right.dataType != IntegerType || !right.foldable)
+    else checkK
+
+  override def update(buf: Buf, input: InternalRow): Buf = {
+    val v = left.eval(input)
+    if (v != null) buf.add(v.asInstanceOf[Long], kVal)
+    buf
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): MrlAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): MrlAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): MrlAgg =
+    copy(left = l, right = r)
+}
+
+/** What [[MrlAgg]] and [[MrlMergeAgg]] share: the level buffer
+  * ([[MrlAgg.Buf]]), its merge, the value-sorted `array<struct<v, w>>`
+  * result, and the level codec (level count, then each level's length
+  * and values). Each aggregate adds only its own input handling (raw
+  * values vs stored sketches) and its type check on the first argument. */
+private[exprs] trait MrlSketch
+  extends TypedImperativeAggregate[MrlAgg.Buf]
+  with BinaryLike[Expression] {
+
+  protected type Buf = MrlAgg.Buf
+
+  @transient protected lazy val kVal: Int = right.eval().asInstanceOf[Int]
+
+  /** The k argument's checks, after the first argument's. */
+  protected def checkK: TypeCheckResult =
+    if (right.dataType != IntegerType || !right.foldable)
       TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
     else if (right.eval() == null || right.eval().asInstanceOf[Int] < 2)
       TypeCheckResult.TypeCheckFailure(s"$prettyName k must be >= 2")
@@ -73,12 +99,6 @@ case class MrlAgg(
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): Buf = new Buf()
-
-  override def update(buf: Buf, input: InternalRow): Buf = {
-    val v = left.eval(input)
-    if (v != null) buf.add(v.asInstanceOf[Long], kVal)
-    buf
-  }
 
   override def merge(b1: Buf, b2: Buf): Buf = { b1.mergeIn(b2, kVal); b1 }
 
@@ -116,13 +136,6 @@ case class MrlAgg(
     }
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MrlAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MrlAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): MrlAgg =
-    copy(left = l, right = r)
 }
 
 object MrlAgg {
@@ -132,7 +145,8 @@ object MrlAgg {
     val levels = new scala.collection.mutable.ArrayBuffer[
       scala.collection.mutable.ArrayBuffer[Long]]()
 
-    private def level(i: Int): scala.collection.mutable.ArrayBuffer[Long] = {
+    /** Level `i`, creating the empty levels up to it. */
+    def level(i: Int): scala.collection.mutable.ArrayBuffer[Long] = {
       while (levels.length <= i)
         levels += new scala.collection.mutable.ArrayBuffer[Long]()
       levels(i)

@@ -1,13 +1,9 @@
 package graft.exprs
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** MRL quantile-summary RE-aggregation: `mrl_merge_agg(sketch, k)` folds
@@ -32,14 +28,9 @@ case class MrlMergeAgg(
     right: Expression,  // k: INT literal (foldable)
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MrlAgg.Buf]
-  with BinaryLike[Expression] {
-
-  import MrlAgg.Buf
+  extends MrlSketch {
 
   override def prettyName: String = "mrl_merge_agg"
-
-  @transient private lazy val kVal: Int = right.eval().asInstanceOf[Int]
 
   private def isSketchType(dt: DataType): Boolean = dt match {
     case ArrayType(StructType(fields), _) =>
@@ -53,20 +44,7 @@ case class MrlMergeAgg(
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (ARRAY<STRUCT<BIGINT,BIGINT>> sketch, INT k), " +
           s"got ${left.dataType.sql}")
-    else if (right.dataType != IntegerType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-    else if (right.eval() == null || right.eval().asInstanceOf[Int] < 2)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be >= 2")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("v", LongType, nullable = false),
-      StructField("w", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): Buf = new Buf()
+    else checkK
 
   override def update(buf: Buf, input: InternalRow): Buf = {
     val raw = left.eval(input)
@@ -81,50 +59,10 @@ case class MrlMergeAgg(
         if (w <= 0L || (w & (w - 1L)) != 0L)
           throw new IllegalArgumentException(
             s"mrl_merge_agg: weight $w is not a power of two — not an MrlAgg output")
-        val lvl = java.lang.Long.numberOfTrailingZeros(w)
-        while (tmp.levels.length <= lvl)
-          tmp.levels += new scala.collection.mutable.ArrayBuffer[Long]()
-        tmp.levels(lvl) += v
+        tmp.level(java.lang.Long.numberOfTrailingZeros(w)) += v
         i += 1
       }
       buf.mergeIn(tmp, kVal)
-    }
-    buf
-  }
-
-  override def merge(b1: Buf, b2: Buf): Buf = { b1.mergeIn(b2, kVal); b1 }
-
-  override def eval(buf: Buf): Any = {
-    val pairs = buf.weightedSorted
-    new GenericArrayData(pairs.map { case (v, w) =>
-      new GenericInternalRow(Array[Any](v, w)): Any
-    })
-  }
-
-  override def serialize(buf: Buf): Array[Byte] = {
-    val sizes = buf.levels.map(_.length)
-    val total = sizes.sum
-    val bb = ByteBuffer.allocate(4 + 4 * buf.levels.length + 8 * total)
-    bb.putInt(buf.levels.length)
-    buf.levels.foreach { lvl =>
-      bb.putInt(lvl.length)
-      lvl.foreach(bb.putLong)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Buf = {
-    val bb = ByteBuffer.wrap(bytes)
-    val nLevels = bb.getInt
-    val buf = new Buf()
-    var i = 0
-    while (i < nLevels) {
-      val n = bb.getInt
-      val lvl = new scala.collection.mutable.ArrayBuffer[Long](n)
-      var j = 0
-      while (j < n) { lvl += bb.getLong; j += 1 }
-      buf.levels += lvl
-      i += 1
     }
     buf
   }

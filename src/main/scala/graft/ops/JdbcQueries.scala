@@ -29,8 +29,8 @@ object JdbcQueries {
   /** `org.apache.derby.jdbc.EmbeddedDriver` (derbytools 10.16). */
   private[graft] val DerbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
-  /** DB files live under target/ — the repo's only writable area — beside
-    * the other sink outputs. */
+  /** DB files live in the per-JVM sink store, beside the other sink
+    * outputs. */
   private[graft] val DbPath = s"${SinkQueries.OutBase}/derby/graftdb"
 
   private[graft] def derbyUrl(dbPath: String): String =

@@ -172,7 +172,6 @@ object Pipelines {
     * zone-pair stage is |sources|×|targets| through the R-tree join
     * (never all-pairs at scale — the tree prunes), output |targets|. */
   def arealInterp(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.registerAll(spark)
     val vals = Par.fanOut(Tables.table(spark, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity")))
       .select((col("l_partkey") % 25L).cast("int").as("region_id"),
@@ -244,7 +243,6 @@ object Pipelines {
     * oracle already aggregates the closed form over raw lineitem rows,
     * unchanged. */
   def spatialJoinRollup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.registerAll(spark) // installs SpatialJoinStrategy (idempotent)
     parcelSlotRelation(spark, dir).select(col("parcel_geom"), col("m"))
       .join(broadcast(regionRelation(spark, dir)),
         st_intersects(col("parcel_geom"), col("region_geom")))
@@ -271,7 +269,6 @@ object Pipelines {
     * <= d — while second-column parcels (11 000 m) and diagonal regions
     * (≥ 14 142 m) stay out. No gap equals d, so no FP boundary cases. */
   def spatialDWithinRollup(spark: SparkSession, dir: String, d: Double = 10700.0): DataFrame = {
-    graft.functions.registerAll(spark) // installs SpatialJoinStrategy (idempotent)
     // slot dedup + multiplicity weight: see spatialJoinRollup
     parcelSlotRelation(spark, dir).select(col("parcel_geom"), col("m"))
       .join(broadcast(regionRelation(spark, dir)),
@@ -292,7 +289,6 @@ object Pipelines {
     * the distance expression bound to the PROBE row — each probe expands
     * its own envelope query (asserted in PlanShapeSpec). */
   def spatialDWithinColRollup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.registerAll(spark)
     import GeoFixtures._
     // slot dedup + multiplicity weight (see spatialJoinRollup); the
     // per-row radius is a pure function of the slot origin (c, w derive
@@ -362,7 +358,6 @@ object Pipelines {
   /** The bare semi join (pre-aggregate), exposed so PlanShapeSpec can
     * assert the semi exec's output schema is the probe side only. */
   private[ops] def spatialSemiJoined(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.registerAll(spark)
     val flagged = regionRelation(spark, dir)
       .filter(col("region_id") < 10).select(col("region_geom"))
     // slot dedup + multiplicity weight (see spatialJoinRollup): the semi
@@ -553,7 +548,7 @@ object Pipelines {
     SpatialJoin.gridIntersects(
         parcelSlotRelation(spark, dir).select(col("parcel_geom"), col("m")),
         regionRelation(spark, dir),
-        "parcel_geom", "region_geom", cellSize = 25000.0)
+        col("parcel_geom"), col("region_geom"), cellSize = 25000.0)
       .groupBy(col("region_id"))
       .agg(sum(col("m")).as("n"))
       .orderBy(col("region_id"))
@@ -561,17 +556,18 @@ object Pipelines {
   val spatialJoinPartitionedOracleSql: String = spatialJoinOracleSql
 
   /** Partitioned large-large DISTANCE join (`SpatialJoin.gridDWithin`,
-    * d = 10700): the scale path a too-large `broadcastDWithin` build side
-    * routes to — left envelopes expand by d before the cell cover, one
-    * cell equi join, envelope-within-d prefilter, exact st_dwithin,
-    * reference-point dedup. Same match set as the broadcast variant, so
+    * d = 10700): the scale path a declarative `st_dwithin` join whose
+    * build side is too large to broadcast routes to — left envelopes
+    * expand by d before the cell cover, one cell equi join,
+    * envelope-within-d prefilter, exact st_dwithin, reference-point
+    * dedup. Same match set as the broadcast variant, so
     * the same closed-form oracle gates both plans. */
   def spatialDWithinPartitionedRollup(spark: SparkSession, dir: String): DataFrame =
     // slot dedup + multiplicity weight: see spatialJoinRollup
     SpatialJoin.gridDWithin(
         parcelSlotRelation(spark, dir).select(col("parcel_geom"), col("m")),
         regionRelation(spark, dir),
-        "parcel_geom", "region_geom", d = 10700.0, cellSize = 25000.0)
+        col("parcel_geom"), col("region_geom"), lit(10700.0), cellSize = 25000.0)
       .groupBy(col("region_id"))
       .agg(sum(col("m")).as("n"))
       .orderBy(col("region_id"))

@@ -9,13 +9,18 @@ import org.apache.spark.sql.types._
   * into a write-then-read-back query so the driver's oracle can check the
   * whole loop against the source tables.
   *
-  * Outputs land under target/ of the repo (the only writable area); every
-  * run overwrites, so the queries are idempotent.
+  * Outputs land in [[OutBase]]; every run overwrites, so the queries are
+  * idempotent.
   */
 object SinkQueries {
   import Tables._
 
-  private[graft] val OutBase = "/root/repo/target/graft_store"
+  /** The store every sink writes to: a fresh directory under
+    * `java.io.tmpdir` per JVM, deleted when the JVM exits, so two
+    * concurrent runs (a test suite beside a `graft.Verify`) never share
+    * a Derby database or a bucketed table. */
+  private[graft] val OutBase: String =
+    org.apache.spark.sql.graftbridge.Bridge.tempDir("graft_store")
 
   /** S4+S5: write lineitem projection as headerless comma CSV with the
     * reference's exact layout knobs — repartition(10),

@@ -1,52 +1,46 @@
 package graft.ops
 
 import graft.geom.Geom
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.types.StructType
 import org.locationtech.jts.index.strtree.STRtree
-import scala.jdk.CollectionConverters._
 
-/** Broadcast R-tree spatial join, DataFrame-API form — the engine-level
-  * operator Sedona's installed-but-unused spatial-join machinery would
-  * have provided (reference: Sedona extensions loaded at
+/** Spatial join operators that Catalyst cannot plan from a declarative
+  * join — the engine-level counterpart of Sedona's installed-but-unused
+  * spatial-join machinery (reference: Sedona extensions loaded at
   * airflow_dag/dag_geo_pipeline.py:20, never exercised; SURVEY.md §2.3
   * marks this the capability stretch goal).
   *
-  * The PREFERRED path is the declarative one: write
-  * `left.join(broadcast(right), st_intersects(lg, rg))` and let
-  * graft.plans.SpatialJoinStrategy plan BroadcastRTreeSpatialJoinExec —
-  * Catalyst then still prunes columns and composes the join with the rest
-  * of the plan. This explicit operator remains for sessions where the
-  * strategy is not installed.
-  *
-  * Catalyst cannot know `st_intersects` is index-accelerable, so a naive
-  * formulation becomes BroadcastNestedLoopJoin — O(|L|·|R|) geometry tests.
-  * This operator broadcasts the small side as WKB, builds one JTS STRtree
-  * per partition (not per row), and probes it with each left row's
-  * envelope; exact `intersects` runs only on envelope survivors. At 1000
-  * executors the tree builds 1000 times total and the big side never
-  * shuffles — the same plan shape Spark uses for broadcast hash joins.
+  * The broadcast intersects/dwithin join has no operator here: write
+  * `left.join(broadcast(right), st_intersects(lg, rg))` (or
+  * `st_dwithin(lg, rg, d)`) and graft.plans.SpatialJoinStrategy plans
+  * BroadcastRTreeSpatialJoinExec — one STRtree per probe partition over
+  * the broadcast side, exact predicates on envelope survivors, and
+  * Catalyst still prunes columns around it. When neither side fits under
+  * `autoBroadcastJoinThreshold` the strategy rewrites the same join to
+  * [[gridIntersects]] / [[gridDWithin]]. This object holds those two
+  * partitioned joins plus the kNN family ([[knn]], [[broadcastKnn]],
+  * [[gridKnn]]), which has no declarative join predicate to match.
   */
 object SpatialJoin {
 
-  /** Default cap on build-side rows for the broadcast operators; override
-    * with spark conf `graft.spatial.maxBuildRows`. */
+  /** Default cap on [[broadcastKnn]]'s build-side rows; override with
+    * spark conf `graft.spatial.maxBuildRows`. */
   private val DefaultMaxBuildRows = 2000000
-  /** Default cap on build-side WKB bytes; override with
-    * `graft.spatial.maxBuildBytes`. */
+  /** Default cap on [[broadcastKnn]]'s build-side WKB bytes; override
+    * with `graft.spatial.maxBuildBytes`. */
   private val DefaultMaxBuildBytes = 256L << 20
   /** Default cap on gridKnn's occupied-cell histogram; override with
     * `graft.spatial.maxOccupiedCells`. */
   private val DefaultMaxOccupiedCells = 1 << 20
 
-  /** Driver-side collect of the broadcast build side, guarded: the
+  /** Driver-side collect of [[broadcastKnn]]'s build side, guarded: the
     * contract ("right must be the dimension side") is otherwise invisible
     * until the driver OOMs with no diagnostic. The limit-guarded collect
     * bounds driver memory even when the guard fires (at most cap+1 rows
-    * ever materialize), and the error names the partitioned operator a
-    * too-large build side should use instead. */
-  private def collectBuildSide(right: DataFrame, op: String,
-                               alternative: String,
+    * ever materialize), and the error names [[gridKnn]], the partitioned
+    * operator a too-large build side should use instead. */
+  private def collectBuildSide(right: DataFrame,
                                geomIdx: Int): Array[(Array[Byte], Seq[Any])] = {
     val conf = right.sparkSession.conf
     val maxRows = math.min(
@@ -58,46 +52,22 @@ object SpatialJoin {
     val rows = right.limit(maxRows + 1).collect()
     if (rows.length > maxRows)
       throw new IllegalStateException(
-        s"$op: build side exceeds graft.spatial.maxBuildRows=$maxRows — the right " +
-          s"side must be the dimension side; for a large build side use $alternative")
+        s"broadcastKnn: build side exceeds graft.spatial.maxBuildRows=$maxRows — the right " +
+          "side must be the dimension side; for a large build side use gridKnn")
     val out = rows.map(r => (r.getAs[Array[Byte]](geomIdx), r.toSeq))
     var bytes = 0L
     out.foreach { case (wkb, _) => if (wkb != null) bytes += wkb.length }
     if (bytes > maxBytes)
       throw new IllegalStateException(
-        s"$op: build-side geometry payload ${bytes}B exceeds " +
+        s"broadcastKnn: build-side geometry payload ${bytes}B exceeds " +
           s"graft.spatial.maxBuildBytes=$maxBytes — the right side must be the " +
-          s"dimension side; for a large build side use $alternative")
+          "dimension side; for a large build side use gridKnn")
     out
   }
 
-  /** Inner join `left ⋈ right ON st_intersects(left[leftGeomCol],
-    * right[rightGeomCol])`. `right` must be the dimension side (collected
-    * and broadcast, like `functions.broadcast`). Output schema is the
-    * concatenation of both sides' columns, or just `outputCols` when given
-    * (resolved left side first). mapPartitions is opaque to Catalyst column
-    * pruning, so when the consumer needs only a few columns — e.g. a
-    * count-per-key rollup that drops both geometries — projecting inside
-    * the operator is what keeps multi-hundred-byte WKB payloads out of the
-    * row encoder and the downstream shuffle. */
-  def broadcastIntersects(left: DataFrame, right: DataFrame,
-                          leftGeomCol: String, rightGeomCol: String,
-                          outputCols: Seq[String] = Nil): DataFrame =
-    broadcastJoin(left, right, leftGeomCol, rightGeomCol, outputCols, distance = None)
-
-  /** Inner join on `st_dwithin(left[leftGeomCol], right[rightGeomCol], d)`
-    * — the probe envelope is expanded by `d` before the R-tree query and
-    * exact JTS distance runs as the post-filter (same kernel as the
-    * planner-strategy form). */
-  def broadcastDWithin(left: DataFrame, right: DataFrame,
-                       leftGeomCol: String, rightGeomCol: String, d: Double,
-                       outputCols: Seq[String] = Nil): DataFrame = {
-    require(d >= 0.0, s"distance must be non-negative, got $d")
-    broadcastJoin(left, right, leftGeomCol, rightGeomCol, outputCols, distance = Some(d))
-  }
-
-  /** Partitioned large-large spatial inner join — the capability Sedona
-    * ships for two sides that both exceed the broadcast threshold, here
+  /** Partitioned large-large spatial inner join `left ⋈ right ON
+    * st_intersects(leftGeom, rightGeom)` — the capability Sedona ships
+    * for two sides that both exceed the broadcast threshold, here
     * expressed entirely in declarative operators so Catalyst plans a
     * plain shuffled equi join (never BroadcastNestedLoopJoin, asserted in
     * PlanShapeSpec):
@@ -117,38 +87,29 @@ object SpatialJoin {
     *      (`greatest(xmin), greatest(ymin)` — a corner guaranteed to lie
     *      in both sides' cell ranges) reports the pair.
     *
+    * The geometries are expressions (not necessarily bare columns), and
+    * the output is both sides' columns, or `outputCols` when given — the
+    * form [[graft.plans.SpatialJoinStrategy]]'s stats-driven routing
+    * needs when it rewrites a declarative `join(r, st_intersects(lg, rg))`
+    * whose build side is too large to broadcast: the strategy hands the
+    * matched children back through the DataFrame API with the join's own
+    * geometry expressions and re-plans this decomposition.
+    *
     * `cellSize` is the grid pitch in geometry units: smaller cells cut
     * per-cell candidate counts but multiply the explode factor of large
     * geometries (a geometry covers `O((extent/cellSize)²)` cells) — size
     * it near the typical geometry extent. Column names must be disjoint
     * between the two sides (standard Spark join caveat). */
   def gridIntersects(left: DataFrame, right: DataFrame,
-                     leftGeomCol: String, rightGeomCol: String,
+                     leftGeom: Column, rightGeom: Column,
                      cellSize: Double,
-                     outputCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    gridIntersectsOn(left, right, col(leftGeomCol), col(rightGeomCol),
-      cellSize, outputCols.map(col))
-  }
-
-  /** [[gridIntersects]] generalized to geometry EXPRESSIONS and attribute
-    * outputs — the form [[graft.plans.SpatialJoinStrategy]]'s stats-driven
-    * routing needs when it rewrites a declarative
-    * `join(r, st_intersects(lg, rg))` whose build side is too large to
-    * broadcast: the strategy hands the matched children back through the
-    * DataFrame API with the join's own geometry expressions (arbitrary,
-    * not necessarily bare columns) and re-plans the grid decomposition. */
-  def gridIntersectsOn(left: DataFrame, right: DataFrame,
-                       leftGeom: org.apache.spark.sql.Column,
-                       rightGeom: org.apache.spark.sql.Column,
-                       cellSize: Double,
-                       outputCols: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
+                     outputCols: Seq[Column] = Nil): DataFrame = {
     require(cellSize > 0.0 && java.lang.Double.isFinite(cellSize),
       s"cellSize must be positive and finite, got $cellSize")
     // selective import: functions.left/right would shadow the parameters
     import org.apache.spark.sql.functions.{col, explode, expr, floor, greatest}
     import graft.functions.{st_envelope_bounds, st_intersects}
-    def withCells(df: DataFrame, geom: org.apache.spark.sql.Column, p: String): DataFrame =
+    def withCells(df: DataFrame, geom: Column, p: String): DataFrame =
       df.withColumn(s"${p}_env", st_envelope_bounds(geom))
         .withColumn(s"${p}_cell", explode(expr(
           s"""flatten(transform(
@@ -180,37 +141,23 @@ object SpatialJoin {
   }
 
   /** Partitioned large-large DISTANCE join — [[gridIntersects]]'s device
-    * applied to `st_dwithin`: the LEFT side's envelope is expanded by the
-    * distance BEFORE the cell cover (so any pair within `d` provably
-    * shares a cell), the cell equi join is the only shuffle,
-    * envelope-within-d column math prunes candidates ahead of the WKB
-    * parse, exact `st_dwithin` verifies, and the reference-point rule on
-    * the (expanded-left ∩ right) envelope intersection keeps exactly one
-    * cell per pair. This is the plan a too-large `broadcastDWithin` build
-    * side routes to — without it, large-large distance joins had no
-    * partitioned alternative. */
+    * applied to `st_dwithin(leftGeom, rightGeom, distance)`: the LEFT
+    * side's envelope is expanded by its row's distance BEFORE the cell
+    * cover (so any pair within `d` provably shares a cell), the cell equi
+    * join is the only shuffle, envelope-within-d column math prunes
+    * candidates ahead of the WKB parse, exact `st_dwithin` verifies, and
+    * the reference-point rule on the (expanded-left ∩ right) envelope
+    * intersection keeps exactly one cell per pair. This is the plan a
+    * declarative distance join routes to when neither side fits under the
+    * broadcast threshold. `distance` is a column over the left side; per
+    * row the semantics match the broadcast exec: a NULL or negative
+    * distance matches nothing (the guarded expansion goes NULL, the cell
+    * sequence goes NULL, and explode drops the row). */
   def gridDWithin(left: DataFrame, right: DataFrame,
-                  leftGeomCol: String, rightGeomCol: String,
-                  d: Double, cellSize: Double,
-                  outputCols: Seq[String] = Nil): DataFrame = {
-    require(d >= 0.0 && java.lang.Double.isFinite(d),
-      s"distance must be non-negative and finite, got $d")
-    import org.apache.spark.sql.functions.{col, lit}
-    gridDWithinOn(left, right, col(leftGeomCol), col(rightGeomCol),
-      lit(d), cellSize, outputCols.map(col))
-  }
-
-  /** [[gridDWithin]] generalized to expression geometries and a distance
-    * COLUMN over the left side (the strategy's rewrite form — mirrors
-    * [[gridIntersectsOn]]). Per-row semantics match the broadcast exec:
-    * a NULL or negative distance matches nothing (the guarded expansion
-    * goes NULL, the cell sequence goes NULL, and explode drops the row). */
-  def gridDWithinOn(left: DataFrame, right: DataFrame,
-                    leftGeom: org.apache.spark.sql.Column,
-                    rightGeom: org.apache.spark.sql.Column,
-                    distance: org.apache.spark.sql.Column,
-                    cellSize: Double,
-                    outputCols: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
+                  leftGeom: Column, rightGeom: Column,
+                  distance: Column,
+                  cellSize: Double,
+                  outputCols: Seq[Column] = Nil): DataFrame = {
     require(cellSize > 0.0 && java.lang.Double.isFinite(cellSize),
       s"cellSize must be positive and finite, got $cellSize")
     import org.apache.spark.sql.functions.{col, explode, expr, floor, greatest, when}
@@ -244,7 +191,7 @@ object SpatialJoin {
       floor(greatest(col("gl_env.xmin") - col("gd"), col("gr_env.xmin")) / cellSize) === col("gl_cell.cx") &&
       floor(greatest(col("gl_env.ymin") - col("gd"), col("gr_env.ymin")) / cellSize) === col("gl_cell.cy") &&
       st_dwithin(leftGeom, rightGeom, col("gd"))
-    // no hint — strategy-re-entrant like gridIntersectsOn (see note there)
+    // no hint — strategy-re-entrant like gridIntersects (see note there)
     val joined = l.join(r, cond, "inner")
       .drop("gd", "gl_env", "gl_cell", "gr_env", "gr_cell")
     if (outputCols.isEmpty) joined else joined.select(outputCols: _*)
@@ -278,9 +225,9 @@ object SpatialJoin {
   /** k-nearest-neighbour join (Sedona `ST_KNN` analogue): for each left
     * row, the `k` right rows whose geometries are nearest by exact JTS
     * euclidean distance (ties broken arbitrarily, like Sedona). Same
-    * distribution shape as [[broadcastIntersects]]: `right` is the
-    * dimension side (collected + broadcast), one STRtree per probe
-    * partition, and each probe runs JTS's exact branch-and-bound kNN over
+    * distribution shape as the planner's broadcast R-tree join
+    * (BroadcastRTreeSpatialJoinExec): `right` is the dimension side
+    * (collected + broadcast), one STRtree per probe partition, and each probe runs JTS's exact branch-and-bound kNN over
     * the tree — the big side never shuffles, so the plan survives a
     * 100 TB probe side. Probe rows with null geometry emit nothing; when
     * the build side has fewer than `k` rows, every build row matches. */
@@ -291,7 +238,7 @@ object SpatialJoin {
     val spark = left.sparkSession
     val rightSchema = right.schema
     val rightGeomIdx = rightSchema.fieldIndex(rightGeomCol)
-    val rightRows = collectBuildSide(right, "broadcastKnn", "gridKnn", rightGeomIdx)
+    val rightRows = collectBuildSide(right, rightGeomIdx)
     val bRight = spark.sparkContext.broadcast(rightRows)
     val leftSchema = left.schema
     val leftGeomIdx = leftSchema.fieldIndex(leftGeomCol)
@@ -592,7 +539,7 @@ object SpatialJoin {
       .select(outCols.map(col): _*)
   }
 
-  /** Output projection shared by the broadcast operators: (isLeft, ordinal)
+  /** [[broadcastKnn]]'s output projection: (isLeft, ordinal)
     * per emitted column, plus the emitted schema. */
   private def outputPicks(leftSchema: StructType, rightSchema: StructType,
                           outputCols: Seq[String]): (Array[(Boolean, Int)], StructType) = {
@@ -621,61 +568,5 @@ object SpatialJoin {
       i += 1
     }
     Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vs))
-  }
-
-  private def broadcastJoin(left: DataFrame, right: DataFrame,
-                            leftGeomCol: String, rightGeomCol: String,
-                            outputCols: Seq[String],
-                            distance: Option[Double]): DataFrame = {
-    val spark = left.sparkSession
-    val rightSchema = right.schema
-    val rightGeomIdx = rightSchema.fieldIndex(rightGeomCol)
-    // dimension side: WKB + the row's other values travel in one broadcast
-    val rightRows = collectBuildSide(right,
-      if (distance.isDefined) "broadcastDWithin" else "broadcastIntersects",
-      "gridIntersects", rightGeomIdx)
-    val bRight = spark.sparkContext.broadcast(rightRows)
-    val leftSchema = left.schema
-    val leftGeomIdx = leftSchema.fieldIndex(leftGeomCol)
-    val (picks, outSchema) = outputPicks(leftSchema, rightSchema, outputCols)
-
-    // probe kernel is per-row JTS work — guarantee it fans out across cores
-    Par.fanOut(left).mapPartitions { it =>
-      // PreparedGeometry caches the index-side geometry's edge index: the
-      // same polygon is probed by every left row in the partition, which
-      // is PreparedGeometryFactory's designed use case (~3x on intersects)
-      val tree = new STRtree()
-      // null geometry ⇒ the join predicate is NULL ⇒ no match (the rule
-      // every sibling form applies: gridIntersects/gridDWithin drop the
-      // row at the envelope, broadcastKnn filters both sides) — skip, on
-      // BOTH sides, instead of NPE-ing the stage on the WKB parse
-      bRight.value.foreach { case (wkb, values) =>
-        if (wkb != null) {
-          val g = Geom.fromWkb(wkb)
-          val prepared = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(g)
-          tree.insert(g.getEnvelopeInternal, (prepared, values))
-        }
-      }
-      tree.build()
-      it.flatMap { lrow =>
-        val lwkb = lrow.getAs[Array[Byte]](leftGeomIdx)
-        if (lwkb == null) Iterator.empty else {
-        val lg = Geom.fromWkb(lwkb)
-        val qEnv = new org.locationtech.jts.geom.Envelope(lg.getEnvelopeInternal)
-        distance.foreach(qEnv.expandBy)
-        tree.query(qEnv).asScala.iterator
-          .map(_.asInstanceOf[(org.locationtech.jts.geom.prep.PreparedGeometry, Seq[Any])])
-          .filter { case (rg, _) =>
-            distance match {
-              case None => rg.intersects(lg)
-              // prepared intersects first: overlap implies distance 0, so
-              // the exact distance test only runs for disjoint candidates
-              case Some(dd) => rg.intersects(lg) || rg.getGeometry.isWithinDistance(lg, dd)
-            }
-          }
-          .map { case (_, rvals) => projectRow(picks, lrow, rvals) }
-        }
-      }
-    }(Encoders.row(outSchema))
   }
 }

@@ -136,7 +136,7 @@ object SpatialJoinStrategy extends SparkStrategy {
 
   /** Rewrite `Join(l, r, Inner, st_intersects(lg, rg))` into the
     * grid-partitioned decomposition ([[graft.ops.SpatialJoin
-    * .gridIntersectsOn]]: explode both sides to covering cells, ONE hash
+    * .gridIntersects]]: explode both sides to covering cells, ONE hash
     * equi join on the cell id, envelope prune, exact predicate,
     * reference-point dedup) and hand the re-analyzed subtree back to the
     * planner via `planLater`. The matched children keep their exprIds
@@ -149,7 +149,7 @@ object SpatialJoinStrategy extends SparkStrategy {
                           leftGeom: Expression, rightGeom: Expression): Seq[SparkPlan] = {
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = org.apache.spark.sql.SparkSession.active
-    val rewritten = graft.ops.SpatialJoin.gridIntersectsOn(
+    val rewritten = graft.ops.SpatialJoin.gridIntersects(
       Bridge.ofRows(spark, left), Bridge.ofRows(spark, right),
       Bridge.column(leftGeom), Bridge.column(rightGeom),
       cellSizeConf,
@@ -159,7 +159,7 @@ object SpatialJoinStrategy extends SparkStrategy {
 
   /** Same routing for `st_dwithin`: the side carrying the distance
     * expression becomes the expanded (cell-cover-by-d) side of
-    * [[graft.ops.SpatialJoin.gridDWithinOn]]; `origOutput` restores the
+    * [[graft.ops.SpatialJoin.gridDWithin]]; `origOutput` restores the
     * matched join's left-then-right attribute order regardless of which
     * side was expanded. */
   private def gridRewriteDWithin(expandSide: LogicalPlan, otherSide: LogicalPlan,
@@ -168,7 +168,7 @@ object SpatialJoinStrategy extends SparkStrategy {
                                  origOutput: Seq[Attribute]): Seq[SparkPlan] = {
     import org.apache.spark.sql.graftbridge.Bridge
     val spark = org.apache.spark.sql.SparkSession.active
-    val rewritten = graft.ops.SpatialJoin.gridDWithinOn(
+    val rewritten = graft.ops.SpatialJoin.gridDWithin(
       Bridge.ofRows(spark, expandSide), Bridge.ofRows(spark, otherSide),
       Bridge.column(expandGeom), Bridge.column(otherGeom),
       Bridge.column(dist), cellSizeConf,

@@ -24,6 +24,10 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** A fresh directory under `java.io.tmpdir`, deleted at JVM exit by
+    * Spark's shutdown hook (`Utils.createTempDir`). */
+  def tempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
   /** A 1-row/1-column DataFrame as a scalar-subquery expression — the form

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Keeps the human-facing inventory counts DERIVED, not typed: README.md
   * and COVERAGE.md state how many queries/oracles exist, and those
@@ -46,5 +47,20 @@ class InventorySpec extends AnyFunSuite {
     val missing = SparkEntry.queries.keySet.filterNot(q => coverage.contains(s"`$q`"))
     assert(missing.isEmpty,
       s"registered queries with no COVERAGE.md row: ${missing.toSeq.sorted}")
+  }
+
+  test("no src/main file names the checkout by its absolute path") {
+    // artifacts and defaults resolve against the working directory (sbt's
+    // forked run and test both start in the project base); a source file
+    // that spells out that base only works in one checkout
+    val base = new java.io.File(".").getCanonicalPath
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val files =
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(_.toString).toList
+      finally walk.close()
+    assert(files.exists(_.endsWith("SparkEntry.scala")), s"src/main not found under $base")
+    val offenders = files.filter(f => read(f).contains(base)).sorted
+    assert(offenders.isEmpty, s"src/main files naming $base: $offenders")
   }
 }

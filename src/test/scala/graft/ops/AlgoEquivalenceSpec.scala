@@ -936,8 +936,8 @@ class AlgoEquivalenceSpec extends AnyFunSuite {
     }
   }
 
-  test("gridIntersects/gridDWithin equal the broadcast R-tree forms on seeded random geometries") {
-    // the grid forms carry the two devices a broadcast join doesn't need —
+  test("gridIntersects/gridDWithin equal a brute-force nested loop on seeded random geometries") {
+    // the grid forms carry the two devices a nested loop doesn't need —
     // the cell cover and the reference-point dedup — so they are the forms
     // that can silently drop or duplicate a pair. This sweeps seeded random
     // mixes (points, axis-aligned boxes, buffered polygons, a fat
@@ -945,7 +945,8 @@ class AlgoEquivalenceSpec extends AnyFunSuite {
     // sizes smaller/comparable/larger than the geometry extents, with
     // NEGATIVE coordinates (floor at negative cells) and integer envelope
     // corners landing exactly on cell boundaries (the floor boundary), and
-    // requires pair-set equality with the R-tree broadcast forms.
+    // requires pair-list equality (no pair lost, none duplicated) with a
+    // JTS nested loop over the collected sides.
     import org.apache.spark.sql.functions._
     import graft.functions.{st_buffer, st_makeenvelope, st_point}
     import spark.implicits._
@@ -971,27 +972,29 @@ class AlgoEquivalenceSpec extends AnyFunSuite {
         .select(col(s"${prefix}_id"), lit(null).cast("binary").as(s"${prefix}_geom"))
       base.unionByName(nullRow)
     }
-    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def truth(l: org.apache.spark.sql.DataFrame, r: org.apache.spark.sql.DataFrame,
+              d: Option[Double]): Seq[(Long, Long)] =
+      BruteForceJoin.pairs(l, r, "l_geom", "r_geom", d)
+        .map { case (a, b) => (a.getLong(0), b.getLong(0)) }.sorted
+    val ids = Seq(col("l_id"), col("r_id"))
     for (seed <- Seq(3, 11)) {
       val l = geoms(seed, "l")
       val r = geoms(seed + 50, "r")
-      val want = pairs(SpatialJoin.broadcastIntersects(l, r, "l_geom", "r_geom",
-        Seq("l_id", "r_id")))
+      val want = truth(l, r, None)
       assert(want.nonEmpty, s"seed=$seed: intersects fixture found nothing")
       for (cs <- Seq(2.5, 5.0, 60.0)) {
-        val got = pairs(SpatialJoin.gridIntersects(l, r, "l_geom", "r_geom", cs,
-          Seq("l_id", "r_id")))
+        val got = pairs(SpatialJoin.gridIntersects(l, r, col("l_geom"), col("r_geom"), cs, ids))
         assert(got == want,
-          s"seed=$seed cell=$cs: missing=${want -- got} extra=${got -- want}")
+          s"seed=$seed cell=$cs: missing=${want diff got} extra=${got diff want}")
       }
       for (d <- Seq(0.0, 3.7); cs <- Seq(2.5, 60.0)) {
-        val wantD = pairs(SpatialJoin.broadcastDWithin(l, r, "l_geom", "r_geom", d,
-          Seq("l_id", "r_id")))
-        val gotD = pairs(SpatialJoin.gridDWithin(l, r, "l_geom", "r_geom", d, cs,
-          Seq("l_id", "r_id")))
+        val wantD = truth(l, r, Some(d))
+        val gotD = pairs(SpatialJoin.gridDWithin(l, r, col("l_geom"), col("r_geom"),
+          lit(d), cs, ids))
         assert(gotD == wantD,
-          s"seed=$seed d=$d cell=$cs: missing=${wantD -- gotD} extra=${gotD -- wantD}")
+          s"seed=$seed d=$d cell=$cs: missing=${wantD diff gotD} extra=${gotD diff wantD}")
       }
     }
   }

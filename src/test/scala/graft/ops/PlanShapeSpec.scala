@@ -377,7 +377,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(got != ownOnly, "d=10700 should reach adjacent regions")
   }
 
-  // shared fixture for the API-vs-strategy agreement tests: the same
+  // shared fixture for the brute-force and grid agreement tests: the same
   // parcels/regions frames q_spatial_join / q_spatial_dwithin build
   private def parcelsAndRegions(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.functions._
@@ -400,20 +400,38 @@ class PlanShapeSpec extends AnyFunSuite {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
   }
 
-  test("API-form broadcastDWithin agrees with the strategy-planned distance join") {
+  /** Per-region match counts of a JTS nested loop over the collected
+    * parcels and regions: the truth, with no index and no grid. */
+  private def bruteForceCounts(parcels: org.apache.spark.sql.DataFrame,
+                               regions: org.apache.spark.sql.DataFrame,
+                               distance: Option[Double]): Map[Int, Long] =
+    BruteForceJoin.pairs(parcels, regions, "parcel_geom", "region_geom", distance)
+      .groupBy(_._2.getAs[Int]("region_id")).map { case (k, v) => k -> v.size.toLong }
+
+  /** The declarative broadcast join, asserted to plan as
+    * BroadcastRTreeSpatialJoinExec, the engine's broadcast kernel. */
+  private def execJoin(parcels: org.apache.spark.sql.DataFrame,
+                       regions: org.apache.spark.sql.DataFrame,
+                       cond: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val df = parcels.join(org.apache.spark.sql.functions.broadcast(regions), cond)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("BroadcastRTreeSpatialJoin"), p.take(2000))
+    df
+  }
+
+  test("q_spatial_dwithin equals brute force") {
     val (parcels, regions) = parcelsAndRegions()
-    val api = perRegionCounts(SpatialJoin.broadcastDWithin(
-      parcels, regions, "parcel_geom", "region_geom", 10700.0, outputCols = Seq("region_id")))
     val strategy = SparkEntry.queries("q_spatial_dwithin")(spark, dir).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(api == strategy)
+    assert(strategy == bruteForceCounts(parcels, regions, Some(10700.0)))
   }
 
   test("negative distance is rejected at every distance-join entry point") {
+    import org.apache.spark.sql.functions.{col, lit}
     val (parcels, regions) = parcelsAndRegions()
-    // API form
-    intercept[IllegalArgumentException](SpatialJoin.broadcastDWithin(
-      parcels, regions, "parcel_geom", "region_geom", -1.0))
+    // grid form: a negative distance matches nothing, per row
+    assert(SpatialJoin.gridDWithin(parcels, regions, col("parcel_geom"), col("region_geom"),
+      lit(-1.0), cellSize = 25000.0).count() == 0)
     // direct exec construction (the strategy itself never plans d < 0):
     // the prepared-intersects short-circuit is only valid for d >= 0
     val geomExpr = org.apache.spark.sql.graftbridge.Bridge.expression(
@@ -425,13 +443,11 @@ class PlanShapeSpec extends AnyFunSuite {
       distance = Some(org.apache.spark.sql.catalyst.expressions.Literal(-1.0))))
   }
 
-  test("API-form broadcastIntersects agrees with the strategy-planned join") {
+  test("q_spatial_join equals brute force") {
     val (parcels, regions) = parcelsAndRegions()
-    val api = perRegionCounts(SpatialJoin.broadcastIntersects(
-      parcels, regions, "parcel_geom", "region_geom", outputCols = Seq("region_id")))
     val strategy = SparkEntry.queries("q_spatial_join")(spark, dir).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(api == strategy)
+    assert(strategy == bruteForceCounts(parcels, regions, None))
   }
 
   test("kNN join with k=1 matches exactly the own region at distance 0") {
@@ -498,28 +514,29 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("grid dwithin shuffles on the cell key - no nested loop - and matches the broadcast result") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.st_dwithin
     val (parcels, regions) = parcelsAndRegions()
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val df = SpatialJoin.gridDWithin(parcels, regions,
-        "parcel_geom", "region_geom", d = 10700.0, cellSize = 25000.0,
-        outputCols = Seq("region_id"))
+        col("parcel_geom"), col("region_geom"), lit(10700.0), cellSize = 25000.0,
+        outputCols = Seq(col("region_id")))
       val counts = perRegionCounts(df)
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(2000))
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p.take(2000))
-      val broadcastCounts = perRegionCounts(SpatialJoin.broadcastDWithin(
-        parcels, regions, "parcel_geom", "region_geom", 10700.0,
-        outputCols = Seq("region_id")))
+      val broadcastCounts = perRegionCounts(execJoin(parcels, regions,
+        st_dwithin(col("parcel_geom"), col("region_geom"), lit(10700.0))))
       assert(counts == broadcastCounts)
       // d = 0 degenerates to the intersects match set on these fixtures
       assert(perRegionCounts(SpatialJoin.gridDWithin(parcels, regions,
-          "parcel_geom", "region_geom", d = 0.0, cellSize = 25000.0,
-          outputCols = Seq("region_id"))) ==
+          col("parcel_geom"), col("region_geom"), lit(0.0), cellSize = 25000.0,
+          outputCols = Seq(col("region_id")))) ==
         perRegionCounts(SpatialJoin.gridIntersects(parcels, regions,
-          "parcel_geom", "region_geom", cellSize = 25000.0,
-          outputCols = Seq("region_id"))))
+          col("parcel_geom"), col("region_geom"), cellSize = 25000.0,
+          outputCols = Seq(col("region_id")))))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
@@ -561,6 +578,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("grid join shuffles on the cell key - no broadcast, no nested loop - and matches the broadcast result") {
+    import org.apache.spark.sql.functions.col
+    import graft.functions.st_intersects
     val (parcels, regions) = parcelsAndRegions()
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -568,14 +587,14 @@ class PlanShapeSpec extends AnyFunSuite {
       // strategy-planned path would fall back to BroadcastNestedLoopJoin
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val df = SpatialJoin.gridIntersects(parcels, regions,
-        "parcel_geom", "region_geom", cellSize = 25000.0,
-        outputCols = Seq("region_id"))
+        col("parcel_geom"), col("region_geom"), cellSize = 25000.0,
+        outputCols = Seq(col("region_id")))
       val counts = perRegionCounts(df)
       val p = df.queryExecution.executedPlan.toString
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(2000))
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"), p.take(2000))
-      val broadcastCounts = perRegionCounts(SpatialJoin.broadcastIntersects(
-        parcels, regions, "parcel_geom", "region_geom", outputCols = Seq("region_id")))
+      val broadcastCounts = perRegionCounts(execJoin(parcels, regions,
+        st_intersects(col("parcel_geom"), col("region_geom"))))
       assert(counts == broadcastCounts)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -655,7 +674,7 @@ class PlanShapeSpec extends AnyFunSuite {
     import spark.implicits._
     // large overlapping rectangles spanning MANY 3-unit cells each, plus
     // negative coordinates (floor vs integer-division trap) and disjoint
-    // controls; brute-force R-tree join is the truth
+    // controls; a brute-force nested loop is the truth
     def rects(ids: Seq[Int], name: String, scale: Double) =
       ids.toDF("id").select(col("id").as(s"${name}_id"),
         st_makeenvelope(col("id") * scale - lit(20.0), col("id") * scale - lit(20.0),
@@ -664,10 +683,10 @@ class PlanShapeSpec extends AnyFunSuite {
     val r = rects(-6 until 18, "r", 9.0)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(x => (x.getInt(0), x.getInt(1))).toSeq
-    val grid = pairs(SpatialJoin.gridIntersects(l, r, "l_geom", "r_geom",
-      cellSize = 3.0, outputCols = Seq("l_id", "r_id")))
-    val truth = pairs(SpatialJoin.broadcastIntersects(l, r, "l_geom", "r_geom",
-      outputCols = Seq("l_id", "r_id")))
+    val grid = pairs(SpatialJoin.gridIntersects(l, r, col("l_geom"), col("r_geom"),
+      cellSize = 3.0, outputCols = Seq(col("l_id"), col("r_id"))))
+    val truth = BruteForceJoin.pairs(l, r, "l_geom", "r_geom")
+      .map { case (a, b) => (a.getInt(0), b.getInt(0)) }
     assert(grid.distinct.size == grid.size, "grid join emitted duplicate pairs")
     assert(grid.sorted == truth.sorted)
     assert(grid.nonEmpty)

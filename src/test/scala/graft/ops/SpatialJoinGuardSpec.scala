@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The driver-collect guards on the broadcast spatial operators: an
+/** The driver-collect guards on the kNN operators: an
   * oversized build side (or a pathological gridKnn cellSize) must fail
   * loudly naming the partitioned alternative, never OOM the driver. */
 class SpatialJoinGuardSpec extends AnyFunSuite {
@@ -19,35 +19,27 @@ class SpatialJoinGuardSpec extends AnyFunSuite {
       .withColumn("g", st_point(col("id").cast("double"), col("id").cast("double")))
   }
 
-  test("broadcastIntersects rejects an over-cap build side, naming gridIntersects") {
-    withConf("graft.spatial.maxBuildRows", "2") {
-      val e = intercept[IllegalStateException](
-        SpatialJoin.broadcastIntersects(pts(1), pts(3), "g", "g").collect())
-      assert(e.getMessage.contains("gridIntersects"))
-      assert(e.getMessage.contains("maxBuildRows"))
-    }
-  }
-
   test("broadcastKnn rejects an over-cap build side, naming gridKnn") {
     withConf("graft.spatial.maxBuildRows", "2") {
       val e = intercept[IllegalStateException](
         SpatialJoin.broadcastKnn(pts(1), pts(3), "g", "g", k = 1).collect())
       assert(e.getMessage.contains("gridKnn"))
+      assert(e.getMessage.contains("maxBuildRows"))
     }
   }
 
   test("broadcast byte cap fires on an oversized geometry payload") {
     withConf("graft.spatial.maxBuildBytes", "16") {
       val e = intercept[IllegalStateException](
-        SpatialJoin.broadcastIntersects(pts(1), pts(3), "g", "g").collect())
+        SpatialJoin.broadcastKnn(pts(1), pts(3), "g", "g", k = 1).collect())
       assert(e.getMessage.contains("maxBuildBytes"))
     }
   }
 
   test("under-cap build sides still work (guard is not a behavior change)") {
     withConf("graft.spatial.maxBuildRows", "10") {
-      // identical point sets: each left point intersects its twin
-      assert(SpatialJoin.broadcastIntersects(pts(3), pts(3), "g", "g").count() == 3)
+      // identical point sets: each left point's nearest is its twin
+      assert(SpatialJoin.broadcastKnn(pts(3), pts(3), "g", "g", k = 1).count() == 3)
     }
   }
 
