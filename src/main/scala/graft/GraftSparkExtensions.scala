@@ -17,10 +17,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * installs the same table on a session built elsewhere; only this
   * extension also installs the two optimizer rules (`CollapseStTransforms`,
   * `CollapseEnvelopeBounds`) and the `graft_series` table function.
+  *
+  * It also sizes Spark's generated-class cache to graft's own inventory:
+  * `spark.sql.codegen.cache.maxEntries` becomes
+  * `Bridge.CodegenCacheEntries` (4096) on the context's conf unless it is
+  * already set, so a user value wins. At Spark's default of 100, a pass
+  * of the benchmark's six read queries (120 generated classes)
+  * recompiled a large share of them every time it ran. The size is a
+  * static conf that `CodeGenerator` reads once per JVM, at its first
+  * use: a JVM whose first codegen ran under a session built without this
+  * extension keeps 100, and on a cluster each executor sizes its own
+  * cache from its own conf.
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graftbridge.Bridge.sizeCodegenCache()
     // optimizer rule: fuse chained st_transform calls (SURVEY §7.5)
     ext.injectOptimizerRule(_ => graft.plans.CollapseStTransforms)
     ext.injectOptimizerRule(_ => graft.plans.CollapseEnvelopeBounds)

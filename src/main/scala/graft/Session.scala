@@ -14,8 +14,12 @@ object Session {
   /** A `local[cores]` session with the graft SQL surface injected through
     * [[GraftSparkExtensions]], `cores` shuffle partitions, UTC session
     * time, parquet TIMESTAMP(NANOS) read as BIGINT, no UI and WARN logs.
-    * Adaptive execution is on by Spark's own default. A caller that wants
-    * quieter logs calls `setLogLevel` itself. */
+    * Adaptive execution is on by Spark's own default. The extension also
+    * sizes Spark's generated-class cache to 4096 entries (unless the key
+    * is set) so repeated queries do not recompile their generated code;
+    * the size holds only if this is the JVM's first codegen-using
+    * session (see [[GraftSparkExtensions]]). A caller that wants quieter
+    * logs calls `setLogLevel` itself. */
   def local(cores: Int = Session.cores): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

@@ -444,11 +444,16 @@ object functions {
 
   /** Register every [[sqlFunctions]] entry for SQL-text use on this
     * session. Idempotent; temp (session-scoped) registrations. Also
-    * installs the spatial-join planner strategy. For sessions built
-    * without `spark.sql.extensions=graft.GraftSparkExtensions`; it does not
-    * install the extension's optimizer rules or `graft_series`. */
+    * installs the spatial-join planner strategy when the session's planner
+    * lacks it (a session built with the extension already has it). For
+    * sessions built without `spark.sql.extensions=graft.GraftSparkExtensions`;
+    * it does not install the extension's optimizer rules or
+    * `graft_series`, and it does not size Spark's codegen cache, a static
+    * conf: a JVM whose first codegen runs under such a session keeps
+    * Spark's 100-entry cache, so repeated queries recompile part of their
+    * generated code. */
   def registerAll(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(graft.plans.SpatialJoinStrategy))
+    if (!Bridge.plannerStrategies(spark).contains(graft.plans.SpatialJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.SpatialJoinStrategy
     val reg = Bridge.functionRegistry(spark)

@@ -1,12 +1,16 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.StaticSQLConf
 
-/** Narrow bridge to `private[sql]` Spark internals: Column <-> Expression
-  * conversion and the session FunctionRegistry. Lives under
+/** Narrow bridge to `private[sql]` and `private[spark]` Spark internals:
+  * Column <-> Expression conversion, the session FunctionRegistry and
+  * planner, and the active context's conf. Lives under
   * `org.apache.spark.sql` for access, exactly like other Spark extension
   * libraries do; everything else in graft uses only this object. */
 object Bridge {
@@ -30,6 +34,35 @@ object Bridge {
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
+  /** Every strategy the session's planner runs: the `experimental` ones,
+    * then those injected through `spark.sql.extensions`, then Spark's own. */
+  def plannerStrategies(spark: SparkSession): Seq[SparkStrategy] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
+
+  /** Entries of Spark's generated-class cache on a graft context. Spark's
+    * default, 100, is split by Guava into 4 LRU segments of 25, and one
+    * pass of the benchmark's six small read queries already generates 120
+    * classes, so every pass recompiled a large share of them. The cache
+    * is keyed on (class loader, code); one pass over all 258 read queries
+    * at sf0.001 fills about 3,100 entries, which 4096 (4 segments of
+    * 1,024) holds. */
+  val CodegenCacheEntries: Int = 4096
+
+  /** Sets `spark.sql.codegen.cache.maxEntries` to [[CodegenCacheEntries]]
+    * on `conf` unless the key is already set; a user value wins. */
+  def withCodegenCacheDefault(conf: SparkConf): SparkConf =
+    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
+
+  /** [[withCodegenCacheDefault]] on the active SparkContext's conf. Called
+    * while `SparkSession.Builder` applies `spark.sql.extensions`: the context
+    * is up, and the session's shared state has not yet copied its conf, so
+    * the session's SQLConf carries the size. Limits, both Spark's:
+    * `CodeGenerator` reads the size once per JVM, at its first use, so a
+    * JVM whose first codegen ran under a session without the extension
+    * keeps the size that session had; and on a cluster each executor
+    * sizes its own cache from its own conf. */
+  def sizeCodegenCache(): Unit = SparkContext.getActive.foreach(sc => withCodegenCacheDefault(sc.conf))
+
   /** A 1-row/1-column DataFrame as a scalar-subquery expression — the form
     * expressions like BloomFilterMightContain require for their build-side
     * input (a constant or scalar subquery, per Spark's own

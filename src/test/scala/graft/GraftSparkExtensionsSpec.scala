@@ -150,6 +150,20 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("registerAll on an extension session keeps exactly one SpatialJoinStrategy") {
+    import org.apache.spark.sql.graftbridge.Bridge.plannerStrategies
+    withExtensionSession { s =>
+      def joinStrategies(x: SparkSession) = plannerStrategies(x).count(_ == graft.plans.SpatialJoinStrategy)
+      assert(joinStrategies(s) == 1)
+      graft.functions.registerAll(s)
+      graft.functions.registerAll(s)
+      assert(joinStrategies(s) == 1, plannerStrategies(s).mkString(", "))
+      val other = s.newSession()
+      graft.functions.registerAll(other)
+      assert(joinStrategies(other) == 1, plannerStrategies(other).mkString(", "))
+    }
+  }
+
   test("Session.local leaves adaptive execution on, by Spark's default") {
     assert(org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED
       .defaultValue.contains(true))
