@@ -1,11 +1,15 @@
 package graft.exprs
 
 import graft.geom.{Crs, Geom}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry, LineString, MultiLineString,
+  MultiPolygon, Point, Polygon}
+import org.locationtech.jts.geom.util.AffineTransformation
 import org.locationtech.jts.io.ParseException
 
 /** Native Catalyst expressions for the spatial scalar algebra the reference
@@ -15,16 +19,33 @@ import org.locationtech.jts.io.ParseException
   * `Expression`).
   *
   * Geometry columns are WKB bytes (`BinaryType`) — see SURVEY.md §7.3.
-  * Most are `CodegenFallback`: their bodies are JTS calls that dominate
-  * any codegen gain, and fallback keeps surrounding operators codegen'd.
-  * The exception is `StMakeEnvelope`, whose body is a cheap static
-  * direct-WKB write, so it implements real `doGenCode`.
+  * Each function is a case class with a body on JTS objects; its contract
+  * comes from one base, as Sedona's `InferredExpression` gives it:
+  *  - [[StFunction]] declares the SQL name, the argument and result types
+  *    with implicit casts to the argument types, the interpreted
+  *    (`CodegenFallback`) eval path and the WKB encode of a JTS result;
+  *  - [[StUnary]], [[StBinary]] and [[StTernary]] read each argument
+  *    through its [[Arg]], so a geometry argument reaches the body decoded
+  *    (through the per-thread decode cache), and [[StPredicate]] is the
+  *    binary form for the DE-9IM relations, planned as a Catalyst
+  *    `Predicate`.
+  * `CodegenFallback` fits a JTS body, whose cost dominates any codegen
+  * gain; surrounding operators stay codegen'd. The one exception is
+  * [[StMakeEnvelope]]: its body is a cheap static direct-WKB write, so it
+  * implements real `doGenCode` and extends no base.
   */
 object SpatialExpressions {
-  // cached decode: expression sites are read-only consumers (every
-  // mutating op copies first — see Geom.fromWkbCached's safety note)
-  @inline private[exprs] def geom(v: Any): Geometry = Geom.fromWkbCached(v.asInstanceOf[Array[Byte]])
-  @inline private[exprs] def wkb(g: Geometry): Array[Byte] = Geom.toWkb(g)
+  /** `struct(center geometry, radius double)`, the circle results. */
+  private[exprs] val CircleType: StructType = StructType(Seq(
+    StructField("center", BinaryType, nullable = false),
+    StructField("radius", DoubleType, nullable = false)))
+
+  /** `struct(xmin, ymin, xmax, ymax)` doubles, the envelope-corner results. */
+  private[exprs] val BoundsType: StructType = StructType(
+    Seq("xmin", "ymin", "xmax", "ymax").map(StructField(_, DoubleType, nullable = false)))
+
+  private[exprs] def circle(center: Coordinate, radius: Double): InternalRow =
+    new GenericInternalRow(Array[Any](Geom.toWkb(Geom.factory.createPoint(center)), radius))
 
   /** The error for input a geometry parser rejects: it names the function
     * and quotes at most 64 characters of the input. */
@@ -37,47 +58,126 @@ object SpatialExpressions {
 }
 import SpatialExpressions._
 
+/** How a spatial function reads one argument: the Catalyst type implicit
+  * casts target, and the conversion to the JVM type its body takes. The
+  * bases find an argument's `Arg` from the body's parameter type. */
+sealed abstract class Arg[A](val dataType: DataType) extends Serializable {
+  def read(v: Any): A
+}
+object Arg {
+  /** A geometry, decoded through the per-thread decode cache. The decoded
+    * object is shared across rows, so a body must not mutate it
+    * ([[Geom.mapVertices]] copies first). */
+  implicit object Geo extends Arg[Geometry](BinaryType) {
+    def read(v: Any): Geometry = Geom.fromWkbCached(v.asInstanceOf[Array[Byte]])
+  }
+  /** A geometry's WKB bytes as they came, for bodies that return or quote
+    * their input. */
+  implicit object Wkb extends Arg[Array[Byte]](BinaryType) {
+    def read(v: Any): Array[Byte] = v.asInstanceOf[Array[Byte]]
+  }
+  implicit object F64 extends Arg[Double](DoubleType) {
+    def read(v: Any): Double = v.asInstanceOf[Double]
+  }
+  implicit object I32 extends Arg[Int](IntegerType) {
+    def read(v: Any): Int = v.asInstanceOf[Int]
+  }
+  implicit object Text extends Arg[UTF8String](StringType) {
+    def read(v: Any): UTF8String = v.asInstanceOf[UTF8String]
+  }
+  /** An array of geometries as WKB; a body decodes its elements. */
+  implicit object Geoms extends Arg[ArrayData](ArrayType(BinaryType)) {
+    def read(v: Any): ArrayData = v.asInstanceOf[ArrayData]
+  }
+}
+
+/** The contract every spatial function declares once: its SQL name (the
+  * `prettyName` of plan strings and unaliased columns), its argument and
+  * result types, implicit casts to the argument types, the interpreted
+  * eval path, and the encode of a result. Serializable, so the bases'
+  * constructor fields travel with a task (the first non-serializable
+  * superclass, Spark's, then needs only its no-argument constructor). */
+sealed trait StFunction extends Expression with ImplicitCastInputTypes with CodegenFallback
+    with Serializable {
+  protected def sqlName: String
+  protected def args: Seq[Arg[_]]
+  protected def resultType: DataType
+  override def prettyName: String = sqlName
+  override def inputTypes: Seq[DataType] = args.map(_.dataType)
+  override def dataType: DataType = resultType
+
+  /** A JTS result leaves as WKB; anything else (input bytes passed through,
+    * numbers, strings, rows, null) leaves as it is. */
+  protected final def encode(r: Any): Any = r match {
+    case g: Geometry => Geom.toWkb(g)
+    case _ => r
+  }
+}
+
+/** A one-argument spatial function; `op` runs on non-null input. */
+abstract class StUnary[A](protected val sqlName: String, protected val resultType: DataType)
+                         (implicit a: Arg[A])
+    extends UnaryExpression with StFunction {
+  protected def op(x: A): Any
+  protected def args: Seq[Arg[_]] = Seq(a)
+  override protected def nullSafeEval(v: Any): Any = encode(op(a.read(v)))
+}
+
+/** A two-argument spatial function; `op` runs on non-null input. */
+abstract class StBinary[A, B](protected val sqlName: String, protected val resultType: DataType)
+                             (implicit a: Arg[A], b: Arg[B])
+    extends BinaryExpression with StFunction {
+  protected def op(x: A, y: B): Any
+  protected def args: Seq[Arg[_]] = Seq(a, b)
+  override protected def nullSafeEval(v: Any, w: Any): Any = encode(op(a.read(v), b.read(w)))
+}
+
+/** A three-argument spatial function; `op` runs on non-null input. */
+abstract class StTernary[A, B, C](protected val sqlName: String, protected val resultType: DataType)
+                                 (implicit a: Arg[A], b: Arg[B], c: Arg[C])
+    extends TernaryExpression with StFunction {
+  protected def op(x: A, y: B, z: C): Any
+  protected def args: Seq[Arg[_]] = Seq(a, b, c)
+  override protected def nullSafeEval(v: Any, w: Any, u: Any): Any =
+    encode(op(a.read(v), b.read(w), c.read(u)))
+}
+
+/** A DE-9IM relation of two geometries, planned as a Catalyst `Predicate`
+  * (filter pushdown and `SpatialJoinStrategy` match it by class). */
+abstract class StPredicate(name: String)
+    extends StBinary[Geometry, Geometry](name, BooleanType) with Predicate {
+  protected def op(a: Geometry, b: Geometry): Boolean
+}
+
 /** WKT text -> WKB geometry. */
 case class StGeomFromWKT(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_geomfromwkt"
-  override protected def nullSafeEval(v: Any): Any = {
-    val text = v.asInstanceOf[UTF8String].toString
-    try wkb(Geom.fromWkt(text))
+    extends StUnary[UTF8String]("st_geomfromwkt", BinaryType) {
+  protected def op(t: UTF8String): Any = {
+    val text = t.toString
+    try Geom.fromWkt(text)
     catch { case e: ParseException => throw malformedGeometry(prettyName, text, e) }
   }
   override protected def withNewChildInternal(c: Expression): StGeomFromWKT = copy(child = c)
 }
 
 /** WKB geometry -> WKT text. */
-case class StAsText(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_astext"
-  override protected def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(Geom.toWkt(geom(v)))
+case class StAsText(child: Expression) extends StUnary[Geometry]("st_astext", StringType) {
+  protected def op(g: Geometry): Any = UTF8String.fromString(Geom.toWkt(g))
   override protected def withNewChildInternal(c: Expression): StAsText = copy(child = c)
 }
 
 /** (x, y) -> WKB point. */
 case class StPoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_point"
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    wkb(Geom.factory.createPoint(new org.locationtech.jts.geom.Coordinate(
-      x.asInstanceOf[Double], y.asInstanceOf[Double])))
+    extends StBinary[Double, Double]("st_point", BinaryType) {
+  protected def op(x: Double, y: Double): Any = Geom.factory.createPoint(new Coordinate(x, y))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StPoint =
     copy(left = l, right = r)
 }
 
 /** (xmin, ymin, xmax, ymax) -> WKB axis-aligned rectangle polygon
   * (PostGIS/Sedona ST_MakeEnvelope). Builds geometry directly from
-  * numeric columns — no WKT text on the hot path. */
+  * numeric columns — no WKT text on the hot path. Extends no base: it is
+  * the one spatial function with generated code. */
 case class StMakeEnvelope(children: Seq[Expression])
     extends Expression with ImplicitCastInputTypes {
   require(children.length == 4, "st_makeenvelope(xmin, ymin, xmax, ymax)")
@@ -85,7 +185,7 @@ case class StMakeEnvelope(children: Seq[Expression])
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = children.exists(_.nullable)
   override def prettyName: String = "st_makeenvelope"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+  override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.contains(null)) return null
     val Seq(x0, y0, x1, y1) = vs.map(_.asInstanceOf[Double])
@@ -93,8 +193,7 @@ case class StMakeEnvelope(children: Seq[Expression])
   }
   // probe-side geometry construction is per-fact-row: emit the static
   // direct-WKB call inside whole-stage codegen instead of falling back
-  override protected def doGenCode(ctx: codegen.CodegenContext,
-                                   ev: codegen.ExprCode): codegen.ExprCode = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val evals = children.map(_.genCode(ctx))
     val nullCheck =
@@ -113,24 +212,16 @@ case class StMakeEnvelope(children: Seq[Expression])
 }
 
 /** Repair invalid geometry (JTS GeometryFixer); identity on valid input. */
-case class StMakeValid(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_makevalid"
-  override protected def nullSafeEval(v: Any): Any = wkb(Geom.makeValid(geom(v)))
+case class StMakeValid(child: Expression) extends StUnary[Geometry]("st_makevalid", BinaryType) {
+  protected def op(g: Geometry): Any = Geom.makeValid(g)
   override protected def withNewChildInternal(c: Expression): StMakeValid = copy(child = c)
 }
 
 /** Minkowski buffer; d=0 is the validity-normalizing trick the reference
   * uses (process_geodata.py:125,133), d=1e-7 its gap-sealing buffer (:102). */
 case class StBuffer(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_buffer"
-  override protected def nullSafeEval(g: Any, d: Any): Any =
-    wkb(geom(g).buffer(d.asInstanceOf[Double]))
+    extends StBinary[Geometry, Double]("st_buffer", BinaryType) {
+  protected def op(g: Geometry, d: Double): Any = g.buffer(d)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StBuffer =
     copy(left = l, right = r)
 }
@@ -146,35 +237,15 @@ case class StBuffer(left: Expression, right: Expression)
   * geography buffer ships. Null-safe; an empty geometry buffers to an
   * empty polygon like JTS. */
 case class StBufferSpheroid(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_buffer_spheroid"
-  override protected def nullSafeEval(g: Any, d: Any): Any = {
-    val in = geom(g)
-    if (in.isEmpty) return wkb(in.buffer(0.0))
-    val c = in.getEnvelopeInternal
-    val proj = graft.geom.Crs.bestUtm(
-      (c.getMinX + c.getMaxX) / 2.0, (c.getMinY + c.getMaxY) / 2.0)
-    def reproject(geo: org.locationtech.jts.geom.Geometry,
-                  f: (Double, Double) => (Double, Double)): org.locationtech.jts.geom.Geometry = {
-      val out = geo.copy()
-      out.apply(new org.locationtech.jts.geom.CoordinateSequenceFilter {
-        override def filter(seq: org.locationtech.jts.geom.CoordinateSequence, i: Int): Unit = {
-          val (x, y) = f(seq.getX(i), seq.getY(i))
-          seq.setOrdinate(i, 0, x)
-          seq.setOrdinate(i, 1, y)
-        }
-        override def isDone: Boolean = false
-        override def isGeometryChanged: Boolean = true
-      })
-      out.geometryChanged()
-      out
+    extends StBinary[Geometry, Double]("st_buffer_spheroid", BinaryType) {
+  protected def op(in: Geometry, d: Double): Any =
+    if (in.isEmpty) in.buffer(0.0)
+    else {
+      val c = in.getEnvelopeInternal
+      val proj = Crs.bestUtm((c.getMinX + c.getMaxX) / 2.0, (c.getMinY + c.getMaxY) / 2.0)
+      val buffered = Geom.mapVertices(in)(proj.forward).buffer(d)
+      Geom.mapVertices(buffered)(proj.inverse)
     }
-    val planar = reproject(in, proj.forward)
-    val buffered = planar.buffer(d.asInstanceOf[Double])
-    wkb(reproject(buffered, proj.inverse))
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StBufferSpheroid =
     copy(left = l, right = r)
 }
@@ -196,20 +267,14 @@ case class StBufferSpheroid(left: Expression, right: Expression)
   * is rejected — no polygon part can satisfy it. Returns
   * `array<geometry>`; compose with `explode` for the relational form. */
 case class StSubdivide(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  import org.locationtech.jts.geom.{Envelope, Geometry => JGeom}
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "st_subdivide"
-  override protected def nullSafeEval(g: Any, mv: Any): Any = {
-    val maxV = mv.asInstanceOf[Int]
+    extends StBinary[Geometry, Int]("st_subdivide", ArrayType(BinaryType, containsNull = false)) {
+  protected def op(in: Geometry, maxV: Int): Any = {
     if (maxV < 5)
       throw new IllegalArgumentException(
         s"st_subdivide: max_vertices must be >= 5 (closed ring minimum), got $maxV")
-    val in = geom(g)
     val dim = in.getDimension
     val out = scala.collection.mutable.ArrayBuffer[Array[Byte]]()
-    def emitParts(p: JGeom, depth: Int): Unit = {
+    def emitParts(p: Geometry, depth: Int): Unit = {
       var i = 0
       while (i < p.getNumGeometries) {
         val part = p.getGeometryN(i)
@@ -217,9 +282,9 @@ case class StSubdivide(left: Expression, right: Expression)
         i += 1
       }
     }
-    def go(p: JGeom, depth: Int): Unit = {
+    def go(p: Geometry, depth: Int): Unit = {
       if (p.getNumGeometries > 1) emitParts(p, depth)
-      else if (p.getNumPoints <= maxV || depth >= 24) out += wkb(p)
+      else if (p.getNumPoints <= maxV || depth >= 24) out += Geom.toWkb(p)
       else {
         val env = p.getEnvelopeInternal
         val (e1, e2) =
@@ -238,7 +303,7 @@ case class StSubdivide(left: Expression, right: Expression)
       }
     }
     if (!in.isEmpty) emitParts(in, 0)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray[Any])
+    new GenericArrayData(out.toArray[Any])
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StSubdivide =
     copy(left = l, right = r)
@@ -252,24 +317,14 @@ case class StSubdivide(left: Expression, right: Expression)
   * [[StMinimumBoundingRadius]]. Null for non-areal or empty input —
   * no circle fits in a line. */
 case class StMaxInscribedCircle(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", BinaryType, nullable = false),
-    StructField("radius", DoubleType, nullable = false)))
+    extends StBinary[Geometry, Double]("st_maxinscribedcircle", CircleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_maxinscribedcircle"
-  override protected def nullSafeEval(g: Any, tol: Any): Any = {
-    val in = geom(g)
+  protected def op(in: Geometry, tol: Double): Any =
     if (in.isEmpty || in.getDimension < 2) null
     else {
-      val mic = new org.locationtech.jts.algorithm.construct.MaximumInscribedCircle(
-        in, tol.asInstanceOf[Double])
-      new GenericInternalRow(Array[Any](
-        wkb(mic.getCenter.getFactory.createPoint(mic.getCenter.getCoordinate)),
-        mic.getRadiusLine.getLength))
+      val mic = new org.locationtech.jts.algorithm.construct.MaximumInscribedCircle(in, tol)
+      circle(mic.getCenter.getCoordinate, mic.getRadiusLine.getLength)
     }
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StMaxInscribedCircle =
     copy(left = l, right = r)
 }
@@ -282,25 +337,15 @@ case class StMaxInscribedCircle(left: Expression, right: Expression)
   * radius double)`, radius exact to `tolerance`. Null when either
   * geometry is empty. */
 case class StLargestEmptyCircle(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", BinaryType, nullable = false),
-    StructField("radius", DoubleType, nullable = false)))
+    extends StTernary[Geometry, Geometry, Double]("st_largestemptycircle", CircleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_largestemptycircle"
-  override protected def nullSafeEval(o: Any, b: Any, tol: Any): Any = {
-    val obstacles = geom(o)
-    val boundary = geom(b)
+  protected def op(obstacles: Geometry, boundary: Geometry, tol: Double): Any =
     if (obstacles.isEmpty || boundary.isEmpty) null
     else {
       val lec = new org.locationtech.jts.algorithm.construct.LargestEmptyCircle(
-        obstacles, boundary, tol.asInstanceOf[Double])
-      new GenericInternalRow(Array[Any](
-        wkb(lec.getCenter.getFactory.createPoint(lec.getCenter.getCoordinate)),
-        lec.getRadiusLine.getLength))
+        obstacles, boundary, tol)
+      circle(lec.getCenter.getCoordinate, lec.getRadiusLine.getLength)
     }
-  }
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StLargestEmptyCircle =
     copy(first = a, second = b, third = c)
 }
@@ -312,15 +357,10 @@ case class StLargestEmptyCircle(first: Expression, second: Expression, third: Ex
   * total length. Null for a non-LineString, an empty/zero-length line,
   * or an empty point. */
 case class StLineLocatePoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_linelocatepoint", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_linelocatepoint"
-  override protected def nullSafeEval(l: Any, p: Any): Any = (geom(l), geom(p)) match {
-    case (line: org.locationtech.jts.geom.LineString,
-          pt: org.locationtech.jts.geom.Point)
-        if !line.isEmpty && !pt.isEmpty && line.getLength > 0.0 =>
+  protected def op(l: Geometry, p: Geometry): Any = (l, p) match {
+    case (line: LineString, pt: Point) if !line.isEmpty && !pt.isEmpty && line.getLength > 0.0 =>
       new org.locationtech.jts.linearref.LengthIndexedLine(line)
         .project(pt.getCoordinate) / line.getLength
     case _ => null
@@ -332,17 +372,14 @@ case class StLineLocatePoint(left: Expression, right: Expression)
 /** Defensive geometric intersection (repair-and-retry on TopologyException).
   * A rectangle that covers a valid polygonal side's envelope clips nothing
   * from it, so that side's input bytes come back without an overlay
-  * ([[Geom.rectangleCovers]]). */
+  * ([[Geom.rectangleCovers]]); hence the WKB arguments, decoded here. */
 case class StIntersection(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_intersection"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ga, gb) = (geom(a), geom(b))
+    extends StBinary[Array[Byte], Array[Byte]]("st_intersection", BinaryType) {
+  protected def op(a: Array[Byte], b: Array[Byte]): Any = {
+    val (ga, gb) = (Geom.fromWkbCached(a), Geom.fromWkbCached(b))
     if (Geom.rectangleCovers(gb, ga)) a
     else if (Geom.rectangleCovers(ga, gb)) b
-    else wkb(Geom.safeIntersection(ga, gb))
+    else Geom.safeIntersection(ga, gb)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersection =
     copy(left = l, right = r)
@@ -352,24 +389,18 @@ case class StIntersection(left: Expression, right: Expression)
   * in [0, 2π), PostGIS/Sedona ST_Azimuth semantics: atan2(Δx, Δy), NULL
   * for coincident points or non-point inputs. */
 case class StAzimuth(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_azimuth", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_azimuth"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    (geom(a), geom(b)) match {
-      case (p1: org.locationtech.jts.geom.Point, p2: org.locationtech.jts.geom.Point)
-          if !p1.isEmpty && !p2.isEmpty =>
-        val dx = p2.getX - p1.getX
-        val dy = p2.getY - p1.getY
-        if (dx == 0.0 && dy == 0.0) null
-        else {
-          val az = math.atan2(dx, dy)
-          if (az < 0.0) az + 2.0 * math.Pi else az
-        }
-      case _ => null
-    }
+  protected def op(a: Geometry, b: Geometry): Any = (a, b) match {
+    case (p1: Point, p2: Point) if !p1.isEmpty && !p2.isEmpty =>
+      val dx = p2.getX - p1.getX
+      val dy = p2.getY - p1.getY
+      if (dx == 0.0 && dy == 0.0) null
+      else {
+        val az = math.atan2(dx, dy)
+        if (az < 0.0) az + 2.0 * math.Pi else az
+      }
+    case _ => null
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StAzimuth =
     copy(left = l, right = r)
@@ -378,74 +409,47 @@ case class StAzimuth(left: Expression, right: Expression)
 /** Geometric difference A \ B (same defensive repair ladder as
   * intersection — Sedona ST_Difference). */
 case class StDifference(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_difference"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    wkb(Geom.safeDifference(geom(a), geom(b)))
+    extends StBinary[Geometry, Geometry]("st_difference", BinaryType) {
+  protected def op(a: Geometry, b: Geometry): Any = Geom.safeDifference(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StDifference =
     copy(left = l, right = r)
 }
 
 /** Symmetric difference (A \ B) ∪ (B \ A) — Sedona ST_SymDifference. */
 case class StSymDifference(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_symdifference"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    wkb(Geom.safeSymDifference(geom(a), geom(b)))
+    extends StBinary[Geometry, Geometry]("st_symdifference", BinaryType) {
+  protected def op(a: Geometry, b: Geometry): Any = Geom.safeSymDifference(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StSymDifference =
     copy(left = l, right = r)
 }
 
 /** Binary geometric union. */
 case class StUnion(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_union"
-  override protected def nullSafeEval(a: Any, b: Any): Any = wkb(geom(a).union(geom(b)))
+    extends StBinary[Geometry, Geometry]("st_union", BinaryType) {
+  protected def op(a: Geometry, b: Geometry): Any = a.union(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StUnion =
     copy(left = l, right = r)
 }
 
 /** Planar area in CRS units. */
-case class StArea(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_area"
-  override protected def nullSafeEval(v: Any): Any = geom(v).getArea
+case class StArea(child: Expression) extends StUnary[Geometry]("st_area", DoubleType) {
+  protected def op(g: Geometry): Any = g.getArea
   override protected def withNewChildInternal(c: Expression): StArea = copy(child = c)
 }
 
 /** Geometry length/perimeter in CRS units. */
-case class StLength(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_length"
-  override protected def nullSafeEval(v: Any): Any = geom(v).getLength
+case class StLength(child: Expression) extends StUnary[Geometry]("st_length", DoubleType) {
+  protected def op(g: Geometry): Any = g.getLength
   override protected def withNewChildInternal(c: Expression): StLength = copy(child = c)
 }
 
-case class StCentroid(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_centroid"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).getCentroid)
+case class StCentroid(child: Expression) extends StUnary[Geometry]("st_centroid", BinaryType) {
+  protected def op(g: Geometry): Any = g.getCentroid
   override protected def withNewChildInternal(c: Expression): StCentroid = copy(child = c)
 }
 
-case class StEnvelope(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_envelope"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).getEnvelope)
+case class StEnvelope(child: Expression) extends StUnary[Geometry]("st_envelope", BinaryType) {
+  protected def op(g: Geometry): Any = g.getEnvelope
   override protected def withNewChildInternal(c: Expression): StEnvelope = copy(child = c)
 }
 
@@ -454,20 +458,12 @@ case class StEnvelope(child: Expression)
   * prefilters), one WKB parse per row instead of four. Null for empty
   * geometries (their envelope is the null envelope). */
 case class StEnvelopeBounds(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("xmin", DoubleType, nullable = false),
-    StructField("ymin", DoubleType, nullable = false),
-    StructField("xmax", DoubleType, nullable = false),
-    StructField("ymax", DoubleType, nullable = false)))
+    extends StUnary[Geometry]("st_envelope_bounds", BoundsType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_envelope_bounds"
-  override protected def nullSafeEval(v: Any): Any = {
-    val env = geom(v).getEnvelopeInternal
+  protected def op(g: Geometry): Any = {
+    val env = g.getEnvelopeInternal
     if (env.isNull) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
+    else new GenericInternalRow(Array[Any](env.getMinX, env.getMinY, env.getMaxX, env.getMaxY))
   }
   override protected def withNewChildInternal(c: Expression): StEnvelopeBounds = copy(child = c)
 }
@@ -491,19 +487,18 @@ case class StEnvelopeBounds(child: Expression)
   * reversed corners included. The one refinement: a NaN corner makes the
   * composed path THROW (the WKB ring fails closure validation, NaN !=
   * NaN), where this fold returns the JTS envelope-fold value; no
-  * previously-succeeding query can change results. */
-case class StEnvelopeBoundsRect(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes with CodegenFallback {
+  * previously-succeeding query can change results.
+  *
+  * Four arguments in one `children` field (the rule builds it from
+  * [[StMakeEnvelope]]'s), so it fits no arity base and implements
+  * [[StFunction]] itself. */
+case class StEnvelopeBoundsRect(children: Seq[Expression]) extends Expression with StFunction {
   require(children.length == 4, "st_envelope_bounds_rect(x0, y0, x1, y1)")
-  override def inputTypes: Seq[DataType] = Seq.fill(4)(DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("xmin", DoubleType, nullable = false),
-    StructField("ymin", DoubleType, nullable = false),
-    StructField("xmax", DoubleType, nullable = false),
-    StructField("ymax", DoubleType, nullable = false)))
+  protected def sqlName: String = "st_envelope_bounds_rect"
+  protected def args: Seq[Arg[_]] = Seq.fill(4)(Arg.F64)
+  protected def resultType: DataType = BoundsType
   override def nullable: Boolean = true
-  override def prettyName: String = "st_envelope_bounds_rect"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+  override def eval(input: InternalRow): Any = {
     val vs = children.map(_.eval(input))
     if (vs.contains(null)) return null
     val Seq(x0, y0, x1, y1) = vs.map(_.asInstanceOf[Double])
@@ -513,8 +508,7 @@ case class StEnvelopeBoundsRect(children: Seq[Expression])
     if (y1 < miny) miny = y1
     if (y1 > maxy) maxy = y1
     if (maxx < minx) null // Envelope.isNull, unreachable for real corners
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](minx, miny, maxx, maxy))
+    else new GenericInternalRow(Array[Any](minx, miny, maxx, maxy))
   }
   override protected def withNewChildrenInternal(
       cs: IndexedSeq[Expression]): StEnvelopeBoundsRect = copy(children = cs)
@@ -528,86 +522,54 @@ case class StEnvelopeBoundsRect(children: Seq[Expression])
   * the NaN struct. This form reproduces that exactly: NULL when either
   * ordinate is NULL or NaN, else (x, y, x, y). */
 case class StEnvelopeBoundsPoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("xmin", DoubleType, nullable = false),
-    StructField("ymin", DoubleType, nullable = false),
-    StructField("xmax", DoubleType, nullable = false),
-    StructField("ymax", DoubleType, nullable = false)))
+    extends StBinary[Double, Double]("st_envelope_bounds_point", BoundsType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_envelope_bounds_point"
-  override protected def nullSafeEval(xv: Any, yv: Any): Any = {
-    val x = xv.asInstanceOf[Double]
-    val y = yv.asInstanceOf[Double]
+  protected def op(x: Double, y: Double): Any =
     if (java.lang.Double.isNaN(x) || java.lang.Double.isNaN(y)) null
-    else new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](x, y, x, y))
-  }
+    else new GenericInternalRow(Array[Any](x, y, x, y))
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): StEnvelopeBoundsPoint = copy(left = l, right = r)
 }
 
 /** X of a non-empty Point; null otherwise (PostGIS/Sedona ST_X semantics). */
-case class StX(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
+case class StX(child: Expression) extends StUnary[Geometry]("st_x", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_x"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Point if !p.isEmpty => p.getX
+  protected def op(g: Geometry): Any = g match {
+    case p: Point if !p.isEmpty => p.getX
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StX = copy(child = c)
 }
 
 /** Y of a non-empty Point; null otherwise (PostGIS/Sedona ST_Y semantics). */
-case class StY(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
+case class StY(child: Expression) extends StUnary[Geometry]("st_y", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_y"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Point if !p.isEmpty => p.getY
+  protected def op(g: Geometry): Any = g match {
+    case p: Point if !p.isEmpty => p.getY
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StY = copy(child = c)
 }
 
-case class StIsValid(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "st_isvalid"
-  override protected def nullSafeEval(v: Any): Any = geom(v).isValid
+case class StIsValid(child: Expression) extends StUnary[Geometry]("st_isvalid", BooleanType) {
+  protected def op(g: Geometry): Any = g.isValid
   override protected def withNewChildInternal(c: Expression): StIsValid = copy(child = c)
 }
 
-case class StIntersects(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_intersects"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).intersects(geom(b))
+case class StIntersects(left: Expression, right: Expression) extends StPredicate("st_intersects") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.intersects(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersects =
     copy(left = l, right = r)
 }
 
-case class StContains(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_contains"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).contains(geom(b))
+case class StContains(left: Expression, right: Expression) extends StPredicate("st_contains") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.contains(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StContains =
     copy(left = l, right = r)
 }
 
-case class StWithin(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_within"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).within(geom(b))
+case class StWithin(left: Expression, right: Expression) extends StPredicate("st_within") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.within(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StWithin =
     copy(left = l, right = r)
 }
@@ -620,77 +582,53 @@ case class StWithin(left: Expression, right: Expression)
   * engines they mirror register them. Covers/CoveredBy are the
   * boundary-inclusive contains/within (a polygon COVERS its own edge
   * points; it does not CONTAIN them — the classic DE-9IM trap). */
-case class StTouches(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_touches"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).touches(geom(b))
+case class StTouches(left: Expression, right: Expression) extends StPredicate("st_touches") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.touches(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StTouches =
     copy(left = l, right = r)
 }
 
-case class StCrosses(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_crosses"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).crosses(geom(b))
+case class StCrosses(left: Expression, right: Expression) extends StPredicate("st_crosses") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.crosses(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StCrosses =
     copy(left = l, right = r)
 }
 
-case class StOverlaps(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_overlaps"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).overlaps(geom(b))
+case class StOverlaps(left: Expression, right: Expression) extends StPredicate("st_overlaps") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.overlaps(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StOverlaps =
     copy(left = l, right = r)
 }
 
-case class StDisjoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_disjoint"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).disjoint(geom(b))
+case class StDisjoint(left: Expression, right: Expression) extends StPredicate("st_disjoint") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.disjoint(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StDisjoint =
     copy(left = l, right = r)
 }
 
-case class StEquals(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_equals"
+case class StEquals(left: Expression, right: Expression) extends StPredicate("st_equals") {
   /** Topological equality (equalsTopo — same point set, any vertex
     * order/start), not coordinate-list equality. */
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).equalsTopo(geom(b))
+  protected def op(a: Geometry, b: Geometry): Boolean = a.equalsTopo(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StEquals =
     copy(left = l, right = r)
 }
 
-case class StCovers(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_covers"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).covers(geom(b))
+case class StCovers(left: Expression, right: Expression) extends StPredicate("st_covers") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.covers(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StCovers =
     copy(left = l, right = r)
 }
 
-case class StCoveredBy(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def prettyName: String = "st_coveredby"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).coveredBy(geom(b))
+case class StCoveredBy(left: Expression, right: Expression) extends StPredicate("st_coveredby") {
+  protected def op(a: Geometry, b: Geometry): Boolean = a.coveredBy(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StCoveredBy =
     copy(left = l, right = r)
 }
 
 case class StDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_distance"
-  override protected def nullSafeEval(a: Any, b: Any): Any = geom(a).distance(geom(b))
+    extends StBinary[Geometry, Geometry]("st_distance", DoubleType) {
+  protected def op(a: Geometry, b: Geometry): Any = a.distance(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StDistance =
     copy(left = l, right = r)
 }
@@ -711,14 +649,10 @@ case class StDistance(left: Expression, right: Expression)
   * verbatim by the DuckDB oracle arithmetic — last-ulp libm drift is
   * absorbed by the ROUND(·,1) boundary law at the query layer. */
 case class StDistanceSphere(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_distance_sphere", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_distance_sphere"
-  override protected def nullSafeEval(a: Any, b: Any): Any = (geom(a), geom(b)) match {
-    case (p: org.locationtech.jts.geom.Point, q: org.locationtech.jts.geom.Point)
-        if !p.isEmpty && !q.isEmpty =>
+  protected def op(a: Geometry, b: Geometry): Any = (a, b) match {
+    case (p: Point, q: Point) if !p.isEmpty && !q.isEmpty =>
       StDistanceSphere.haversineMeters(p.getX, p.getY, q.getX, q.getY)
     case _ => null
   }
@@ -749,14 +683,10 @@ case class StDistanceSphere(left: Expression, right: Expression)
   * Non-point or empty-point input returns null; coincident points short-
   * circuit to 0 (the ω→0 limit, avoiding its 0/0). */
 case class StDistanceSpheroid(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_distance_spheroid", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_distance_spheroid"
-  override protected def nullSafeEval(a: Any, b: Any): Any = (geom(a), geom(b)) match {
-    case (p: org.locationtech.jts.geom.Point, q: org.locationtech.jts.geom.Point)
-        if !p.isEmpty && !q.isEmpty =>
+  protected def op(a: Geometry, b: Geometry): Any = (a, b) match {
+    case (p: Point, q: Point) if !p.isEmpty && !q.isEmpty =>
       StDistanceSpheroid.andoyerMeters(p.getX, p.getY, q.getX, q.getY)
     case _ => null
   }
@@ -826,14 +756,10 @@ object StDistanceSpheroid {
   * Non-point or empty-point input returns null; coincident points
   * short-circuit to 0 through the sinσ = 0 guard. */
 case class StDistanceGeodesic(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_distance_geodesic", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_distance_geodesic"
-  override protected def nullSafeEval(a: Any, b: Any): Any = (geom(a), geom(b)) match {
-    case (p: org.locationtech.jts.geom.Point, q: org.locationtech.jts.geom.Point)
-        if !p.isEmpty && !q.isEmpty =>
+  protected def op(a: Geometry, b: Geometry): Any = (a, b) match {
+    case (p: Point, q: Point) if !p.isEmpty && !q.isEmpty =>
       StDistanceGeodesic.vincentyMeters(p.getX, p.getY, q.getX, q.getY)
     case _ => null
   }
@@ -943,21 +869,15 @@ object StDistanceSphere {
   * edge-chord approximation every C-D consumer accepts. Non-areal or
   * empty input returns null. Operation order is mirrored verbatim by the
   * DuckDB oracle under the ROUND(·,1) boundary law. */
-case class StAreaSphere(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
+case class StAreaSphere(child: Expression) extends StUnary[Geometry]("st_area_sphere", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_area_sphere"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Polygon if !p.isEmpty =>
-      StAreaSphere.polygonAreaM2(p)
-    case mp: org.locationtech.jts.geom.MultiPolygon if !mp.isEmpty =>
+  protected def op(g: Geometry): Any = g match {
+    case p: Polygon if !p.isEmpty => StAreaSphere.polygonAreaM2(p)
+    case mp: MultiPolygon if !mp.isEmpty =>
       var a = 0.0
       var i = 0
       while (i < mp.getNumGeometries) {
-        a += StAreaSphere.polygonAreaM2(
-          mp.getGeometryN(i).asInstanceOf[org.locationtech.jts.geom.Polygon])
+        a += StAreaSphere.polygonAreaM2(mp.getGeometryN(i).asInstanceOf[Polygon])
         i += 1
       }
       a
@@ -967,7 +887,7 @@ case class StAreaSphere(child: Expression)
 }
 
 object StAreaSphere {
-  private def ringAreaM2(ring: org.locationtech.jts.geom.LineString): Double = {
+  private def ringAreaM2(ring: LineString): Double = {
     val cs = ring.getCoordinateSequence
     var total = 0.0
     var i = 0
@@ -983,7 +903,7 @@ object StAreaSphere {
     Math.abs(total) * r * r / 2
   }
 
-  def polygonAreaM2(p: org.locationtech.jts.geom.Polygon): Double = {
+  def polygonAreaM2(p: Polygon): Double = {
     var a = ringAreaM2(p.getExteriorRing)
     var i = 0
     while (i < p.getNumInteriorRing) {
@@ -1006,31 +926,26 @@ object StAreaSphere {
   * order is vertex order, mirrored verbatim by the DuckDB oracle under
   * the ROUND boundary law. */
 case class StLengthSphere(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StUnary[Geometry]("st_length_sphere", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_length_sphere"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case l: org.locationtech.jts.geom.LineString if !l.isEmpty =>
-      StLengthSphere.lineLengthM(l)
-    case ml: org.locationtech.jts.geom.MultiLineString if !ml.isEmpty =>
+  protected def op(g: Geometry): Any = g match {
+    case l: LineString if !l.isEmpty => StLengthSphere.lineLengthM(l)
+    case ml: MultiLineString if !ml.isEmpty =>
       var total = 0.0
       var i = 0
       while (i < ml.getNumGeometries) {
-        total += StLengthSphere.lineLengthM(
-          ml.getGeometryN(i).asInstanceOf[org.locationtech.jts.geom.LineString])
+        total += StLengthSphere.lineLengthM(ml.getGeometryN(i).asInstanceOf[LineString])
         i += 1
       }
       total
-    case p: org.locationtech.jts.geom.Point if !p.isEmpty => 0.0
+    case p: Point if !p.isEmpty => 0.0
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StLengthSphere = copy(child = c)
 }
 
 object StLengthSphere {
-  def lineLengthM(l: org.locationtech.jts.geom.LineString): Double = {
+  def lineLengthM(l: LineString): Double = {
     val cs = l.getCoordinateSequence
     var total = 0.0
     var i = 0
@@ -1049,11 +964,8 @@ object StLengthSphere {
   * condition and plan the broadcast R-tree operator with envelope
   * expansion instead of a nested-loop distance join. */
 case class StDWithin(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, DoubleType)
-  override def prettyName: String = "st_dwithin"
-  override protected def nullSafeEval(a: Any, b: Any, d: Any): Any =
-    geom(a).isWithinDistance(geom(b), d.asInstanceOf[Double])
+    extends StTernary[Geometry, Geometry, Double]("st_dwithin", BooleanType) with Predicate {
+  protected def op(a: Geometry, b: Geometry, d: Double): Any = a.isWithinDistance(b, d)
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StDWithin =
     copy(first = a, second = b, third = c)
 }
@@ -1061,11 +973,7 @@ case class StDWithin(first: Expression, second: Expression, third: Expression)
 /** Vertex-wise CRS reprojection. CRS args are usually foldable literals —
   * the point-transform closure is resolved once and cached. */
 case class StTransform(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, StringType, StringType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_transform"
-
+    extends StTernary[Geometry, UTF8String, UTF8String]("st_transform", BinaryType) {
   @transient private lazy val foldedTransform: Option[(Double, Double) => (Double, Double)] =
     if (second.foldable && third.foldable) {
       val s = second.eval().asInstanceOf[UTF8String].toString
@@ -1073,23 +981,8 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
       Some(Crs.pointTransform(s, d))
     } else None
 
-  override protected def nullSafeEval(g: Any, src: Any, dst: Any): Any = {
-    val f = foldedTransform.getOrElse(
-      Crs.pointTransform(src.asInstanceOf[UTF8String].toString, dst.asInstanceOf[UTF8String].toString))
-    val in = geom(g)
-    val out = in.copy()
-    out.apply(new org.locationtech.jts.geom.CoordinateSequenceFilter {
-      override def filter(seq: org.locationtech.jts.geom.CoordinateSequence, i: Int): Unit = {
-        val (x, y) = f(seq.getX(i), seq.getY(i))
-        seq.setOrdinate(i, 0, x)
-        seq.setOrdinate(i, 1, y)
-      }
-      override def isDone: Boolean = false
-      override def isGeometryChanged: Boolean = true
-    })
-    out.geometryChanged()
-    wkb(out)
-  }
+  protected def op(g: Geometry, src: UTF8String, dst: UTF8String): Any =
+    Geom.mapVertices(g)(foldedTransform.getOrElse(Crs.pointTransform(src.toString, dst.toString)))
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StTransform =
     copy(first = a, second = b, third = c)
 }
@@ -1100,14 +993,11 @@ case class StTransform(first: Expression, second: Expression, third: Expression)
   * neighbours, and a cell predicate becomes a string prefix range. Null
   * for non-point or empty geometry (Sedona semantics: points only). */
 case class StGeoHash(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = StringType
+    extends StBinary[Geometry, Int]("st_geohash", StringType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_geohash"
-  override protected def nullSafeEval(g: Any, p: Any): Any = geom(g) match {
-    case pt: org.locationtech.jts.geom.Point if !pt.isEmpty =>
-      UTF8String.fromString(graft.geom.Geohash.encode(pt.getX, pt.getY, p.asInstanceOf[Int]))
+  protected def op(g: Geometry, precision: Int): Any = g match {
+    case pt: Point if !pt.isEmpty =>
+      UTF8String.fromString(graft.geom.Geohash.encode(pt.getX, pt.getY, precision))
     case _ => null
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StGeoHash =
@@ -1119,30 +1009,25 @@ case class StGeoHash(left: Expression, right: Expression)
   * trajectory constructor: `collect_list(point) over (order by ts)` or
   * `array_agg` feeds it per-key without any driver-side geometry work.
   * Null on fewer than 2 points or a non-point element. */
-case class StMakeLine(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(BinaryType))
-  override def dataType: DataType = BinaryType
+case class StMakeLine(child: Expression) extends StUnary[ArrayData]("st_makeline", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_makeline"
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  protected def op(arr: ArrayData): Any = {
     val n = arr.numElements()
     if (n < 2) null
     else {
-      val coords = new Array[org.locationtech.jts.geom.Coordinate](n)
+      val coords = new Array[Coordinate](n)
       var i = 0
       var ok = true
       while (ok && i < n) {
         if (arr.isNullAt(i)) ok = false
-        else geom(arr.getBinary(i)) match {
-          case p: org.locationtech.jts.geom.Point if !p.isEmpty =>
-            coords(i) = new org.locationtech.jts.geom.Coordinate(p.getX, p.getY)
+        else Geom.fromWkbCached(arr.getBinary(i)) match {
+          case p: Point if !p.isEmpty =>
+            coords(i) = new Coordinate(p.getX, p.getY)
             i += 1
           case _ => ok = false
         }
       }
-      if (!ok) null else wkb(Geom.factory.createLineString(coords))
+      if (!ok) null else Geom.factory.createLineString(coords)
     }
   }
   override protected def withNewChildInternal(c: Expression): StMakeLine = copy(child = c)
@@ -1153,69 +1038,46 @@ case class StMakeLine(child: Expression)
   * the vertex-thinning pass that makes 100 TB of dense trajectories /
   * high-resolution boundaries cheap to index and join). */
 case class StSimplify(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_simplify"
-  override protected def nullSafeEval(g: Any, tol: Any): Any =
-    wkb(org.locationtech.jts.simplify.DouglasPeuckerSimplifier.simplify(
-      geom(g), tol.asInstanceOf[Double]))
+    extends StBinary[Geometry, Double]("st_simplify", BinaryType) {
+  protected def op(g: Geometry, tol: Double): Any =
+    org.locationtech.jts.simplify.DouglasPeuckerSimplifier.simplify(g, tol)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StSimplify =
     copy(left = l, right = r)
 }
 
 /** st_convexhull(geom) — convex hull (Sedona `ST_ConvexHull`). */
-case class StConvexHull(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_convexhull"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).convexHull())
+case class StConvexHull(child: Expression) extends StUnary[Geometry]("st_convexhull", BinaryType) {
+  protected def op(g: Geometry): Any = g.convexHull()
   override protected def withNewChildInternal(c: Expression): StConvexHull = copy(child = c)
 }
 
 /** st_npoints(geom) — total vertex count (PostGIS/Sedona ST_NPoints). */
-case class StNPoints(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "st_npoints"
-  override protected def nullSafeEval(v: Any): Any = geom(v).getNumPoints
+case class StNPoints(child: Expression) extends StUnary[Geometry]("st_npoints", IntegerType) {
+  protected def op(g: Geometry): Any = g.getNumPoints
   override protected def withNewChildInternal(c: Expression): StNPoints = copy(child = c)
 }
 
 /** st_geometrytype(geom) — `"ST_Polygon"`-style type tag (Sedona/PostGIS
   * `ST_GeometryType` convention: the `ST_` prefix on the JTS type name). */
 case class StGeometryType(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "st_geometrytype"
-  override protected def nullSafeEval(v: Any): Any =
-    UTF8String.fromString("ST_" + geom(v).getGeometryType)
+    extends StUnary[Geometry]("st_geometrytype", StringType) {
+  protected def op(g: Geometry): Any = UTF8String.fromString("ST_" + g.getGeometryType)
   override protected def withNewChildInternal(c: Expression): StGeometryType = copy(child = c)
 }
 
 /** st_numgeometries(geom) — component count (1 for atomic geometries,
   * part count for multi-geometries/collections — Sedona `ST_NumGeometries`). */
 case class StNumGeometries(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "st_numgeometries"
-  override protected def nullSafeEval(v: Any): Any = geom(v).getNumGeometries
+    extends StUnary[Geometry]("st_numgeometries", IntegerType) {
+  protected def op(g: Geometry): Any = g.getNumGeometries
   override protected def withNewChildInternal(c: Expression): StNumGeometries = copy(child = c)
 }
 
 /** st_boundary(geom) — topological boundary (Sedona/PostGIS `ST_Boundary`):
   * polygon -> ring linework, linestring -> endpoint multipoint, point ->
   * empty. Composes with [[StLength]] for ring-length audits. */
-case class StBoundary(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_boundary"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).getBoundary)
+case class StBoundary(child: Expression) extends StUnary[Geometry]("st_boundary", BinaryType) {
+  protected def op(g: Geometry): Any = g.getBoundary
   override protected def withNewChildInternal(c: Expression): StBoundary = copy(child = c)
 }
 
@@ -1225,11 +1087,8 @@ case class StBoundary(child: Expression)
   * rectangle this is its center, which is what the closed-form oracle
   * replays. */
 case class StPointOnSurface(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_pointonsurface"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).getInteriorPoint)
+    extends StUnary[Geometry]("st_pointonsurface", BinaryType) {
+  protected def op(g: Geometry): Any = g.getInteriorPoint
   override protected def withNewChildInternal(c: Expression): StPointOnSurface = copy(child = c)
 }
 
@@ -1238,17 +1097,12 @@ case class StPointOnSurface(child: Expression)
   * For an axis-aligned rectangle vs an outside point this is the clamp of
   * the point to the rectangle — the closed form the oracle replays. */
 case class StClosestPoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Geometry]("st_closestpoint", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_closestpoint"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ga, gb) = (geom(a), geom(b))
-    if (ga.isEmpty || gb.isEmpty) null
-    else wkb(Geom.factory.createPoint(
-      org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(ga, gb)(0)))
-  }
+  protected def op(a: Geometry, b: Geometry): Any =
+    if (a.isEmpty || b.isEmpty) null
+    else Geom.factory.createPoint(
+      org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(a, b)(0))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StClosestPoint =
     copy(left = l, right = r)
 }
@@ -1257,14 +1111,10 @@ case class StClosestPoint(left: Expression, right: Expression)
   * PostGIS `ST_Perimeter`): exterior + interior rings for polygons, summed
   * over multipolygon parts; 0 for points and lines (the PostGIS contract —
   * use st_length for linear measure). */
-case class StPerimeter(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_perimeter"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Polygon => p.getLength
-    case mp: org.locationtech.jts.geom.MultiPolygon => mp.getLength
+case class StPerimeter(child: Expression) extends StUnary[Geometry]("st_perimeter", DoubleType) {
+  protected def op(g: Geometry): Any = g match {
+    case p: Polygon => p.getLength
+    case mp: MultiPolygon => mp.getLength
     case _ => 0.0
   }
   override protected def withNewChildInternal(c: Expression): StPerimeter = copy(child = c)
@@ -1273,36 +1123,16 @@ case class StPerimeter(child: Expression)
 /** st_flipcoordinates(geom) — swap x/y on every vertex (Sedona
   * `ST_FlipCoordinates`, the standard lat/lon-vs-lon/lat repair). */
 case class StFlipCoordinates(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_flipcoordinates"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v).copy()
-    g.apply(new org.locationtech.jts.geom.CoordinateSequenceFilter {
-      override def filter(seq: org.locationtech.jts.geom.CoordinateSequence, i: Int): Unit = {
-        val x = seq.getX(i)
-        seq.setOrdinate(i, 0, seq.getY(i))
-        seq.setOrdinate(i, 1, x)
-      }
-      override def isDone: Boolean = false
-      override def isGeometryChanged: Boolean = true
-    })
-    g.geometryChanged()
-    wkb(g)
-  }
+    extends StUnary[Geometry]("st_flipcoordinates", BinaryType) {
+  protected def op(g: Geometry): Any = Geom.mapVertices(g)((x, y) => (y, x))
   override protected def withNewChildInternal(c: Expression): StFlipCoordinates = copy(child = c)
 }
 
 /** st_reverse(geom) — reverse vertex order of every component (Sedona
   * `ST_Reverse`; orientation-sensitive consumers like st_azimuth paths
   * and ring-winding conventions need it). */
-case class StReverse(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_reverse"
-  override protected def nullSafeEval(v: Any): Any = wkb(geom(v).reverse())
+case class StReverse(child: Expression) extends StUnary[Geometry]("st_reverse", BinaryType) {
+  protected def op(g: Geometry): Any = g.reverse()
   override protected def withNewChildInternal(c: Expression): StReverse = copy(child = c)
 }
 
@@ -1313,17 +1143,10 @@ case class StReverse(child: Expression)
   * [[StCollect]]∘collect_list). Nested collections are dumped one level,
   * matching JTS getGeometryN. */
 case class StDump(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override def prettyName: String = "st_dump"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v)
-    val out = new Array[Any](g.getNumGeometries)
-    var i = 0
-    while (i < g.getNumGeometries) { out(i) = wkb(g.getGeometryN(i)); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+    extends StUnary[Geometry]("st_dump", ArrayType(BinaryType, containsNull = false)) {
+  protected def op(g: Geometry): Any =
+    new GenericArrayData(Array.tabulate[Any](g.getNumGeometries)(i =>
+      Geom.toWkb(g.getGeometryN(i))))
   override protected def withNewChildInternal(c: Expression): StDump = copy(child = c)
 }
 
@@ -1332,18 +1155,16 @@ case class StDump(child: Expression)
   * the input is validated (malformed bytes throw, exactly like a
   * malformed WKT in [[StGeomFromWKT]]) and re-emitted in the engine's
   * canonical encoding, so downstream equality/hashing never sees
-  * byte-order or envelope-flag variants of the same geometry. */
+  * byte-order or envelope-flag variants of the same geometry. The
+  * argument stays WKB so the error can quote it. */
 case class StGeomFromWKB(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_geomfromwkb"
-  override protected def nullSafeEval(v: Any): Any =
-    try wkb(geom(v))
+    extends StUnary[Array[Byte]]("st_geomfromwkb", BinaryType) {
+  protected def op(b: Array[Byte]): Any =
+    try Geom.fromWkbCached(b)
     catch {
       case e: ParseException =>
         // one byte past the 64 quoted hex digits, so a longer input shows as cut
-        val hex = v.asInstanceOf[Array[Byte]].iterator.take(33).map(b => f"${b & 0xff}%02x").mkString
+        val hex = b.iterator.take(33).map(x => f"${x & 0xff}%02x").mkString
         throw malformedGeometry(prettyName, hex, e)
     }
   override protected def withNewChildInternal(c: Expression): StGeomFromWKB = copy(child = c)
@@ -1352,12 +1173,8 @@ case class StGeomFromWKB(child: Expression)
 /** st_aswkb(g) — the canonical WKB bytes of a geometry (the identity on
   * the internal representation, published as an explicit export so user
   * schemas can declare interop intent; PostGIS `ST_AsBinary`). */
-case class StAsWKB(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_aswkb"
-  override protected def nullSafeEval(v: Any): Any = v
+case class StAsWKB(child: Expression) extends StUnary[Array[Byte]]("st_aswkb", BinaryType) {
+  protected def op(b: Array[Byte]): Any = b
   override protected def withNewChildInternal(c: Expression): StAsWKB = copy(child = c)
 }
 
@@ -1369,86 +1186,60 @@ case class StAsWKB(child: Expression)
   * to polygons. Point indexes are 1-based, negative counts from the end
   * (the Sedona ST_PointN extension). */
 case class StIsEmpty(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback with Predicate {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def prettyName: String = "st_isempty"
-  override protected def nullSafeEval(v: Any): Any = geom(v).isEmpty
+    extends StUnary[Geometry]("st_isempty", BooleanType) with Predicate {
+  protected def op(g: Geometry): Any = g.isEmpty
   override protected def withNewChildInternal(c: Expression): StIsEmpty = copy(child = c)
 }
 
-case class StDimension(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "st_dimension"
-  override protected def nullSafeEval(v: Any): Any = geom(v).getDimension
+case class StDimension(child: Expression) extends StUnary[Geometry]("st_dimension", IntegerType) {
+  protected def op(g: Geometry): Any = g.getDimension
   override protected def withNewChildInternal(c: Expression): StDimension = copy(child = c)
 }
 
-case class StIsClosed(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BooleanType
+case class StIsClosed(child: Expression) extends StUnary[Geometry]("st_isclosed", BooleanType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_isclosed"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case l: org.locationtech.jts.geom.LineString => l.isClosed
-    case m: org.locationtech.jts.geom.MultiLineString => m.isClosed
+  protected def op(g: Geometry): Any = g match {
+    case l: LineString => l.isClosed
+    case m: MultiLineString => m.isClosed
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StIsClosed = copy(child = c)
 }
 
-case class StIsRing(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BooleanType
+case class StIsRing(child: Expression) extends StUnary[Geometry]("st_isring", BooleanType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_isring"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case l: org.locationtech.jts.geom.LineString => l.isRing
+  protected def op(g: Geometry): Any = g match {
+    case l: LineString => l.isRing
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StIsRing = copy(child = c)
 }
 
-case class StStartPoint(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
+case class StStartPoint(child: Expression) extends StUnary[Geometry]("st_startpoint", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_startpoint"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case l: org.locationtech.jts.geom.LineString if !l.isEmpty => wkb(l.getStartPoint)
+  protected def op(g: Geometry): Any = g match {
+    case l: LineString if !l.isEmpty => l.getStartPoint
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StStartPoint = copy(child = c)
 }
 
-case class StEndPoint(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
+case class StEndPoint(child: Expression) extends StUnary[Geometry]("st_endpoint", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_endpoint"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case l: org.locationtech.jts.geom.LineString if !l.isEmpty => wkb(l.getEndPoint)
+  protected def op(g: Geometry): Any = g match {
+    case l: LineString if !l.isEmpty => l.getEndPoint
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StEndPoint = copy(child = c)
 }
 
 case class StPointN(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Int]("st_pointn", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_pointn"
-  override protected def nullSafeEval(g: Any, n: Any): Any = geom(g) match {
-    case l: org.locationtech.jts.geom.LineString =>
-      val i0 = n.asInstanceOf[Int]
-      val i = if (i0 < 0) l.getNumPoints + i0 else i0 - 1
-      if (i < 0 || i >= l.getNumPoints) null else wkb(l.getPointN(i))
+  protected def op(g: Geometry, n: Int): Any = g match {
+    case l: LineString =>
+      val i = if (n < 0) l.getNumPoints + n else n - 1
+      if (i < 0 || i >= l.getNumPoints) null else l.getPointN(i)
     case _ => null
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StPointN =
@@ -1456,41 +1247,32 @@ case class StPointN(left: Expression, right: Expression)
 }
 
 case class StExteriorRing(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
+    extends StUnary[Geometry]("st_exteriorring", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_exteriorring"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Polygon => wkb(p.getExteriorRing)
+  protected def op(g: Geometry): Any = g match {
+    case p: Polygon => p.getExteriorRing
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StExteriorRing = copy(child = c)
 }
 
 case class StNumInteriorRings(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = IntegerType
+    extends StUnary[Geometry]("st_numinteriorrings", IntegerType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_numinteriorrings"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case p: org.locationtech.jts.geom.Polygon => p.getNumInteriorRing
+  protected def op(g: Geometry): Any = g match {
+    case p: Polygon => p.getNumInteriorRing
     case _ => null
   }
   override protected def withNewChildInternal(c: Expression): StNumInteriorRings = copy(child = c)
 }
 
 case class StInteriorRingN(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Int]("st_interiorringn", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_interiorringn"
-  override protected def nullSafeEval(g: Any, n: Any): Any = geom(g) match {
-    case p: org.locationtech.jts.geom.Polygon =>
-      val i = n.asInstanceOf[Int] - 1
-      if (i < 0 || i >= p.getNumInteriorRing) null else wkb(p.getInteriorRingN(i))
+  protected def op(g: Geometry, n: Int): Any = g match {
+    case p: Polygon =>
+      val i = n - 1
+      if (i < 0 || i >= p.getNumInteriorRing) null else p.getInteriorRingN(i)
     case _ => null
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StInteriorRingN =
@@ -1505,13 +1287,9 @@ case class StInteriorRingN(left: Expression, right: Expression)
   * whose true Hausdorff pairing happens at vertices (e.g. congruent
   * axis-aligned translates, the q_geom_toolbox device). */
 case class StHausdorffDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "st_hausdorffdistance"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    org.locationtech.jts.algorithm.distance.DiscreteHausdorffDistance
-      .distance(geom(a), geom(b))
+    extends StBinary[Geometry, Geometry]("st_hausdorffdistance", DoubleType) {
+  protected def op(a: Geometry, b: Geometry): Any =
+    org.locationtech.jts.algorithm.distance.DiscreteHausdorffDistance.distance(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StHausdorffDistance =
     copy(left = l, right = r)
 }
@@ -1528,16 +1306,11 @@ case class StHausdorffDistance(left: Expression, right: Expression)
   * coupling achieves that max, so DF(A, A+t) = |t|. Null for an empty
   * input. */
 case class StFrechetDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StBinary[Geometry, Geometry]("st_frechetdistance", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_frechetdistance"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ga, gb) = (geom(a), geom(b))
-    if (ga.isEmpty || gb.isEmpty) null
-    else org.locationtech.jts.algorithm.distance.DiscreteFrechetDistance.distance(ga, gb)
-  }
+  protected def op(a: Geometry, b: Geometry): Any =
+    if (a.isEmpty || b.isEmpty) null
+    else org.locationtech.jts.algorithm.distance.DiscreteFrechetDistance.distance(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StFrechetDistance =
     copy(left = l, right = r)
 }
@@ -1548,19 +1321,14 @@ case class StFrechetDistance(left: Expression, right: Expression)
   * distance predicate — st_closestpoint is its start point. Degenerate
   * (zero-length) when the inputs intersect; null for an empty input. */
 case class StShortestLine(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Geometry]("st_shortestline", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_shortestline"
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ga, gb) = (geom(a), geom(b))
-    if (ga.isEmpty || gb.isEmpty) null
+  protected def op(a: Geometry, b: Geometry): Any =
+    if (a.isEmpty || b.isEmpty) null
     else {
-      val pts = org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(ga, gb)
-      wkb(Geom.factory.createLineString(Array(pts(0), pts(1))))
+      val pts = org.locationtech.jts.operation.distance.DistanceOp.nearestPoints(a, b)
+      Geom.factory.createLineString(Array(pts(0), pts(1)))
     }
-  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StShortestLine =
     copy(left = l, right = r)
 }
@@ -1575,16 +1343,11 @@ case class StShortestLine(left: Expression, right: Expression)
   * Degenerates to the geometry's own point/segment for 0/1-D extents;
   * null for empty input. */
 case class StMinimumRotatedRectangle(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
+    extends StUnary[Geometry]("st_minimumrotatedrectangle", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_minimumrotatedrectangle"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v)
+  protected def op(g: Geometry): Any =
     if (g.isEmpty) null
-    else wkb(org.locationtech.jts.algorithm.MinimumAreaRectangle.getMinimumRectangle(g))
-  }
+    else org.locationtech.jts.algorithm.MinimumAreaRectangle.getMinimumRectangle(g)
   override protected def withNewChildInternal(c: Expression): StMinimumRotatedRectangle =
     copy(child = c)
 }
@@ -1597,16 +1360,11 @@ case class StMinimumRotatedRectangle(child: Expression)
   * filter sliver polygons whose area is fine but whose width is
   * degenerate. Null for empty input. */
 case class StMinimumDiameter(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StUnary[Geometry]("st_minimumdiameter", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_minimumdiameter"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v)
+  protected def op(g: Geometry): Any =
     if (g.isEmpty) null
     else new org.locationtech.jts.algorithm.MinimumDiameter(g).getLength
-  }
   override protected def withNewChildInternal(c: Expression): StMinimumDiameter =
     copy(child = c)
 }
@@ -1618,20 +1376,14 @@ case class StMinimumDiameter(child: Expression)
   * itself, which is what turn-detection and polygon-quality checks
   * consume). Null for empty or non-point input. */
 case class StAngle(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
+    extends StTernary[Geometry, Geometry, Geometry]("st_angle", DoubleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_angle"
-  override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-    (geom(a), geom(b), geom(c)) match {
-      case (p1: org.locationtech.jts.geom.Point, p2: org.locationtech.jts.geom.Point,
-            p3: org.locationtech.jts.geom.Point)
-          if !p1.isEmpty && !p2.isEmpty && !p3.isEmpty =>
-        org.locationtech.jts.algorithm.Angle.angleBetween(
-          p1.getCoordinate, p2.getCoordinate, p3.getCoordinate)
-      case _ => null
-    }
+  protected def op(a: Geometry, b: Geometry, c: Geometry): Any = (a, b, c) match {
+    case (p1: Point, p2: Point, p3: Point) if !p1.isEmpty && !p2.isEmpty && !p3.isEmpty =>
+      org.locationtech.jts.algorithm.Angle.angleBetween(
+        p1.getCoordinate, p2.getCoordinate, p3.getCoordinate)
+    case _ => null
+  }
   override protected def withNewChildrenInternal(a: Expression, b: Expression,
       c: Expression): StAngle = copy(first = a, second = b, third = c)
 }
@@ -1648,17 +1400,13 @@ case class StAngle(first: Expression, second: Expression, third: Expression)
   * iteration itself can never land on a vertex generically. Null for
   * empty input; a single point returns itself. */
 case class StGeometricMedian(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
+    extends StUnary[Geometry]("st_geometricmedian", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_geometricmedian"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v)
+  protected def op(g: Geometry): Any =
     if (g.isEmpty) null
     else {
       val cs = g.getCoordinates
-      if (cs.length == 1) wkb(Geom.factory.createPoint(cs(0)))
+      if (cs.length == 1) Geom.factory.createPoint(cs(0))
       else {
         // multiplicity-grouped distinct vertices for the VZ certificate,
         // sorted by (x, y) so a degenerate input where several vertices
@@ -1701,10 +1449,9 @@ case class StGeometricMedian(child: Expression)
           }
           (x, y)
         }
-        wkb(Geom.factory.createPoint(new org.locationtech.jts.geom.Coordinate(mx, my)))
+        Geom.factory.createPoint(new Coordinate(mx, my))
       }
     }
-  }
   override protected def withNewChildInternal(c: Expression): StGeometricMedian =
     copy(child = c)
 }
@@ -1715,22 +1462,14 @@ case class StGeometricMedian(child: Expression)
   * search). The scale primitive behind radius-bounded pruning: an
   * object's every point lies within `radius` of `center`. */
 case class StMinimumBoundingRadius(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("center", BinaryType, nullable = false),
-    StructField("radius", DoubleType, nullable = false)))
+    extends StUnary[Geometry]("st_minimumboundingradius", CircleType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_minimumboundingradius"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v)
+  protected def op(g: Geometry): Any =
     if (g.isEmpty) null
     else {
       val mbc = new org.locationtech.jts.algorithm.MinimumBoundingCircle(g)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](wkb(Geom.factory.createPoint(mbc.getCentre)), mbc.getRadius))
+      circle(mbc.getCentre, mbc.getRadius)
     }
-  }
   override protected def withNewChildInternal(c: Expression): StMinimumBoundingRadius =
     copy(child = c)
 }
@@ -1740,19 +1479,14 @@ case class StMinimumBoundingRadius(child: Expression)
   * One merged line comes back as LINESTRING, several as
   * MULTILINESTRING; non-lineal input yields an empty collection
   * (PostGIS convention). */
-case class StLineMerge(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_linemerge"
-  override protected def nullSafeEval(v: Any): Any = {
+case class StLineMerge(child: Expression) extends StUnary[Geometry]("st_linemerge", BinaryType) {
+  protected def op(g: Geometry): Any = {
     val merger = new org.locationtech.jts.operation.linemerge.LineMerger
-    merger.add(geom(v))
+    merger.add(g)
     val merged = merger.getMergedLineStrings
-    if (merged.isEmpty) wkb(Geom.factory.createGeometryCollection())
-    else if (merged.size == 1)
-      wkb(merged.iterator.next().asInstanceOf[Geometry])
-    else wkb(Geom.factory.buildGeometry(merged))
+    if (merged.isEmpty) Geom.factory.createGeometryCollection()
+    else if (merged.size == 1) merged.iterator.next().asInstanceOf[Geometry]
+    else Geom.factory.buildGeometry(merged)
   }
   override protected def withNewChildInternal(c: Expression): StLineMerge = copy(child = c)
 }
@@ -1763,19 +1497,15 @@ case class StLineMerge(child: Expression)
   * the edges close nothing — dangles and cut lines are dropped, the
   * PostGIS convention). Null elements are skipped. */
 case class StPolygonize(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(BinaryType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_polygonize"
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    extends StUnary[ArrayData]("st_polygonize", BinaryType) {
+  protected def op(arr: ArrayData): Any = {
     val p = new org.locationtech.jts.operation.polygonize.Polygonizer
     var i = 0
     while (i < arr.numElements()) {
-      if (!arr.isNullAt(i)) p.add(geom(arr.getBinary(i)))
+      if (!arr.isNullAt(i)) p.add(Geom.fromWkbCached(arr.getBinary(i)))
       i += 1
     }
-    wkb(Geom.factory.buildGeometry(p.getPolygons))
+    Geom.factory.buildGeometry(p.getPolygons)
   }
   override protected def withNewChildInternal(c: Expression): StPolygonize = copy(child = c)
 }
@@ -1786,14 +1516,10 @@ case class StPolygonize(child: Expression)
   * repairs collapses instead of emitting broken rings). The storage/
   * interop primitive behind "centimeter precision is enough" columns. */
 case class StReducePrecision(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_reduceprecision"
-  override protected def nullSafeEval(g: Any, grid: Any): Any =
-    wkb(org.locationtech.jts.precision.GeometryPrecisionReducer.reduce(
-      geom(g), new org.locationtech.jts.geom.PrecisionModel(
-        1.0 / grid.asInstanceOf[Double])))
+    extends StBinary[Geometry, Double]("st_reduceprecision", BinaryType) {
+  protected def op(g: Geometry, grid: Double): Any =
+    org.locationtech.jts.precision.GeometryPrecisionReducer.reduce(
+      g, new org.locationtech.jts.geom.PrecisionModel(1.0 / grid))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StReducePrecision =
     copy(left = l, right = r)
 }
@@ -1803,13 +1529,9 @@ case class StReducePrecision(left: Expression, right: Expression)
   * JTS TopologyPreservingSimplifier), the safe complement of the plain
   * [[StSimplify]]. */
 case class StSimplifyPreserveTopology(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_simplifypreservetopology"
-  override protected def nullSafeEval(g: Any, tol: Any): Any =
-    wkb(org.locationtech.jts.simplify.TopologyPreservingSimplifier
-      .simplify(geom(g), tol.asInstanceOf[Double]))
+    extends StBinary[Geometry, Double]("st_simplifypreservetopology", BinaryType) {
+  protected def op(g: Geometry, tol: Double): Any =
+    org.locationtech.jts.simplify.TopologyPreservingSimplifier.simplify(g, tol)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StSimplifyPreserveTopology =
     copy(left = l, right = r)
 }
@@ -1818,32 +1540,20 @@ case class StSimplifyPreserveTopology(left: Expression, right: Expression)
   * rotated to their minimal vertex, parts ordered): the equality/dedup
   * prep that makes structurally-different encodings of the same shape
   * byte-compare equal after [[StAsText]]/[[StAsWKB]]. */
-case class StNormalize(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_normalize"
-  override protected def nullSafeEval(v: Any): Any = {
-    val g = geom(v).copy(); g.normalize(); wkb(g)
-  }
+case class StNormalize(child: Expression) extends StUnary[Geometry]("st_normalize", BinaryType) {
+  protected def op(g: Geometry): Any = g.norm() // a normalized copy
   override protected def withNewChildInternal(c: Expression): StNormalize = copy(child = c)
 }
 
 /** st_multi(g) — promote a simple geometry to its Multi-type (PostGIS
-  * `ST_Multi`); Multi/collection input passes through unchanged. */
-case class StMulti(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_multi"
-  override protected def nullSafeEval(v: Any): Any = geom(v) match {
-    case g: org.locationtech.jts.geom.Point =>
-      wkb(Geom.factory.createMultiPoint(Array(g)))
-    case g: org.locationtech.jts.geom.LineString =>
-      wkb(Geom.factory.createMultiLineString(Array(g)))
-    case g: org.locationtech.jts.geom.Polygon =>
-      wkb(Geom.factory.createMultiPolygon(Array(g)))
-    case _ => v
+  * `ST_Multi`); Multi/collection input passes through unchanged, as the
+  * WKB bytes it came in. */
+case class StMulti(child: Expression) extends StUnary[Array[Byte]]("st_multi", BinaryType) {
+  protected def op(b: Array[Byte]): Any = Geom.fromWkbCached(b) match {
+    case g: Point => Geom.factory.createMultiPoint(Array(g))
+    case g: LineString => Geom.factory.createMultiLineString(Array(g))
+    case g: Polygon => Geom.factory.createMultiPolygon(Array(g))
+    case _ => b
   }
   override protected def withNewChildInternal(c: Expression): StMulti = copy(child = c)
 }
@@ -1852,15 +1562,11 @@ case class StMulti(child: Expression)
   * `ST_GeometryN`): the random-access companion of [[StDump]]; a simple
   * geometry is its own part 1; out of range → null. */
 case class StGeometryN(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Int]("st_geometryn", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_geometryn"
-  override protected def nullSafeEval(g: Any, n: Any): Any = {
-    val geo = geom(g)
-    val i = n.asInstanceOf[Int] - 1
-    if (i < 0 || i >= geo.getNumGeometries) null else wkb(geo.getGeometryN(i))
+  protected def op(g: Geometry, n: Int): Any = {
+    val i = n - 1
+    if (i < 0 || i >= g.getNumGeometries) null else g.getGeometryN(i)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StGeometryN =
     copy(left = l, right = r)
@@ -1903,14 +1609,11 @@ object HexCell {
   * `ST_DelaunayTriangles` default mode; JTS DelaunayTriangulationBuilder).
   * The triangles partition the convex hull of the sites. */
 case class StDelaunayTriangles(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_delaunaytriangles"
-  override protected def nullSafeEval(v: Any): Any = {
+    extends StUnary[Geometry]("st_delaunaytriangles", BinaryType) {
+  protected def op(g: Geometry): Any = {
     val b = new org.locationtech.jts.triangulate.DelaunayTriangulationBuilder
-    b.setSites(geom(v))
-    wkb(b.getTriangles(Geom.factory))
+    b.setSites(g)
+    b.getTriangles(Geom.factory)
   }
   override protected def withNewChildInternal(c: Expression): StDelaunayTriangles =
     copy(child = c)
@@ -1922,14 +1625,11 @@ case class StDelaunayTriangles(child: Expression)
   * With an explicit extent the cells partition it exactly — the property
   * the q_triangulate oracle checks by area. */
 case class StVoronoiPolygons(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_voronoipolygons"
-  override protected def nullSafeEval(g: Any, extent: Any): Any = {
+    extends StBinary[Geometry, Geometry]("st_voronoipolygons", BinaryType) {
+  protected def op(g: Geometry, extent: Geometry): Any = {
     val b = new org.locationtech.jts.triangulate.VoronoiDiagramBuilder
-    b.setSites(geom(g))
-    val env = geom(extent).getEnvelopeInternal
+    b.setSites(g)
+    val env = extent.getEnvelopeInternal
     b.setClipEnvelope(env)
     // JTS clips cells to the DIAGRAM envelope (sites ∪ clip, expanded);
     // intersecting with the requested extent enforces the PostGIS
@@ -1939,7 +1639,7 @@ case class StVoronoiPolygons(left: Expression, right: Expression)
     val cells = (0 until diag.getNumGeometries)
       .map(i => Geom.safeIntersection(diag.getGeometryN(i), extentGeom))
       .filterNot(_.isEmpty)
-    wkb(Geom.factory.createGeometryCollection(cells.toArray))
+    Geom.factory.createGeometryCollection(cells.toArray)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StVoronoiPolygons =
     copy(left = l, right = r)
@@ -1949,13 +1649,9 @@ case class StVoronoiPolygons(left: Expression, right: Expression)
   * ConcaveHull, the algorithm Sedona/PostGIS expose): ratio 1.0 is the
   * convex hull, smaller ratios hug the points tighter. */
 case class StConcaveHull(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_concavehull"
-  override protected def nullSafeEval(g: Any, ratio: Any): Any =
-    wkb(org.locationtech.jts.algorithm.hull.ConcaveHull
-      .concaveHullByLengthRatio(geom(g), ratio.asInstanceOf[Double]))
+    extends StBinary[Geometry, Double]("st_concavehull", BinaryType) {
+  protected def op(g: Geometry, ratio: Double): Any =
+    org.locationtech.jts.algorithm.hull.ConcaveHull.concaveHullByLengthRatio(g, ratio)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StConcaveHull =
     copy(left = l, right = r)
 }
@@ -1964,45 +1660,29 @@ case class StConcaveHull(left: Expression, right: Expression)
   * tolerance (PostGIS/Sedona `ST_Snap`; JTS GeometrySnapper), the
   * pre-overlay alignment primitive for almost-coincident boundaries. */
 case class StSnap(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_snap"
-  override protected def nullSafeEval(g: Any, target: Any, tol: Any): Any =
-    wkb(new org.locationtech.jts.operation.overlay.snap.GeometrySnapper(geom(g))
-      .snapTo(geom(target), tol.asInstanceOf[Double]))
+    extends StTernary[Geometry, Geometry, Double]("st_snap", BinaryType) {
+  protected def op(g: Geometry, target: Geometry, tol: Double): Any =
+    new org.locationtech.jts.operation.overlay.snap.GeometrySnapper(g).snapTo(target, tol)
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StSnap =
     copy(first = a, second = b, third = c)
 }
 
 /** Affine family (PostGIS/Sedona `ST_Translate` / `ST_Scale` /
   * `ST_Rotate` semantics: scale and rotate are about the ORIGIN, compose
-  * with translate for other anchors), via JTS AffineTransformation on a
-  * copy — inputs are immutable WKB values. */
+  * with translate for other anchors), via JTS
+  * `AffineTransformation.transform`, which maps a copy. */
 case class StTranslate(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_translate"
-  override protected def nullSafeEval(g: Any, dx: Any, dy: Any): Any = {
-    val t = org.locationtech.jts.geom.util.AffineTransformation
-      .translationInstance(dx.asInstanceOf[Double], dy.asInstanceOf[Double])
-    val c = geom(g).copy(); c.apply(t); c.geometryChanged(); wkb(c)
-  }
+    extends StTernary[Geometry, Double, Double]("st_translate", BinaryType) {
+  protected def op(g: Geometry, dx: Double, dy: Double): Any =
+    AffineTransformation.translationInstance(dx, dy).transform(g)
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StTranslate =
     copy(first = a, second = b, third = c)
 }
 
 case class StScale(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_scale"
-  override protected def nullSafeEval(g: Any, fx: Any, fy: Any): Any = {
-    val t = org.locationtech.jts.geom.util.AffineTransformation
-      .scaleInstance(fx.asInstanceOf[Double], fy.asInstanceOf[Double])
-    val c = geom(g).copy(); c.apply(t); c.geometryChanged(); wkb(c)
-  }
+    extends StTernary[Geometry, Double, Double]("st_scale", BinaryType) {
+  protected def op(g: Geometry, fx: Double, fy: Double): Any =
+    AffineTransformation.scaleInstance(fx, fy).transform(g)
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StScale =
     copy(first = a, second = b, third = c)
 }
@@ -2012,15 +1692,9 @@ case class StScale(first: Expression, second: Expression, third: Expression)
   * q_affine oracle mirrors; θ = π/2 leaves ~1e-16-relative residue from
   * cos(π/2) ≈ 6.1e-17, absorbed by the query-layer ROUND funnel). */
 case class StRotate(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "st_rotate"
-  override protected def nullSafeEval(g: Any, theta: Any): Any = {
-    val t = org.locationtech.jts.geom.util.AffineTransformation
-      .rotationInstance(theta.asInstanceOf[Double])
-    val c = geom(g).copy(); c.apply(t); c.geometryChanged(); wkb(c)
-  }
+    extends StBinary[Geometry, Double]("st_rotate", BinaryType) {
+  protected def op(g: Geometry, theta: Double): Any =
+    AffineTransformation.rotationInstance(theta).transform(g)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StRotate =
     copy(left = l, right = r)
 }
@@ -2031,20 +1705,13 @@ case class StRotate(left: Expression, right: Expression)
   * resampling primitive). Null for non-LineString input or `f` outside
   * [0, 1]. */
 case class StLineInterpolatePoint(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = BinaryType
+    extends StBinary[Geometry, Double]("st_lineinterpolatepoint", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_lineinterpolatepoint"
-  override protected def nullSafeEval(g: Any, fv: Any): Any = {
-    val f = fv.asInstanceOf[Double]
-    geom(g) match {
-      case l: org.locationtech.jts.geom.LineString
-          if !l.isEmpty && f >= 0.0 && f <= 1.0 =>
-        val ix = new org.locationtech.jts.linearref.LengthIndexedLine(l)
-        wkb(Geom.factory.createPoint(ix.extractPoint(f * l.getLength)))
-      case _ => null
-    }
+  protected def op(g: Geometry, f: Double): Any = g match {
+    case l: LineString if !l.isEmpty && f >= 0.0 && f <= 1.0 =>
+      val ix = new org.locationtech.jts.linearref.LengthIndexedLine(l)
+      Geom.factory.createPoint(ix.extractPoint(f * l.getLength))
+    case _ => null
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StLineInterpolatePoint =
     copy(left = l, right = r)
@@ -2054,21 +1721,13 @@ case class StLineInterpolatePoint(left: Expression, right: Expression)
   * `f1 <= f2` (Sedona/PostGIS `ST_LineSubstring`). Null for non-LineString
   * input or an invalid fraction pair. */
 case class StLineSubstring(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType, DoubleType)
-  override def dataType: DataType = BinaryType
+    extends StTernary[Geometry, Double, Double]("st_linesubstring", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_linesubstring"
-  override protected def nullSafeEval(g: Any, f1v: Any, f2v: Any): Any = {
-    val f1 = f1v.asInstanceOf[Double]
-    val f2 = f2v.asInstanceOf[Double]
-    geom(g) match {
-      case l: org.locationtech.jts.geom.LineString
-          if !l.isEmpty && f1 >= 0.0 && f2 <= 1.0 && f1 <= f2 =>
-        val ix = new org.locationtech.jts.linearref.LengthIndexedLine(l)
-        wkb(ix.extractLine(f1 * l.getLength, f2 * l.getLength))
-      case _ => null
-    }
+  protected def op(g: Geometry, f1: Double, f2: Double): Any = g match {
+    case l: LineString if !l.isEmpty && f1 >= 0.0 && f2 <= 1.0 && f1 <= f2 =>
+      val ix = new org.locationtech.jts.linearref.LengthIndexedLine(l)
+      ix.extractLine(f1 * l.getLength, f2 * l.getLength)
+    case _ => null
   }
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): StLineSubstring =
     copy(first = a, second = b, third = c)
@@ -2081,38 +1740,26 @@ case class StLineSubstring(first: Expression, second: Expression, third: Express
   * dissolving — it is pure concatenation, no overlay CPU, and keeps
   * part provenance. Null elements are skipped; an empty or all-null
   * array yields null. */
-case class StCollect(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(BinaryType))
-  override def dataType: DataType = BinaryType
+case class StCollect(child: Expression) extends StUnary[ArrayData]("st_collect", BinaryType) {
   override def nullable: Boolean = true
-  override def prettyName: String = "st_collect"
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+  protected def op(arr: ArrayData): Any = {
     val gs = Array.newBuilder[Geometry]
     var i = 0
     while (i < arr.numElements()) {
-      if (!arr.isNullAt(i)) gs += geom(arr.getBinary(i))
+      if (!arr.isNullAt(i)) gs += Geom.fromWkbCached(arr.getBinary(i))
       i += 1
     }
     val parts = gs.result()
     if (parts.isEmpty) null
-    else {
-      val built = Geom.factory.buildGeometry(java.util.Arrays.asList(parts: _*))
+    else Geom.factory.buildGeometry(java.util.Arrays.asList(parts: _*)) match {
       // Sedona/PostGIS ST_Collect always yields a collection; JTS
       // buildGeometry returns the BARE geometry for a single-element
       // homogeneous input, so a singleton is promoted to its MULTI type
       // (a part that is itself a collection passes through unchanged)
-      val promoted = built match {
-        case p: org.locationtech.jts.geom.Point =>
-          Geom.factory.createMultiPoint(Array(p))
-        case l: org.locationtech.jts.geom.LineString =>
-          Geom.factory.createMultiLineString(Array(l))
-        case p: org.locationtech.jts.geom.Polygon =>
-          Geom.factory.createMultiPolygon(Array(p))
-        case other => other
-      }
-      wkb(promoted)
+      case p: Point => Geom.factory.createMultiPoint(Array(p))
+      case l: LineString => Geom.factory.createMultiLineString(Array(l))
+      case p: Polygon => Geom.factory.createMultiPolygon(Array(p))
+      case other => other
     }
   }
   override protected def withNewChildInternal(c: Expression): StCollect = copy(child = c)

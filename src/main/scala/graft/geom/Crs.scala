@@ -1,7 +1,6 @@
 package graft.geom
 
-import org.locationtech.jts.geom.{CoordinateSequence, Geometry}
-import org.locationtech.jts.geom.CoordinateSequenceFilter
+import org.locationtech.jts.geom.Geometry
 
 /** Pluggable CRS registry + map-projection math.
   *
@@ -466,19 +465,6 @@ object Crs {
   }
 
   /** Vertex-wise geometry reprojection (returns a new geometry). */
-  def transformGeometry(g: Geometry, src: String, dst: String): Geometry = {
-    val f = pointTransform(src, dst)
-    val out = g.copy()
-    out.apply(new CoordinateSequenceFilter {
-      override def filter(seq: CoordinateSequence, i: Int): Unit = {
-        val (x, y) = f(seq.getX(i), seq.getY(i))
-        seq.setOrdinate(i, 0, x)
-        seq.setOrdinate(i, 1, y)
-      }
-      override def isDone: Boolean = false
-      override def isGeometryChanged: Boolean = true
-    })
-    out.geometryChanged()
-    out
-  }
+  def transformGeometry(g: Geometry, src: String, dst: String): Geometry =
+    Geom.mapVertices(g)(pointTransform(src, dst))
 }

@@ -40,10 +40,12 @@ object Geom {
     * 93-byte envelope WKB); a miss adds the same on top of the parse.
     *
     * Safety: entries are shared within a thread across rows, so callers
-    * must treat parsed geometries as immutable — every mutating site in
-    * the expression layer `copy()`s first (audited r17; the JTS read-only
-    * predicates/overlay ops never mutate inputs, and the lazily-computed
-    * internal envelope is confined to this thread). This is transient
+    * must treat parsed geometries as immutable. The expression layer
+    * rewrites coordinates only through [[mapVertices]], which copies
+    * first, and JTS's own copying `AffineTransformation.transform` and
+    * `Geometry.norm`; the JTS read-only predicates/overlay ops never
+    * mutate inputs, and the lazily-computed internal envelope is confined
+    * to this thread. This is transient
     * per-task JVM state keyed on bytes in flight, never a cross-run
     * result cache. */
   private final class DecodeCache(cap: Int) {
@@ -85,6 +87,24 @@ object Geom {
   /** [[fromWkb]] through the per-thread decode memo — for read-only
     * consumers (the Catalyst expression layer); see [[DecodeCache]]. */
   def fromWkbCached(b: Array[Byte]): Geometry = decodeCache.get().get(b)
+
+  /** A copy of `g` with every vertex (x, y) replaced by `f(x, y)`. The one
+    * place that rewrites a geometry's coordinates: it copies first, so a
+    * geometry the decode cache shares is never changed. */
+  def mapVertices(g: Geometry)(f: (Double, Double) => (Double, Double)): Geometry = {
+    val out = g.copy()
+    // apply() calls geometryChanged() itself, since the filter reports a change
+    out.apply(new CoordinateSequenceFilter {
+      override def filter(seq: CoordinateSequence, i: Int): Unit = {
+        val (x, y) = f(seq.getX(i), seq.getY(i))
+        seq.setOrdinate(i, 0, x)
+        seq.setOrdinate(i, 1, y)
+      }
+      override def isDone: Boolean = false
+      override def isGeometryChanged: Boolean = true
+    })
+    out
+  }
 
   /** WKB of the axis-aligned rectangle [x0,x1]×[y0,y1], written directly
     * (big-endian, the same layout JTS WKBWriter emits — byte-identical to

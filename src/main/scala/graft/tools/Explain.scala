@@ -8,6 +8,7 @@ import graft.{Session, SparkEntry}
   * predicates. Usage: runMain graft.tools.Explain <query...> */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val names = QueryNames.checked("Explain <query...>", args.toSeq)
     val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     // pull a named field out of a FileScan line without truncating it:
@@ -24,7 +25,7 @@ object Explain {
         case None => rest
       }
     }
-    for (name <- args) {
+    for (name <- names) {
       val df = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       df.collect()
       println(s"===== $name")

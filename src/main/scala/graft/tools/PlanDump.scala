@@ -11,22 +11,9 @@ import graft.Session
   * writes <outDir>/<query>_<suffix>.txt for each query. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    if (args.length < 3) {
-      System.err.println(
-        "usage: PlanDump <outDir> <suffix> <query...>\nknown queries: " +
-          graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-      sys.exit(2)
-    }
+    val names = QueryNames.checked("PlanDump <outDir> <suffix> <query...>", args.toSeq.drop(2))
     val outDir = args(0)
     val suffix = args(1)
-    val names = args.drop(2)
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(
-        s"unknown queries: ${unknown.mkString(", ")}\nknown queries: " +
-          graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", "))
-      sys.exit(2)
-    }
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
     Files.createDirectories(Paths.get(outDir))

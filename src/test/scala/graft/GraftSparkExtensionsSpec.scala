@@ -150,6 +150,28 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
     }
   }
 
+  test("every graft SQL function prints under its SQL name") {
+    // plan strings and unaliased output columns show prettyName, so each
+    // graft expression the table builds must carry the name it is called by
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val built = graft.functions.sqlFunctions.map { case (name, builder) =>
+      // the first argument count the builder accepts
+      name -> (1 to 4).iterator
+        .map(n => scala.util.Try(builder(Seq.fill(n)(Literal(1.0)))))
+        .collectFirst { case scala.util.Success(e) => e }
+    }
+    val unbuilt = built.collect { case (name, None) => name }
+    assert(unbuilt.isEmpty, s"no argument count from 1 to 4 builds: $unbuilt")
+    val graftExprs = built.collect {
+      case (name, Some(e)) if e.getClass.getName.startsWith("graft.") => name -> e
+    }
+    assert(graftExprs.size > 100, graftExprs.map(_._1))
+    val misnamed = graftExprs.collect {
+      case (name, e) if e.prettyName != name => s"$name prints as ${e.prettyName}"
+    }
+    assert(misnamed.isEmpty, misnamed)
+  }
+
   test("registerAll on an extension session keeps exactly one SpatialJoinStrategy") {
     import org.apache.spark.sql.graftbridge.Bridge.plannerStrategies
     withExtensionSession { s =>

@@ -49,18 +49,22 @@ class InventorySpec extends AnyFunSuite {
       s"registered queries with no COVERAGE.md row: ${missing.toSeq.sorted}")
   }
 
-  test("no src/main file names the checkout by its absolute path") {
-    // artifacts and defaults resolve against the working directory (sbt's
-    // forked run and test both start in the project base); a source file
-    // that spells out that base only works in one checkout
+  test("no src/main or src/test file names the checkout by its absolute path") {
+    // artifacts, defaults and test fixtures resolve against the working
+    // directory or the system temp directory (sbt's forked run and test
+    // both start in the project base); a source file that spells out that
+    // base only works in one checkout, and a suite run from a copy would
+    // write into the original
     val base = new java.io.File(".").getCanonicalPath
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val files =
+    val files = Seq("src/main", "src/test").flatMap { dir =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
         .map(_.toString).toList
       finally walk.close()
+    }
     assert(files.exists(_.endsWith("SparkEntry.scala")), s"src/main not found under $base")
+    assert(files.exists(_.endsWith("InventorySpec.scala")), s"src/test not found under $base")
     val offenders = files.filter(f => read(f).contains(base)).sorted
-    assert(offenders.isEmpty, s"src/main files naming $base: $offenders")
+    assert(offenders.isEmpty, s"source files naming $base: $offenders")
   }
 }

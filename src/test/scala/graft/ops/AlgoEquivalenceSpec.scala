@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{FixtureDirs, SparkFixture}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Equivalence of the scalable algorithms against brute-force models on
@@ -9,14 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * all-tied prices, duplicate points. The operators read parquet, so the
   * fixtures are written as tiny parquet tables and the ops run unchanged.
   */
-class AlgoEquivalenceSpec extends AnyFunSuite {
+class AlgoEquivalenceSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
-
-  private def fixtureDir(name: String): String = {
-    val d = new java.io.File(s"/root/repo/target/fixtures/$name")
-    d.mkdirs()
-    d.getPath
-  }
 
   test("setsimJoin equals brute force on an adversarial corpus (dups, tiny docs, empties)") {
     import spark.implicits._

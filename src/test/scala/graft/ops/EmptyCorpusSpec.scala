@@ -1,12 +1,9 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkFixture}
-import java.nio.file.{Files, Path}
+import graft.{FixtureDirs, SparkEntry, SparkFixture}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Every registered query must RUN (possibly to zero rows) on an
   * all-empty corpus — the empty-daily-partition reality of a production
@@ -14,20 +11,11 @@ import scala.jdk.CollectionConverters._
   * chi-square cells, vector query-vector/centroid reads): a driver-side
   * `.head`/`.collect` on a relation that can be empty must degrade to an
   * empty result, never throw. */
-class EmptyCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EmptyCorpusSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
 
-  /** Fixture corpora live under the system temp directory, one root per
-    * suite run, removed once the suite is done. */
-  private lazy val root: Path = Files.createTempDirectory("empty_corpus_spec")
-
-  override def afterAll(): Unit =
-    try super.afterAll()
-    finally if (Files.exists(root))
-      Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-
   private lazy val dir: String = {
-    val d = root.resolve("empty_corpus").toString
+    val d = fixtureDir("empty_corpus")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")
     tables.foreach { t =>
@@ -43,7 +31,7 @@ class EmptyCorpusSpec extends AnyFunSuite with BeforeAndAfterAll {
     // vector divides by zero, which ANSI mode turns into a crash. The
     // guards must early-return instead.
     import org.apache.spark.sql.functions._
-    val d = root.resolve("no_query_vec").toString
+    val d = fixtureDir("no_query_vec")
     val kept = Tables.table(spark, "/root/testdata/sf0.001", "embeddings")
       .filter(col("vec_id") >= 100)
     assert(kept.count() > 0, "fixture must keep rows for the crash path to evaluate")

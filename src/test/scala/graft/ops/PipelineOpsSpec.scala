@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkFixture
+import graft.{FixtureDirs, SparkFixture}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form laws for the round-11 pipeline additions (PII scrub, URL
@@ -8,15 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB hash-match can't express because they hold by CONSTRUCTION of
   * the synthetic spans, not by agreement between two engines.
   */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
   private val dir = "/root/testdata/sf0.001"
-
-  private def fixtureDir(name: String): String = {
-    val d = new java.io.File(s"/root/repo/target/fixtures/$name")
-    d.mkdirs()
-    d.getPath
-  }
 
   test("pii scrub: class counts follow the doc_id synthesis law exactly") {
     // corpus text is lowercase words — no '@' and no digits — so every

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkFixture}
+import graft.{FixtureDirs, SparkEntry, SparkFixture}
 import graft.SparkFixture.withConf
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ever plans a cartesian/nested-loop join. These are the properties the
   * reference encoded manually (SURVEY.md §4) and that must survive every
   * future query edit. */
-class PlanShapeSpec extends AnyFunSuite {
+class PlanShapeSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
   private val dir = "/root/testdata/sf0.001"
 
@@ -273,7 +273,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("zorderScan on an empty events table returns empty instead of throwing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder_empty").toString
+    val tmp = fixtureDir("zorder_empty")
     Tables.events(spark, dir).limit(0).write.parquet(s"$tmp/events.parquet")
     val df = SinkQueries.zorderScan(spark, tmp)
     assert(df.count() == 0)

@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.SparkFixture
-import java.nio.file.{Files, Path}
+import graft.{FixtureDirs, SparkFixture}
+import java.nio.file.Files
 import java.util.concurrent.{Semaphore, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.conf.Configuration
@@ -13,22 +13,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The corpus read path: [[Tables.table]] infers a table's schema once
   * and memoizes it, keyed by the files and the schema-affecting confs. */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
-  private lazy val root: Path = Files.createTempDirectory("tables_spec")
-
-  override def afterAll(): Unit =
-    try Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    finally super.afterAll()
-
   private def freshDir(name: String): String =
-    Files.createDirectory(root.resolve(name)).toString
+    Files.createDirectory(fixtureRoot.resolve(name)).toString
 
   /** Jobs started while `body` runs. Listener events arrive
     * asynchronously, in order, so a marker job (tagged by a local

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.FixtureDirs
 import java.io.File
 import java.nio.file.Files
 
@@ -14,15 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * RequiresDistributionAndOrdering layout guarantee (each cluster key in
   * exactly ONE file, rows sorted within), and the read-back path with
   * column pruning. */
-class LedgerSinkSpec extends AnyFunSuite {
+class LedgerSinkSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = graft.SparkFixture.spark
   private val Fmt = "graft.sources.LedgerSink"
-
-  private def tmpDir(tag: String): String = {
-    val d = Files.createTempDirectory(s"ledger_$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
 
   private def sample(n: Int): DataFrame = {
     import spark.implicits._
@@ -41,7 +36,7 @@ class LedgerSinkSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.size).toMap
 
   test("roundtrip: written rows (incl. nulls) read back exactly; schema from manifest") {
-    val dir = tmpDir("rt")
+    val dir = fixtureDir("rt")
     val df = sample(200)
     df.write.format(Fmt).option("path", dir)
       .option("clusterBy", "k").option("orderBy", "s")
@@ -55,7 +50,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("RequiresDistributionAndOrdering: each cluster key in exactly one file, sorted within") {
-    val dir = tmpDir("layout")
+    val dir = fixtureDir("layout")
     sample(500).repartition(8) // adversarial incoming layout
       .write.format(Fmt).option("path", dir)
       .option("clusterBy", "k").option("orderBy", "s")
@@ -86,7 +81,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("atomic commit: a failed overwrite leaves the previous version fully readable") {
-    val dir = tmpDir("abort")
+    val dir = fixtureDir("abort")
     val v1 = sample(100)
     v1.write.format(Fmt).option("path", dir).option("clusterBy", "k")
       .mode(SaveMode.Append).save()
@@ -114,7 +109,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("append unions manifests; overwrite truncates and GCs unreferenced files") {
-    val dir = tmpDir("modes")
+    val dir = fixtureDir("modes")
     sample(50).write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     sample(50).write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     assert(readBack(dir).count() == 100)
@@ -129,7 +124,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("read path prunes columns and survives projection reordering") {
-    val dir = tmpDir("prune")
+    val dir = fixtureDir("prune")
     sample(60).write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()
     val got = readBack(dir).select(col("i"), col("k"))
       .collect().map(r => (if (r.isNullAt(0)) null else r.getInt(0), r.getLong(1)))
@@ -144,7 +139,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("COUNT(*) is answered from the manifest with zero data files opened") {
-    val dir = tmpDir("countpush")
+    val dir = fixtureDir("countpush")
     sample(300).repartition(5).write.format(Fmt).option("path", dir)
       .mode(SaveMode.Append).save()
     val df = readBack(dir)
@@ -163,7 +158,7 @@ class LedgerSinkSpec extends AnyFunSuite {
   }
 
   test("manifest statistics: exact rows + on-disk bytes, and an unhinted join auto-broadcasts") {
-    val dir = tmpDir("stats")
+    val dir = fixtureDir("stats")
     sample(200).repartition(3).write.format(Fmt).option("path", dir)
       .mode(SaveMode.Append).save()
     val df = readBack(dir)
@@ -191,7 +186,7 @@ class LedgerSinkSpec extends AnyFunSuite {
 
   test("unsupported column types are rejected loudly at table resolution") {
     import spark.implicits._
-    val dir = tmpDir("types")
+    val dir = fixtureDir("types")
     val bad = Seq((1L, Array(1.0f))).toDF("k", "emb")
     val ex = intercept[Exception] {
       bad.write.format(Fmt).option("path", dir).mode(SaveMode.Append).save()

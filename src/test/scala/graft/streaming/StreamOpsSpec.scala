@@ -1,10 +1,10 @@
 package graft.streaming
 
-import graft.SparkFixture
+import graft.{FixtureDirs, SparkFixture}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamOpsSpec extends AnyFunSuite {
+class StreamOpsSpec extends AnyFunSuite with FixtureDirs {
   private lazy val spark = SparkFixture.spark
   // all session event times sit far above epoch 0: the initial watermark
   // is 0 ms, and watermarked stateful ops drop input at or before the
@@ -14,7 +14,7 @@ class StreamOpsSpec extends AnyFunSuite {
   test("checkpoint restart resumes exactly-once: no reprocess, no loss") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_ckpt_restart").toString
+    val base = fixtureDir("ckpt_restart")
     val (out, ckpt) = (s"$base/out", s"$base/ckpt")
     val input = MemoryStream[Long]
     def runOnce(): Unit = {
