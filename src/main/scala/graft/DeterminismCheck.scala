@@ -1,5 +1,6 @@
 package graft
 
+import graft.tools.Json
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
@@ -100,17 +101,11 @@ object DeterminismCheck {
       if (done % 25 == 0) System.err.println(s"[determinism] $done/${all.size}")
     }
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val failJson = failures.map(f => s"""{"name":${q(f.name)},"detail":${q(f.detail)}}""")
+    val failJson = failures.map(f => s"""{"name":${Json.str(f.name)},"detail":${Json.str(f.detail)}}""")
       .mkString("[", ",", "]")
-    val digJson = digests.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val digJson = digests.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
     val json =
-      s"""{"corpus":${q(sfDir)},"widths":[${widths.mkString(",")}],"stream_widths":[${streamWidths.mkString(",")}],"cpus":${Session.cores},""" +
+      s"""{"corpus":${Json.str(sfDir)},"widths":[${widths.mkString(",")}],"stream_widths":[${streamWidths.mkString(",")}],"cpus":${Session.cores},""" +
       s""""method":"per-query multiset-of-rows equality across shuffle widths (streams: graft.stream.statePartitions, fresh checkpoints); digests diffable across SPARK_GRAFT_CPUS runs",""" +
       s""""n":${all.size},"pass":${all.size - failures.size},"fail":${failures.size},""" +
       s""""failures":$failJson,"digests":$digJson}"""

@@ -1,4 +1,5 @@
 package graft
+import graft.tools.{Json, QueryNames}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -6,10 +7,12 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names: dev-iteration subset (the driver
-    // always calls with exactly two args => full inventory)
+    // always calls with exactly two args => full inventory); an unknown
+    // name exits 2 instead of running a partial inventory
     val selected =
       if (args.length <= 2) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(args.drop(2).toSet).toMap
+      else SparkEntry.queries.view.filterKeys(
+        QueryNames.checked("Verify <sfDir> <outDir> [query...]", args.toSeq.drop(2)).toSet).toMap
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // full inventory manifest: lets the checker treat a crashed rows-only
@@ -23,20 +26,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.view.filterKeys(selected.keySet)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

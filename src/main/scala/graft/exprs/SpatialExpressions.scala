@@ -3,7 +3,7 @@ package graft.exprs
 import graft.geom.{Crs, Geom}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,17 +22,15 @@ import org.locationtech.jts.io.ParseException
   * Each function is a case class with a body on JTS objects; its contract
   * comes from one base, as Sedona's `InferredExpression` gives it:
   *  - [[StFunction]] declares the SQL name, the argument and result types
-  *    with implicit casts to the argument types, the interpreted
-  *    (`CodegenFallback`) eval path and the WKB encode of a JTS result;
-  *  - [[StUnary]], [[StBinary]] and [[StTernary]] read each argument
-  *    through its [[Arg]], so a geometry argument reaches the body decoded
-  *    (through the per-thread decode cache), and [[StPredicate]] is the
-  *    binary form for the DE-9IM relations, planned as a Catalyst
-  *    `Predicate`.
-  * `CodegenFallback` fits a JTS body, whose cost dominates any codegen
-  * gain; surrounding operators stay codegen'd. The one exception is
-  * [[StMakeEnvelope]]: its body is a cheap static direct-WKB write, so it
-  * implements real `doGenCode` and extends no base.
+  *    with implicit casts to the argument types, the WKB encode of a JTS
+  *    result and the one generated-code template;
+  *  - [[StUnary]], [[StBinary]], [[StTernary]] and [[StQuaternary]] read
+  *    each argument through its [[Arg]], so a geometry argument reaches
+  *    the body decoded (through the per-thread decode cache), and
+  *    [[StPredicate]] is the binary form for the DE-9IM relations,
+  *    planned as a Catalyst `Predicate`.
+  * Both evaluation modes run the same `nullSafeEval`; in generated code
+  * the children stay compiled and the template calls it by reference.
   */
 object SpatialExpressions {
   /** `struct(center geometry, radius double)`, the circle results. */
@@ -93,12 +91,11 @@ object Arg {
 
 /** The contract every spatial function declares once: its SQL name (the
   * `prettyName` of plan strings and unaliased columns), its argument and
-  * result types, implicit casts to the argument types, the interpreted
-  * eval path, and the encode of a result. Serializable, so the bases'
+  * result types, implicit casts to the argument types, the encode of a
+  * result, and its generated code. Serializable, so the bases'
   * constructor fields travel with a task (the first non-serializable
   * superclass, Spark's, then needs only its no-argument constructor). */
-sealed trait StFunction extends Expression with ImplicitCastInputTypes with CodegenFallback
-    with Serializable {
+sealed trait StFunction extends Expression with ImplicitCastInputTypes with Serializable {
   protected def sqlName: String
   protected def args: Seq[Arg[_]]
   protected def resultType: DataType
@@ -112,6 +109,18 @@ sealed trait StFunction extends Expression with ImplicitCastInputTypes with Code
     case g: Geometry => Geom.toWkb(g)
     case _ => r
   }
+
+  /** The body's generated code on non-null child values, for the arity
+    * bases' `nullSafeCodeGen`: it calls `nullSafeEval` through a reference
+    * object and unboxes the result, null where `nullable` allows it. */
+  protected final def genBody(ctx: CodegenContext, ev: ExprCode, values: String*): String = {
+    val self = ctx.addReferenceObj("stFunction", this)
+    val result = ctx.freshName("result")
+    val assign = s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;"
+    s"""Object $result = $self.nullSafeEval(${values.mkString(", ")});
+       |${if (nullable) s"if ($result == null) ${ev.isNull} = true; else $assign" else assign}
+       |""".stripMargin
+  }
 }
 
 /** A one-argument spatial function; `op` runs on non-null input. */
@@ -120,7 +129,9 @@ abstract class StUnary[A](protected val sqlName: String, protected val resultTyp
     extends UnaryExpression with StFunction {
   protected def op(x: A): Any
   protected def args: Seq[Arg[_]] = Seq(a)
-  override protected def nullSafeEval(v: Any): Any = encode(op(a.read(v)))
+  override def nullSafeEval(v: Any): Any = encode(op(a.read(v)))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => genBody(ctx, ev, v))
 }
 
 /** A two-argument spatial function; `op` runs on non-null input. */
@@ -129,7 +140,9 @@ abstract class StBinary[A, B](protected val sqlName: String, protected val resul
     extends BinaryExpression with StFunction {
   protected def op(x: A, y: B): Any
   protected def args: Seq[Arg[_]] = Seq(a, b)
-  override protected def nullSafeEval(v: Any, w: Any): Any = encode(op(a.read(v), b.read(w)))
+  override def nullSafeEval(v: Any, w: Any): Any = encode(op(a.read(v), b.read(w)))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (v, w) => genBody(ctx, ev, v, w))
 }
 
 /** A three-argument spatial function; `op` runs on non-null input. */
@@ -138,8 +151,22 @@ abstract class StTernary[A, B, C](protected val sqlName: String, protected val r
     extends TernaryExpression with StFunction {
   protected def op(x: A, y: B, z: C): Any
   protected def args: Seq[Arg[_]] = Seq(a, b, c)
-  override protected def nullSafeEval(v: Any, w: Any, u: Any): Any =
+  override def nullSafeEval(v: Any, w: Any, u: Any): Any =
     encode(op(a.read(v), b.read(w), c.read(u)))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (v, w, u) => genBody(ctx, ev, v, w, u))
+}
+
+/** A four-argument spatial function; `op` runs on non-null input. */
+abstract class StQuaternary[A, B, C, D](protected val sqlName: String, protected val resultType: DataType)
+                                       (implicit a: Arg[A], b: Arg[B], c: Arg[C], d: Arg[D])
+    extends QuaternaryExpression with StFunction {
+  protected def op(w: A, x: B, y: C, z: D): Any
+  protected def args: Seq[Arg[_]] = Seq(a, b, c, d)
+  override def nullSafeEval(v: Any, w: Any, u: Any, t: Any): Any =
+    encode(op(a.read(v), b.read(w), c.read(u), d.read(t)))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (v, w, u, t) => genBody(ctx, ev, v, w, u, t))
 }
 
 /** A DE-9IM relation of two geometries, planned as a Catalyst `Predicate`
@@ -176,39 +203,18 @@ case class StPoint(left: Expression, right: Expression)
 
 /** (xmin, ymin, xmax, ymax) -> WKB axis-aligned rectangle polygon
   * (PostGIS/Sedona ST_MakeEnvelope). Builds geometry directly from
-  * numeric columns — no WKT text on the hot path. Extends no base: it is
-  * the one spatial function with generated code. */
-case class StMakeEnvelope(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-  require(children.length == 4, "st_makeenvelope(xmin, ymin, xmax, ymax)")
-  override def inputTypes: Seq[DataType] = Seq.fill(4)(DoubleType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "st_makeenvelope"
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val Seq(x0, y0, x1, y1) = vs.map(_.asInstanceOf[Double])
+  * numeric columns — no WKT text on the hot path. */
+case class StMakeEnvelope(first: Expression, second: Expression, third: Expression,
+                          fourth: Expression)
+    extends StQuaternary[Double, Double, Double, Double]("st_makeenvelope", BinaryType) {
+  // never folded: a literal envelope propagated into a join condition names
+  // no build-side column, and the join would plan nested-loop, not R-tree
+  override def foldable: Boolean = false
+  protected def op(x0: Double, y0: Double, x1: Double, y1: Double): Any =
     Geom.envelopeWkb(x0, y0, x1, y1)
-  }
-  // probe-side geometry construction is per-fact-row: emit the static
-  // direct-WKB call inside whole-stage codegen instead of falling back
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evals = children.map(_.genCode(ctx))
-    val nullCheck =
-      if (nullable) evals.map(e => s"${e.isNull}").mkString(" || ") else "false"
-    ev.copy(code = code"""
-      ${evals.map(_.code).reduce(_ + _)}
-      boolean ${ev.isNull} = $nullCheck;
-      byte[] ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.geom.Geom.envelopeWkb(
-          ${evals(0).value}, ${evals(1).value}, ${evals(2).value}, ${evals(3).value});
-      }""")
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): StMakeEnvelope =
-    copy(children = cs)
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression, d: Expression): StMakeEnvelope =
+    copy(first = a, second = b, third = c, fourth = d)
 }
 
 /** Repair invalid geometry (JTS GeometryFixer); identity on valid input. */
@@ -488,20 +494,12 @@ case class StEnvelopeBounds(child: Expression)
   * composed path THROW (the WKB ring fails closure validation, NaN !=
   * NaN), where this fold returns the JTS envelope-fold value; no
   * previously-succeeding query can change results.
-  *
-  * Four arguments in one `children` field (the rule builds it from
-  * [[StMakeEnvelope]]'s), so it fits no arity base and implements
-  * [[StFunction]] itself. */
-case class StEnvelopeBoundsRect(children: Seq[Expression]) extends Expression with StFunction {
-  require(children.length == 4, "st_envelope_bounds_rect(x0, y0, x1, y1)")
-  protected def sqlName: String = "st_envelope_bounds_rect"
-  protected def args: Seq[Arg[_]] = Seq.fill(4)(Arg.F64)
-  protected def resultType: DataType = BoundsType
+ */
+case class StEnvelopeBoundsRect(first: Expression, second: Expression, third: Expression,
+                                fourth: Expression)
+    extends StQuaternary[Double, Double, Double, Double]("st_envelope_bounds_rect", BoundsType) {
   override def nullable: Boolean = true
-  override def eval(input: InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val Seq(x0, y0, x1, y1) = vs.map(_.asInstanceOf[Double])
+  protected def op(x0: Double, y0: Double, x1: Double, y1: Double): Any = {
     var minx = x0; var maxx = x0; var miny = y0; var maxy = y0
     if (x1 < minx) minx = x1
     if (x1 > maxx) maxx = x1
@@ -511,7 +509,8 @@ case class StEnvelopeBoundsRect(children: Seq[Expression]) extends Expression wi
     else new GenericInternalRow(Array[Any](minx, miny, maxx, maxy))
   }
   override protected def withNewChildrenInternal(
-      cs: IndexedSeq[Expression]): StEnvelopeBoundsRect = copy(children = cs)
+      a: Expression, b: Expression, c: Expression, d: Expression): StEnvelopeBoundsRect =
+    copy(first = a, second = b, third = c, fourth = d)
 }
 
 /** Collapsed form of `st_envelope_bounds(st_point(x, y))` — separate from

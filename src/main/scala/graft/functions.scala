@@ -27,7 +27,7 @@ object functions {
   def st_astext(g: Column): Column = col(StAsText(ex(g)))
   def st_point(x: Column, y: Column): Column = col(StPoint(ex(x), ex(y)))
   def st_makeenvelope(xmin: Column, ymin: Column, xmax: Column, ymax: Column): Column =
-    col(StMakeEnvelope(Seq(ex(xmin), ex(ymin), ex(xmax), ex(ymax))))
+    col(StMakeEnvelope(ex(xmin), ex(ymin), ex(xmax), ex(ymax)))
   def st_makevalid(g: Column): Column = col(StMakeValid(ex(g)))
   def st_buffer(g: Column, d: Column): Column = col(StBuffer(ex(g), ex(d)))
   def st_buffer_spheroid(g: Column, d: Column): Column =
@@ -315,7 +315,7 @@ object functions {
       f1("st_geomfromwkt", StGeomFromWKT),
       f1("st_astext", StAsText),
       f2("st_point", StPoint),
-      fn("st_makeenvelope", 4)(StMakeEnvelope(_)),
+      fn("st_makeenvelope", 4)(es => StMakeEnvelope(es.head, es(1), es(2), es(3))),
       f1("st_makevalid", StMakeValid),
       f2("st_buffer", StBuffer),
       f2("st_buffer_spheroid", StBufferSpheroid),

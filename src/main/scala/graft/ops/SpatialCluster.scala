@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Density-based spatial clustering — grid-partitioned DBSCAN (Ester,
@@ -45,24 +45,8 @@ object SpatialCluster {
   def dbscan(spark: SparkSession, dir: String, eps: Double = 1000.0,
              minPts: Int = 3): DataFrame = {
     val pts = fixturePoints(spark, dir).localCheckpoint(eager = true)
-    val withCell = pts
-      .withColumn("cx", floor(col("x") / eps).cast("long"))
-      .withColumn("cy", floor(col("y") / eps).cast("long"))
-    val offsets = typedlit(for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy))
-    val probe = withCell
-      .select(col("pid").as("a_pid"), col("x").as("ax"), col("y").as("ay"),
-        col("cx"), col("cy"), explode(offsets).as("o"))
-      .select(col("a_pid"), col("ax"), col("ay"),
-        (col("cx") + col("o._1")).as("jcx"), (col("cy") + col("o._2")).as("jcy"))
-    val build = withCell.select(col("pid").as("b_pid"), col("x").as("bx"),
-      col("y").as("by"), col("cx").as("jcx"), col("cy").as("jcy"))
-    // exact ε-neighbors (both directions), never all-pairs: the join key
-    // is the ε-cell, the 3×3 probe explode bounds each point's fan-out
-    val nbr = probe.join(build, Seq("jcx", "jcy"))
-      .filter(col("a_pid") =!= col("b_pid") &&
-        (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-          (col("ay") - col("by")) * (col("ay") - col("by")) <= eps * eps)
-      .select(col("a_pid"), col("b_pid"))
+    // exact ε-neighbors (both directions), never all-pairs
+    val nbr = ripleyPairs(pts, eps).select(col("a_pid"), col("b_pid"))
       .localCheckpoint(eager = true)
     val deg = nbr.groupBy(col("a_pid")).agg(count(lit(1)).as("nn"))
     // |N_eps(p)| includes p itself
@@ -102,6 +86,40 @@ object SpatialCluster {
       .orderBy(col("csize"))
   }
 
+  /** The 5×5 region lattice the autocorrelation statistics read: its
+    * one data-sized pass, the region rollup `(r, v)` with v = Σ lineitem
+    * quantity (exact integers), and the global scalars over it. */
+  private case class Lattice(v: DataFrame) {
+    import org.apache.spark.sql.graftbridge.Bridge.scalarSubquery
+    /** n, the region count, and S = Σv. */
+    val n: Column = scalarSubquery(v.agg(count(lit(1))))
+    val s: Column = scalarSubquery(v.agg(coalesce(sum(col("v")), lit(0L))))
+    /** Σ z'² with the integer-centered z' = n·v − S, in DECIMAL(38,0). */
+    def zsq: Column = scalarSubquery(v
+      .withColumn("n0", n).withColumn("s0", s)
+      .agg(coalesce(sum(expr(
+        "(CAST(n0 AS DECIMAL(38,0)) * v - s0) * (CAST(n0 AS DECIMAL(38,0)) * v - s0)")),
+        expr("CAST(0 AS DECIMAL(38,0))"))))
+    /** Directed rook-contiguity pairs `(r, vi, rn, vj)`: a 4-offset
+      * explode and an equi join on the region relation. */
+    def rookPairs: DataFrame = {
+      val offsets = typedlit(Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
+      v.select(col("r"), col("v").as("vi"), explode(offsets).as("o"))
+        .withColumn("rx", col("r") % 5 + col("o._1"))
+        .withColumn("ry", expr("CAST(r DIV 5 AS INT)") + col("o._2"))
+        .filter(col("rx").between(0, 4) && col("ry").between(0, 4))
+        .select(col("r"), col("vi"), (col("ry") * 5 + col("rx")).as("rn"))
+        .join(v.select(col("r").as("rn"), col("v").as("vj")), "rn")
+    }
+  }
+
+  private def lattice(spark: SparkSession, dir: String): Lattice =
+    Lattice(lineitem(spark, dir)
+      .select((col("l_partkey") % 25).cast("int").as("r"),
+        col("l_quantity").cast("long").as("q"))
+      .groupBy(col("r")).agg(sum(col("q")).as("v"))
+      .localCheckpoint(eager = true))
+
   /** Global spatial autocorrelation over the 5×5 region lattice —
     * Moran's I (1950) and Geary's C (1954) with rook contiguity, the
     * standard "is the spatial pattern clustered, random, or dispersed"
@@ -121,21 +139,9 @@ object SpatialCluster {
     * relation. At 100 TB the lattice grows, not the per-cell cost. */
   def moransI(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge.scalarSubquery
-    val v = lineitem(spark, dir)
-      .select((col("l_partkey") % 25).cast("int").as("r"),
-        col("l_quantity").cast("long").as("q"))
-      .groupBy(col("r")).agg(sum(col("q")).as("v"))
-      .localCheckpoint(eager = true)
-    val offsets = typedlit(Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
-    val nbr = v
-      .select(col("r"), col("v").as("vi"), explode(offsets).as("o"))
-      .withColumn("rx", col("r") % 5 + col("o._1"))
-      .withColumn("ry", expr("CAST(r DIV 5 AS INT)") + col("o._2"))
-      .filter(col("rx").between(0, 4) && col("ry").between(0, 4))
-      .select(col("vi"), (col("ry") * 5 + col("rx")).as("rn"))
-    val pairs = nbr.join(v.select(col("r").as("rn"), col("v").as("vj")), "rn")
-    val nS = scalarSubquery(v.agg(count(lit(1))))
-    val sS = scalarSubquery(v.agg(coalesce(sum(col("v")), lit(0L))))
+    val lat = lattice(spark, dir)
+    val (nS, sS) = (lat.n, lat.s)
+    val pairs = lat.rookPairs
     val wS = scalarSubquery(pairs.agg(count(lit(1))))
     // Σw z'_i z'_j and Σw (v_i−v_j)² over the directed pair relation
     val czz = scalarSubquery(pairs
@@ -148,11 +154,7 @@ object SpatialCluster {
       .agg(coalesce(sum(expr(
         "(CAST(vi AS DECIMAL(38,0)) - vj) * (CAST(vi AS DECIMAL(38,0)) - vj)")),
         expr("CAST(0 AS DECIMAL(38,0))"))))
-    val czsq = scalarSubquery(v
-      .withColumn("n0", nS).withColumn("s0", sS)
-      .agg(coalesce(sum(expr(
-        "(CAST(n0 AS DECIMAL(38,0)) * v - s0) * (CAST(n0 AS DECIMAL(38,0)) * v - s0)")),
-        expr("CAST(0 AS DECIMAL(38,0))"))))
+    val czsq = lat.zsq
     spark.range(1)
       .select(nS.as("n"), wS.as("w_sum"), czz.as("czz"), cdd.as("cdd"),
         czsq.as("czsq"))
@@ -177,30 +179,11 @@ object SpatialCluster {
     * neighbor join, one broadcast-back of the two global scalars —
     * per-cell output, all integer. */
   def lisa(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge.scalarSubquery
-    val v = lineitem(spark, dir)
-      .select((col("l_partkey") % 25).cast("int").as("r"),
-        col("l_quantity").cast("long").as("q"))
-      .groupBy(col("r")).agg(sum(col("q")).as("v"))
-      .localCheckpoint(eager = true)
-    val offsets = typedlit(Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
-    val nbr = v
-      .select(col("r"), explode(offsets).as("o"))
-      .withColumn("rx", col("r") % 5 + col("o._1"))
-      .withColumn("ry", expr("CAST(r DIV 5 AS INT)") + col("o._2"))
-      .filter(col("rx").between(0, 4) && col("ry").between(0, 4))
-      .select(col("r"), (col("ry") * 5 + col("rx")).as("rn"))
-    val lag = nbr.join(v.select(col("r").as("rn"), col("v").as("vj")), "rn")
+    val lat = lattice(spark, dir)
+    val lag = lat.rookPairs
       .groupBy(col("r")).agg(sum(col("vj")).as("lag_v"), count(lit(1)).as("deg"))
-    val nS = scalarSubquery(v.agg(count(lit(1))))
-    val sS = scalarSubquery(v.agg(coalesce(sum(col("v")), lit(0L))))
-    val czsq = scalarSubquery(v
-      .withColumn("n0", nS).withColumn("s0", sS)
-      .agg(coalesce(sum(expr(
-        "(CAST(n0 AS DECIMAL(38,0)) * v - s0) * (CAST(n0 AS DECIMAL(38,0)) * v - s0)")),
-        expr("CAST(0 AS DECIMAL(38,0))"))))
-    v.join(lag, Seq("r"), "left")
-      .withColumn("n0", nS).withColumn("s0", sS).withColumn("zsq", czsq)
+    lat.v.join(lag, Seq("r"), "left")
+      .withColumn("n0", lat.n).withColumn("s0", lat.s).withColumn("zsq", lat.zsq)
       // z'_i and the neighbor-lag z'-sum (Σ_j w_ij z'_j = n·Σv_j − deg·S)
       .withColumn("zi", expr("CAST(n0 AS DECIMAL(38,0)) * v - s0"))
       .withColumn("zl", expr(
@@ -245,26 +228,13 @@ object SpatialCluster {
     * region relation, two broadcast-back global scalars. */
   def getisOrd(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge.scalarSubquery
-    val v = lineitem(spark, dir)
-      .select((col("l_partkey") % 25).cast("int").as("r"),
-        col("l_quantity").cast("long").as("q"))
-      .groupBy(col("r")).agg(sum(col("q")).as("v"))
-      .localCheckpoint(eager = true)
-    val offsets = typedlit(Seq((-1, 0), (1, 0), (0, -1), (0, 1)))
-    val nbr = v
-      .select(col("r"), explode(offsets).as("o"))
-      .withColumn("rx", col("r") % 5 + col("o._1"))
-      .withColumn("ry", expr("CAST(r DIV 5 AS INT)") + col("o._2"))
-      .filter(col("rx").between(0, 4) && col("ry").between(0, 4))
-      .select(col("r"), (col("ry") * 5 + col("rx")).as("rn"))
-    val ring = nbr.join(v.select(col("r").as("rn"), col("v").as("vj")), "rn")
+    val lat = lattice(spark, dir)
+    val ring = lat.rookPairs
       .groupBy(col("r")).agg(sum(col("vj")).as("ring_v"), count(lit(1)).as("deg"))
-    val nS = scalarSubquery(v.agg(count(lit(1))))
-    val sS = scalarSubquery(v.agg(coalesce(sum(col("v")), lit(0L))))
-    val qS = scalarSubquery(v.agg(coalesce(
+    val qS = scalarSubquery(lat.v.agg(coalesce(
       sum(expr("CAST(v AS DECIMAL(38,0)) * v")), expr("CAST(0 AS DECIMAL(38,0))"))))
-    v.join(ring, Seq("r"), "left")
-      .withColumn("n0", nS).withColumn("s0", sS).withColumn("q0", qS)
+    lat.v.join(ring, Seq("r"), "left")
+      .withColumn("n0", lat.n).withColumn("s0", lat.s).withColumn("q0", qS)
       // U_i = self + rook ring; W_i = deg + 1 (the * of Gi*)
       .withColumn("u", expr("v + coalesce(ring_v, 0)"))
       .withColumn("w", expr("CAST(coalesce(deg, 0) + 1 AS INT)"))
@@ -287,6 +257,33 @@ object SpatialCluster {
       .orderBy(col("r"))
   }
 
+  /** Ordered point pairs within `r` of each other from a (pid, x, y)
+    * relation: `(d2, a_pid, b_pid)`, one row per ordered pair with its
+    * squared distance. Points hash into r-sized grid cells and each
+    * point's 3×3 cell neighborhood joins on the CELL KEY (a hash equi
+    * join, never all-pairs). The exact-neighbor kernel of [[dbscan]] (at
+    * ε) and [[ripleyK]] (at the largest radius); equivalence with the
+    * brute-force all-pairs relation is property-tested in
+    * `SpatialStatsEquivalenceSpec`. */
+  private[ops] def ripleyPairs(pts: DataFrame, r: Double): DataFrame = {
+    val withCell = pts
+      .withColumn("cx", floor(col("x") / r).cast("long"))
+      .withColumn("cy", floor(col("y") / r).cast("long"))
+    val offsets = typedlit(for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy))
+    val probe = withCell
+      .select(col("pid").as("a_pid"), col("x").as("ax"), col("y").as("ay"),
+        col("cx"), col("cy"), explode(offsets).as("o"))
+      .select(col("a_pid"), col("ax"), col("ay"),
+        (col("cx") + col("o._1")).as("jcx"), (col("cy") + col("o._2")).as("jcy"))
+    val build = withCell.select(col("pid").as("b_pid"), col("x").as("bx"),
+      col("y").as("by"), col("cx").as("jcx"), col("cy").as("jcy"))
+    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
+      (col("ay") - col("by")) * (col("ay") - col("by"))
+    probe.join(build, Seq("jcx", "jcy"))
+      .filter(col("a_pid") =!= col("b_pid") && d2 <= r * r)
+      .select(d2.as("d2"), col("a_pid"), col("b_pid"))
+  }
+
   /** Ripley's K point-pattern analysis (Ripley 1976) — the multi-scale
     * complement of [[dbscan]]'s single-ε clustering: for a ladder of
     * radii, the count of ordered point pairs within distance r,
@@ -304,30 +301,6 @@ object SpatialCluster {
     *
     * Scale shape: the join fan-out is bounded by points-per-r_max-cell
     * (the caller's pitch contract, as in dbscan); 3 output rows. */
-  /** Ordered point pairs within `rMax` from a (pid, x, y) relation via
-    * the 3×3 grid-cell neighbor join — the exact-neighbor kernel shared
-    * by [[ripleyK]]; returns one `d2` row per ordered pair. Equivalence
-    * with the brute-force all-pairs relation is property-tested in
-    * `SpatialStatsEquivalenceSpec`. */
-  private[ops] def ripleyPairs(pts: DataFrame, rMax: Double): DataFrame = {
-    val withCell = pts
-      .withColumn("cx", floor(col("x") / rMax).cast("long"))
-      .withColumn("cy", floor(col("y") / rMax).cast("long"))
-    val offsets = typedlit(for (dx <- -1 to 1; dy <- -1 to 1) yield (dx, dy))
-    val probe = withCell
-      .select(col("pid").as("a_pid"), col("x").as("ax"), col("y").as("ay"),
-        col("cx"), col("cy"), explode(offsets).as("o"))
-      .select(col("a_pid"), col("ax"), col("ay"),
-        (col("cx") + col("o._1")).as("jcx"), (col("cy") + col("o._2")).as("jcy"))
-    val build = withCell.select(col("pid").as("b_pid"), col("x").as("bx"),
-      col("y").as("by"), col("cx").as("jcx"), col("cy").as("jcy"))
-    val d2 = (col("ax") - col("bx")) * (col("ax") - col("bx")) +
-      (col("ay") - col("by")) * (col("ay") - col("by"))
-    probe.join(build, Seq("jcx", "jcy"))
-      .filter(col("a_pid") =!= col("b_pid") && d2 <= rMax * rMax)
-      .select(d2.as("d2"))
-  }
-
   def ripleyK(spark: SparkSession, dir: String,
               radii: Seq[Double] = Seq(1000.0, 2000.0, 3000.0)): DataFrame = {
     val rMax = radii.max

@@ -38,35 +38,33 @@ object CollapseEnvelopeBounds extends Rule[LogicalPlan] {
   /** The point fold is null exactly when an ordinate is null OR NaN (the
     * WKB empty-point convention its scaladoc pins), so a null check on the
     * struct (or any field: they are non-nullable when the struct isn't
-    * null) is `x, y non-null and non-NaN` — expressible with Catalyst's
-    * codegen-able IsNaN, which keeps the inferred-constraint filters out
-    * of the interpreted CodegenFallback path (the same cost the rect
-    * rewrite below removes for the rect form; r17-ADVICE item). */
+    * null) is `x, y non-null and non-NaN`, written with Catalyst's IsNaN.
+    * The inferred-constraint filters then never build the struct at all,
+    * the saving the rect rewrite below makes for the rect form. */
   private def pointNotNull(x: Expression, y: Expression): Expression =
     And(And(IsNotNull(x), IsNotNull(y)),
         And(Not(IsNaN(x)), Not(IsNaN(y))))
 
+  /** The rect fold is null exactly when a corner argument is null: its
+    * Envelope.isNull branch is unreachable (minx ≤ x0 ≤ maxx by
+    * construction, NaN comparisons are all false), and the struct fields
+    * are non-nullable. So a null check on the struct or any field is a
+    * null check on the corners, and the inferred-constraint filters (one
+    * isnotnull per struct field, each holding a full copy of the corner
+    * arithmetic) need not evaluate the fold or allocate its row. */
+  private def rectNotNull(r: StEnvelopeBoundsRect): Expression =
+    r.children.map(IsNotNull(_): Expression).reduce(And(_, _))
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case StEnvelopeBounds(StMakeEnvelope(cs)) if cs.forall(_.deterministic) =>
-      StEnvelopeBoundsRect(cs)
+    case StEnvelopeBounds(e: StMakeEnvelope) if e.children.forall(_.deterministic) =>
+      StEnvelopeBoundsRect(e.first, e.second, e.third, e.fourth)
     case StEnvelopeBounds(StPoint(x, y)) if x.deterministic && y.deterministic =>
       StEnvelopeBoundsPoint(x, y)
-    // The rect fold is null exactly when a corner argument is null: its
-    // Envelope.isNull branch is unreachable (minx ≤ x0 ≤ maxx by
-    // construction, NaN comparisons are all false), and the struct
-    // fields are non-nullable. So a null check on any field is a null
-    // check on the corner arguments — which keeps the inferred-constraint
-    // filters (one isnotnull per struct field, each holding a full copy
-    // of the corner arithmetic) out of the interpreted CodegenFallback
-    // path entirely: the rewritten predicate is plain arithmetic that
-    // whole-stage codegen compiles with subexpression elimination.
-    case IsNotNull(GetStructField(StEnvelopeBoundsRect(cs), _, _))
-        if cs.forall(_.deterministic) =>
-      cs.map(IsNotNull(_): org.apache.spark.sql.catalyst.expressions.Expression)
-        .reduce(And(_, _))
-    case IsNotNull(StEnvelopeBoundsRect(cs)) if cs.forall(_.deterministic) =>
-      cs.map(IsNotNull(_): org.apache.spark.sql.catalyst.expressions.Expression)
-        .reduce(And(_, _))
+    case IsNotNull(GetStructField(r: StEnvelopeBoundsRect, _, _))
+        if r.children.forall(_.deterministic) =>
+      rectNotNull(r)
+    case IsNotNull(r: StEnvelopeBoundsRect) if r.children.forall(_.deterministic) =>
+      rectNotNull(r)
     case IsNotNull(GetStructField(StEnvelopeBoundsPoint(x, y), _, _))
         if x.deterministic && y.deterministic =>
       pointNotNull(x, y)

@@ -5,7 +5,7 @@ import graft.SparkEntry
 /** The argument check the query tools share: every name must be a
   * registered query, and a bad call prints the tool's usage or the
   * unknown names, then every known name. */
-private[tools] object QueryNames {
+private[graft] object QueryNames {
   /** What is wrong with running `names`: none given, or some that no
     * query is registered under. None when they can all run. */
   def problem(usage: String, names: Seq[String]): Option[String] = {

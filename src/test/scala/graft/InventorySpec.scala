@@ -67,4 +67,21 @@ class InventorySpec extends AnyFunSuite {
     val offenders = files.filter(f => read(f).contains(base)).sorted
     assert(offenders.isEmpty, s"source files naming $base: $offenders")
   }
+
+  test("the spatial algebra has one code-generation path: its arity bases") {
+    // every St* function generates code through the template its arity
+    // base declares; a CodegenFallback mix-in or a hand-written doGenCode
+    // in a function class would bring back a second evaluation design
+    val src = read("src/main/scala/graft/exprs/SpatialExpressions.scala")
+    assert(!src.contains("CodegenFallback"), "SpatialExpressions.scala names CodegenFallback")
+    val Definition = """^(?:sealed |abstract |case )*(?:class|trait|object) (\w+).*""".r
+    val declarers = src.linesIterator.foldLeft((Option.empty[String], Seq.empty[String])) {
+      case ((_, found), Definition(name)) => (Some(name), found)
+      case ((current, found), line) if line.contains("def doGenCode") =>
+        (current, found ++ current)
+      case (state, _) => state
+    }._2
+    val bases = Set("StUnary", "StBinary", "StTernary", "StQuaternary")
+    assert(declarers.toSet == bases, s"doGenCode declared in $declarers, expected only in $bases")
+  }
 }

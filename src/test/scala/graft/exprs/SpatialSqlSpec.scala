@@ -964,4 +964,26 @@ class SpatialSqlSpec extends AnyFunSuite {
     val e = malformedError(one("SELECT st_geomfromwkb(X'0000000003') AS g"))
     assert(e.getMessage.startsWith("st_geomfromwkb: malformed input '0000000003'"), e.getMessage)
   }
+
+  test("a NaN ordinate makes an empty point, in generated and interpreted code") {
+    // the WKB convention: st_point(NaN, 1) reads back as POINT EMPTY, and
+    // each function then follows its empty-geometry rule. The ordinate
+    // comes from a column, so the projection is not folded at planning
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+      SparkFixture.withConf("spark.sql.codegen.factoryMode", mode) {
+        SparkFixture.withConf("spark.sql.codegen.wholeStage", wholeStage) {
+          SparkFixture.withConf("spark.sql.codegen.fallback", "false") {
+            val r = spark.range(1)
+              .selectExpr("st_point(CAST('NaN' AS DOUBLE) + id, 1) AS p")
+              .selectExpr("st_astext(st_buffer(p, 1))", "st_x(p)", "st_astext(p)",
+                "st_envelope_bounds(p)", "st_envelope_bounds(st_geomfromwkb(st_aswkb(p)))")
+              .head()
+            assert(r.getString(0) == "POLYGON EMPTY", mode)
+            assert(r.isNullAt(1), mode)
+            assert(r.getString(2) == "POINT EMPTY", mode)
+            assert(r.isNullAt(3) && r.isNullAt(4), mode)
+          }
+        }
+      }
+  }
 }

@@ -1032,7 +1032,7 @@ class PlanShapeSpec extends AnyFunSuite with FixtureDirs {
   }
 
   test("whole-stage codegen survives around the spatial expressions") {
-    // CodegenFallback expressions must not disable codegen for the rest of
+    // the spatial expressions must not disable codegen for the rest of
     // the plan: the executed flagship still contains WholeStageCodegen
     // spans. (AQE materializes codegen stages only after execution.)
     val df = SparkEntry.queries("q_geo_flagship")(spark, dir)
