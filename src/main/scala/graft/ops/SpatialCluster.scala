@@ -89,7 +89,7 @@ object SpatialCluster {
   /** The 5×5 region lattice the autocorrelation statistics read: its
     * one data-sized pass, the region rollup `(r, v)` with v = Σ lineitem
     * quantity (exact integers), and the global scalars over it. */
-  private case class Lattice(v: DataFrame) {
+  private final class Lattice(val v: DataFrame) {
     import org.apache.spark.sql.graftbridge.Bridge.scalarSubquery
     /** n, the region count, and S = Σv. */
     val n: Column = scalarSubquery(v.agg(count(lit(1))))
@@ -114,7 +114,7 @@ object SpatialCluster {
   }
 
   private def lattice(spark: SparkSession, dir: String): Lattice =
-    Lattice(lineitem(spark, dir)
+    new Lattice(lineitem(spark, dir)
       .select((col("l_partkey") % 25).cast("int").as("r"),
         col("l_quantity").cast("long").as("q"))
       .groupBy(col("r")).agg(sum(col("q")).as("v"))
