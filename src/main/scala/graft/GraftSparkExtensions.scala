@@ -13,10 +13,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `.config("spark.sql.extensions", "graft.GraftSparkExtensions")` at
   * session build. Every entry of the one SQL function table,
   * `functions.sqlFunctions`, is then resolvable in SQL text on any session
-  * of that context, with no per-session call. `functions.registerAll`
-  * installs the same table on a session built elsewhere; only this
-  * extension also installs the two optimizer rules (`CollapseStTransforms`,
-  * `CollapseEnvelopeBounds`) and the `graft_series` table function.
+  * of that context, with no per-session call. It is the one installer:
+  * it also installs the two optimizer rules (`CollapseStTransforms`,
+  * `CollapseEnvelopeBounds`), the spatial-join planner strategy and the
+  * `graft_series` table function.
   *
   * It also sizes Spark's generated-class cache to graft's own inventory:
   * `spark.sql.codegen.cache.maxEntries` becomes

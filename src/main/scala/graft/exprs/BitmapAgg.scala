@@ -50,13 +50,7 @@ case class BitmapAgg(
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (BIGINT id, INT universe), got " +
           s"(${left.dataType.sql}, ${right.dataType.sql})")
-    else if (right.dataType != IntegerType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName universe must be an INT literal")
-    else if (right.eval() == null || right.eval().asInstanceOf[Int] <= 0 ||
-      right.eval().asInstanceOf[Int] > (1 << 26))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName universe must be in (0, 2^26] — beyond that use kmv_agg")
-    else TypeCheckResult.TypeCheckSuccess
+    else SizeArg.check(prettyName, "universe", right, 1, 1 << 26)
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -135,27 +135,11 @@ case class CmsAgg(
 
 /** `cms_estimate(sketch, key)` — point frequency estimate: min over the
   * sketch's rows of the key's cell. Pure projection (the sketch usually
-  * arrives as a scalar subquery / broadcast constant), never shuffles.
-  * CodegenFallback: one probe per ROW GROUP of output in the intended
-  * shape (|distinct keys| rows), never in a per-event hot path. */
+  * arrives as a scalar subquery / broadcast constant), never shuffles. */
 case class CmsEstimate(left: Expression, right: Expression)
-  extends BinaryExpression
-  with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    extends StBinary[ArrayData, UTF8String]("cms_estimate", LongType)(Arg.Longs, Arg.Text) {
 
-  override def prettyName: String = "cms_estimate"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType.isInstanceOf[ArrayType] &&
-        left.dataType.asInstanceOf[ArrayType].elementType == LongType &&
-        right.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs (ARRAY<BIGINT> sketch, STRING key), got " +
-        s"(${left.dataType.sql}, ${right.dataType.sql})")
-
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(sketch: Any, key: Any): Any = {
-    val arr = sketch.asInstanceOf[ArrayData]
+  protected def op(arr: ArrayData, key: UTF8String): Any = {
     // wrong-sized sketches are reachable from the injected SQL surface
     // (any ARRAY<BIGINT> type-checks), so misuse must surface as a clear
     // SparkThrowable query error — the same discipline raise_error() uses —
@@ -168,7 +152,7 @@ case class CmsEstimate(left: Expression, right: Expression)
             s"produced by cms_agg (${CmsKernel.Depth} rows x ${CmsKernel.Width} " +
             s"buckets, row-major); got ${arr.numElements()} cells")),
         null)
-    val h = CmsKernel.keyHash(key.asInstanceOf[UTF8String].toString)
+    val h = CmsKernel.keyHash(key.toString)
     var min = Long.MaxValue
     var j = 0
     while (j < CmsKernel.Depth) {

@@ -1,7 +1,6 @@
 package graft.exprs
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** Hilbert space-filling-curve kernels — the locality-preserving
@@ -71,12 +70,8 @@ object Hilbert {
   * non-power-of-two n or out-of-grid coordinates (a layout bug, never a
   * data condition). */
 case class HilbertIndex(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hilbert_index"
-  override def nullSafeEval(nv: Any, xv: Any, yv: Any): Any = {
-    val (n, x, y) = (nv.asInstanceOf[Long], xv.asInstanceOf[Long], yv.asInstanceOf[Long])
+    extends StTernary[Long, Long, Long]("hilbert_index", LongType) {
+  protected def op(n: Long, x: Long, y: Long): Any = {
     Hilbert.checkN(n)
     require(x >= 0 && x < n && y >= 0 && y < n,
       s"hilbert_index: ($x, $y) outside the $n x $n grid")
@@ -88,14 +83,10 @@ case class HilbertIndex(first: Expression, second: Expression, third: Expression
 
 /** hilbert_xy(n, d) -> struct<x: bigint, y: bigint> — the inverse walk. */
 case class HilbertXY(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("x", LongType, nullable = false),
-    StructField("y", LongType, nullable = false)))
-  override def prettyName: String = "hilbert_xy"
-  override protected def nullSafeEval(nv: Any, dv: Any): Any = {
-    val (n, d) = (nv.asInstanceOf[Long], dv.asInstanceOf[Long])
+    extends StBinary[Long, Long]("hilbert_xy", StructType(Seq(
+      StructField("x", LongType, nullable = false),
+      StructField("y", LongType, nullable = false)))) {
+  protected def op(n: Long, d: Long): Any = {
     Hilbert.checkN(n)
     require(d >= 0 && d < n * n, s"hilbert_xy: index $d outside the $n x $n curve")
     val (x, y) = Hilbert.d2xy(n, d)

@@ -92,12 +92,7 @@ private[exprs] trait KmvSketch
   @transient protected lazy val kVal: Int = right.eval().asInstanceOf[Int]
 
   /** The k argument's checks, after the first argument's. */
-  protected def checkK: TypeCheckResult =
-    if (right.dataType != IntegerType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-    else if (right.eval() == null || right.eval().asInstanceOf[Int] <= 0)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be positive")
-    else TypeCheckResult.TypeCheckSuccess
+  protected def checkK: TypeCheckResult = SizeArg.check(prettyName, "k", right, 1)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

@@ -46,11 +46,7 @@ case class MgAgg(
     if (left.dataType != LongType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (BIGINT key, INT k), got ${left.dataType.sql}")
-    else if (right.dataType != IntegerType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-    else if (right.eval() == null || right.eval().asInstanceOf[Int] < 2)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be >= 2")
-    else TypeCheckResult.TypeCheckSuccess
+    else SizeArg.check(prettyName, "k", right, 2)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false

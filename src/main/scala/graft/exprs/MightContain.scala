@@ -2,12 +2,8 @@ package graft.exprs
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GetStructField, PlanExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetStructField, PlanExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -15,28 +11,21 @@ import org.apache.spark.util.sketch.BloomFilter
   * semi-join reduction (see `graft.functions.bloom_filter_agg`).
   *
   * Semantically identical to Spark's internal `BloomFilterMightContain`
-  * (null sketch or null key -> null; no false negatives), but with one
-  * codegen fix: Spark's template probes with `mightContainLong((Long)$v)`,
-  * and when the key constant-folds to a NEGATIVE literal Janino parses
-  * `(Long)-123L` as the binary subtraction `TypeName - literal` ("Expression
-  * java.lang.Long is not an rvalue") and the whole stage silently falls
-  * back to interpreted eval. The key slot is always a primitive `long`
-  * here (`ImplicitCastInputTypes` pins LongType), so this version calls
-  * `mightContainLong($v)` with no cast at all and stays inside
-  * whole-stage codegen for every key shape, constant or not.
+  * (null sketch or null key -> null; no false negatives). Its generated
+  * code is the shared template, which passes the key to the body without
+  * a cast, so a key that constant-folds to a negative literal compiles
+  * (Spark's own template casts it, and Janino reads `(Long)-123L` as a
+  * subtraction and falls back to interpreted eval).
   *
   * The sketch argument must be a constant or a scalar subquery — the same
   * contract Spark's runtime-filter expression enforces — because the
-  * filter is deserialized ONCE per task (driver side under codegen, via
-  * `addReferenceObj`), not per row.
+  * filter is deserialized ONCE per expression instance (once per task
+  * after serialization), not per row.
   */
 case class GraftMightContain(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
+    extends StBinary[Array[Byte], Long]("might_contain", BooleanType) {
 
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
-  override def prettyName: String = "might_contain"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val base = super.checkInputDataTypes()
@@ -50,39 +39,11 @@ case class GraftMightContain(left: Expression, right: Expression)
     }
   }
 
-  // Deserialized once per expression instance (per task after serialization,
-  // once on the driver under codegen); null sketch stays null.
-  @transient private lazy val bloom: BloomFilter = {
-    val bytes = left.eval(null).asInstanceOf[Array[Byte]]
-    if (bytes == null) null else BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-  }
+  // the sketch is a constant, so its non-null bytes deserialize once
+  @transient private lazy val bloom: BloomFilter =
+    BloomFilter.readFrom(new ByteArrayInputStream(left.eval(null).asInstanceOf[Array[Byte]]))
 
-  override def eval(input: InternalRow): Any = {
-    if (bloom == null) null
-    else {
-      val v = right.eval(input)
-      if (v == null) null else bloom.mightContainLong(v.asInstanceOf[Long])
-    }
-  }
-
-  override protected def doGenCode(ctx: codegen.CodegenContext,
-                                   ev: codegen.ExprCode): codegen.ExprCode = {
-    if (bloom == null) {
-      ev.copy(isNull = codegen.TrueLiteral,
-        value = codegen.JavaCode.defaultLiteral(dataType))
-    } else {
-      val bf = ctx.addReferenceObj("bloomFilter", bloom, classOf[BloomFilter].getName)
-      val valueEval = right.genCode(ctx)
-      ev.copy(code =
-        code"""
-          ${valueEval.code}
-          boolean ${ev.isNull} = ${valueEval.isNull};
-          boolean ${ev.value} = false;
-          if (!${ev.isNull}) {
-            ${ev.value} = $bf.mightContainLong(${valueEval.value});
-          }""")
-    }
-  }
+  protected def op(sketch: Array[Byte], key: Long): Any = bloom.mightContainLong(key)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): GraftMightContain =
     copy(left = l, right = r)

@@ -84,12 +84,7 @@ private[exprs] trait MrlSketch
   @transient protected lazy val kVal: Int = right.eval().asInstanceOf[Int]
 
   /** The k argument's checks, after the first argument's. */
-  protected def checkK: TypeCheckResult =
-    if (right.dataType != IntegerType || !right.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-    else if (right.eval() == null || right.eval().asInstanceOf[Int] < 2)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be >= 2")
-    else TypeCheckResult.TypeCheckSuccess
+  protected def checkK: TypeCheckResult = SizeArg.check(prettyName, "k", right, 2)
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(

@@ -3,7 +3,6 @@ package graft.exprs
 import graft.geom.{Crs, Geom}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,17 +19,13 @@ import org.locationtech.jts.io.ParseException
   *
   * Geometry columns are WKB bytes (`BinaryType`) — see SURVEY.md §7.3.
   * Each function is a case class with a body on JTS objects; its contract
-  * comes from one base, as Sedona's `InferredExpression` gives it:
-  *  - [[StFunction]] declares the SQL name, the argument and result types
-  *    with implicit casts to the argument types, the WKB encode of a JTS
-  *    result and the one generated-code template;
-  *  - [[StUnary]], [[StBinary]], [[StTernary]] and [[StQuaternary]] read
-  *    each argument through its [[Arg]], so a geometry argument reaches
-  *    the body decoded (through the per-thread decode cache), and
-  *    [[StPredicate]] is the binary form for the DE-9IM relations,
-  *    planned as a Catalyst `Predicate`.
-  * Both evaluation modes run the same `nullSafeEval`; in generated code
-  * the children stay compiled and the template calls it by reference.
+  * comes from the one base every graft scalar function shares
+  * (`StFunction.scala`), as Sedona's `InferredExpression` gives it: the
+  * SQL name, implicit casts to the argument types, the WKB encode of a
+  * JTS result and the one generated-code template, with a geometry
+  * argument reaching the body decoded through its [[Arg]]. Here
+  * [[StPredicate]] adds the binary form for the DE-9IM relations,
+  * planned as a Catalyst `Predicate`.
   */
 object SpatialExpressions {
   /** `struct(center geometry, radius double)`, the circle results. */
@@ -55,119 +50,6 @@ object SpatialExpressions {
   }
 }
 import SpatialExpressions._
-
-/** How a spatial function reads one argument: the Catalyst type implicit
-  * casts target, and the conversion to the JVM type its body takes. The
-  * bases find an argument's `Arg` from the body's parameter type. */
-sealed abstract class Arg[A](val dataType: DataType) extends Serializable {
-  def read(v: Any): A
-}
-object Arg {
-  /** A geometry, decoded through the per-thread decode cache. The decoded
-    * object is shared across rows, so a body must not mutate it
-    * ([[Geom.mapVertices]] copies first). */
-  implicit object Geo extends Arg[Geometry](BinaryType) {
-    def read(v: Any): Geometry = Geom.fromWkbCached(v.asInstanceOf[Array[Byte]])
-  }
-  /** A geometry's WKB bytes as they came, for bodies that return or quote
-    * their input. */
-  implicit object Wkb extends Arg[Array[Byte]](BinaryType) {
-    def read(v: Any): Array[Byte] = v.asInstanceOf[Array[Byte]]
-  }
-  implicit object F64 extends Arg[Double](DoubleType) {
-    def read(v: Any): Double = v.asInstanceOf[Double]
-  }
-  implicit object I32 extends Arg[Int](IntegerType) {
-    def read(v: Any): Int = v.asInstanceOf[Int]
-  }
-  implicit object Text extends Arg[UTF8String](StringType) {
-    def read(v: Any): UTF8String = v.asInstanceOf[UTF8String]
-  }
-  /** An array of geometries as WKB; a body decodes its elements. */
-  implicit object Geoms extends Arg[ArrayData](ArrayType(BinaryType)) {
-    def read(v: Any): ArrayData = v.asInstanceOf[ArrayData]
-  }
-}
-
-/** The contract every spatial function declares once: its SQL name (the
-  * `prettyName` of plan strings and unaliased columns), its argument and
-  * result types, implicit casts to the argument types, the encode of a
-  * result, and its generated code. Serializable, so the bases'
-  * constructor fields travel with a task (the first non-serializable
-  * superclass, Spark's, then needs only its no-argument constructor). */
-sealed trait StFunction extends Expression with ImplicitCastInputTypes with Serializable {
-  protected def sqlName: String
-  protected def args: Seq[Arg[_]]
-  protected def resultType: DataType
-  override def prettyName: String = sqlName
-  override def inputTypes: Seq[DataType] = args.map(_.dataType)
-  override def dataType: DataType = resultType
-
-  /** A JTS result leaves as WKB; anything else (input bytes passed through,
-    * numbers, strings, rows, null) leaves as it is. */
-  protected final def encode(r: Any): Any = r match {
-    case g: Geometry => Geom.toWkb(g)
-    case _ => r
-  }
-
-  /** The body's generated code on non-null child values, for the arity
-    * bases' `nullSafeCodeGen`: it calls `nullSafeEval` through a reference
-    * object and unboxes the result, null where `nullable` allows it. */
-  protected final def genBody(ctx: CodegenContext, ev: ExprCode, values: String*): String = {
-    val self = ctx.addReferenceObj("stFunction", this)
-    val result = ctx.freshName("result")
-    val assign = s"${ev.value} = (${CodeGenerator.boxedType(dataType)}) $result;"
-    s"""Object $result = $self.nullSafeEval(${values.mkString(", ")});
-       |${if (nullable) s"if ($result == null) ${ev.isNull} = true; else $assign" else assign}
-       |""".stripMargin
-  }
-}
-
-/** A one-argument spatial function; `op` runs on non-null input. */
-abstract class StUnary[A](protected val sqlName: String, protected val resultType: DataType)
-                         (implicit a: Arg[A])
-    extends UnaryExpression with StFunction {
-  protected def op(x: A): Any
-  protected def args: Seq[Arg[_]] = Seq(a)
-  override def nullSafeEval(v: Any): Any = encode(op(a.read(v)))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => genBody(ctx, ev, v))
-}
-
-/** A two-argument spatial function; `op` runs on non-null input. */
-abstract class StBinary[A, B](protected val sqlName: String, protected val resultType: DataType)
-                             (implicit a: Arg[A], b: Arg[B])
-    extends BinaryExpression with StFunction {
-  protected def op(x: A, y: B): Any
-  protected def args: Seq[Arg[_]] = Seq(a, b)
-  override def nullSafeEval(v: Any, w: Any): Any = encode(op(a.read(v), b.read(w)))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, w) => genBody(ctx, ev, v, w))
-}
-
-/** A three-argument spatial function; `op` runs on non-null input. */
-abstract class StTernary[A, B, C](protected val sqlName: String, protected val resultType: DataType)
-                                 (implicit a: Arg[A], b: Arg[B], c: Arg[C])
-    extends TernaryExpression with StFunction {
-  protected def op(x: A, y: B, z: C): Any
-  protected def args: Seq[Arg[_]] = Seq(a, b, c)
-  override def nullSafeEval(v: Any, w: Any, u: Any): Any =
-    encode(op(a.read(v), b.read(w), c.read(u)))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, w, u) => genBody(ctx, ev, v, w, u))
-}
-
-/** A four-argument spatial function; `op` runs on non-null input. */
-abstract class StQuaternary[A, B, C, D](protected val sqlName: String, protected val resultType: DataType)
-                                       (implicit a: Arg[A], b: Arg[B], c: Arg[C], d: Arg[D])
-    extends QuaternaryExpression with StFunction {
-  protected def op(w: A, x: B, y: C, z: D): Any
-  protected def args: Seq[Arg[_]] = Seq(a, b, c, d)
-  override def nullSafeEval(v: Any, w: Any, u: Any, t: Any): Any =
-    encode(op(a.read(v), b.read(w), c.read(u), d.read(t)))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, w, u, t) => genBody(ctx, ev, v, w, u, t))
-}
 
 /** A DE-9IM relation of two geometries, planned as a Catalyst `Predicate`
   * (filter pushdown and `SpatialJoinStrategy` match it by class). */
@@ -1035,11 +917,15 @@ case class StMakeLine(child: Expression) extends StUnary[ArrayData]("st_makeline
 /** st_simplify(geom, tolerance) — Douglas-Peucker simplification (Sedona
   * `ST_Simplify`/PostGIS semantics: plain DP, may not preserve topology;
   * the vertex-thinning pass that makes 100 TB of dense trajectories /
-  * high-resolution boundaries cheap to index and join). */
+  * high-resolution boundaries cheap to index and join). A NaN tolerance
+  * is a named error: JTS passes it through its `< 0` check and then
+  * recurses without end on a one-point section (`POINT (1 2)`). */
 case class StSimplify(left: Expression, right: Expression)
     extends StBinary[Geometry, Double]("st_simplify", BinaryType) {
-  protected def op(g: Geometry, tol: Double): Any =
+  protected def op(g: Geometry, tol: Double): Any = {
+    if (tol.isNaN) throw new IllegalArgumentException(s"$prettyName: tolerance is NaN")
     org.locationtech.jts.simplify.DouglasPeuckerSimplifier.simplify(g, tol)
+  }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StSimplify =
     copy(left = l, right = r)
 }

@@ -2,7 +2,7 @@ package graft.exprs
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,6 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * code (TextQueries) so Catalyst keeps the surrounding plan declarative.
   * All hashes are deterministic (fixed seeds) — required for the driver's
   * reproducibility checks and for cross-run joins at scale.
+  *
+  * The scalar functions below are body-only case classes on the
+  * `StFunction` arity bases, which declare their name, types, null
+  * handling and generated code. [[ExplodeNgrams]] is a `Generator`, so it
+  * stays off the bases and evaluates through `CodegenFallback`.
   */
 object TextHash {
 
@@ -187,8 +192,7 @@ object TextHash {
     * sorted-distinct precondition (the joins store gram sets through
     * `array_sort(array_distinct(...))`); on unsorted input the count is
     * simply wrong, so this is not a general `array_intersect` substitute. */
-  def sortedInterCount(a: org.apache.spark.sql.catalyst.util.ArrayData,
-                       b: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
+  def sortedInterCount(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     var i = 0
@@ -207,13 +211,9 @@ object TextHash {
 
 /** minhash_sig(text, k, shingleLen) -> array<bigint> of k signature minima. */
 case class MinHashSig(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes with CodegenFallback {
-  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(t: Any, k: Any, n: Any): Any =
-    new GenericArrayData(TextHash.minhashSig(
-      t.asInstanceOf[UTF8String].toString, k.asInstanceOf[Int], n.asInstanceOf[Int]))
+    extends StTernary[UTF8String, Int, Int]("minhash_sig", ArrayType(LongType, containsNull = false)) {
+  protected def op(t: UTF8String, k: Int, n: Int): Any =
+    new GenericArrayData(TextHash.minhashSig(t.toString, k, n))
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): MinHashSig =
     copy(first = a, second = b, third = c)
 }
@@ -221,23 +221,11 @@ case class MinHashSig(first: Expression, second: Expression, third: Expression)
 /** minhash_bands(text, numBands, rowsPerBand, shingleLen) -> array<bigint>
   * of per-band bucket hashes (the banded-LSH key material: two documents
   * collide in band b iff all rowsPerBand minima of that band agree). */
-case class MinHashBands(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes with CodegenFallback {
-  require(children.length == 4, "minhash_bands(text, numBands, rowsPerBand, shingleLen)")
-  override def inputTypes: Seq[DataType] =
-    Seq(StringType, IntegerType, IntegerType, IntegerType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "minhash_bands"
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    // SQL null propagation: any null argument yields null
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) return null
-    val t = vs(0)
-    val bands = vs(1).asInstanceOf[Int]
-    val rows = vs(2).asInstanceOf[Int]
-    val n = vs(3).asInstanceOf[Int]
-    val sig = TextHash.minhashSig(t.asInstanceOf[UTF8String].toString, bands * rows, n)
+case class MinHashBands(first: Expression, second: Expression, third: Expression, fourth: Expression)
+    extends StQuaternary[UTF8String, Int, Int, Int]("minhash_bands",
+      ArrayType(LongType, containsNull = false)) {
+  protected def op(t: UTF8String, bands: Int, rows: Int, n: Int): Any = {
+    val sig = TextHash.minhashSig(t.toString, bands * rows, n)
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
@@ -252,78 +240,44 @@ case class MinHashBands(children: Seq[Expression])
     }
     new GenericArrayData(out)
   }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): MinHashBands =
-    copy(children = cs)
+  override protected def withNewChildrenInternal(
+      a: Expression, b: Expression, c: Expression, d: Expression): MinHashBands =
+    copy(first = a, second = b, third = c, fourth = d)
 }
 
-/** simhash64(text, shingleLen) -> bigint. Fully codegen'd: the kernel is
-  * a static call, so the expression stays inside whole-stage codegen
-  * instead of falling back to boxed eval. */
+/** simhash64(text, shingleLen) -> bigint. */
 case class SimHash64(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def nullSafeEval(t: Any, n: Any): Any =
-    TextHash.simhash64(t.asInstanceOf[UTF8String].toString, n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"graft.exprs.TextHash.simhash64($t.toString(), $n)")
+    extends StBinary[UTF8String, Int]("simhash64", LongType) {
+  protected def op(t: UTF8String, n: Int): Any = TextHash.simhash64(t.toString, n)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SimHash64 =
     copy(left = l, right = r)
 }
 
-/** hamming64(a, b) -> int — Hamming distance between two 64-bit hashes.
-  * Codegen'd to a bare xor + popcount. */
+/** hamming64(a, b) -> int — Hamming distance between two 64-bit hashes. */
 case class Hamming64(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType, LongType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "hamming64"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"java.lang.Long.bitCount($a ^ $b)")
+    extends StBinary[Long, Long]("hamming64", IntegerType) {
+  protected def op(a: Long, b: Long): Any = java.lang.Long.bitCount(a ^ b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Hamming64 =
     copy(left = l, right = r)
 }
 
-/** ngram_jaccard(a, b, shingleLen) -> double — exact char-n-gram Jaccard.
-  * Codegen'd static call (the verify kernel runs once per candidate pair —
-  * the hottest expression in the LSH pipeline). */
+/** ngram_jaccard(a, b, shingleLen) -> double — exact char-n-gram Jaccard,
+  * the verify kernel of the LSH pipeline (one call per candidate pair). */
 case class NGramJaccard(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType, IntegerType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ngram_jaccard"
-  override protected def nullSafeEval(a: Any, b: Any, n: Any): Any =
-    TextHash.ngramJaccard(
-      a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString,
-      n.asInstanceOf[Int])
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b, n) =>
-      s"graft.exprs.TextHash.ngramJaccard($a.toString(), $b.toString(), $n)")
+    extends StTernary[UTF8String, UTF8String, Int]("ngram_jaccard", DoubleType) {
+  protected def op(a: UTF8String, b: UTF8String, n: Int): Any =
+    TextHash.ngramJaccard(a.toString, b.toString, n)
   override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): NGramJaccard =
     copy(first = a, second = b, third = c)
 }
 
 /** sorted_inter_count(a, b) -> int — |a ∩ b| over ascending-sorted
   * distinct-long arrays (see [[TextHash.sortedInterCount]] for the merge
-  * kernel and the precondition). Codegen'd static call: the verify kernel
-  * of the prefix-filter similarity joins, one call per candidate pair. */
+  * kernel and the precondition): the verify kernel of the prefix-filter
+  * similarity joins, one call per candidate pair. */
 case class SortedInterCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_inter_count"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextHash.sortedInterCount(
-      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: codegen.CodegenContext, ev: codegen.ExprCode): codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.exprs.TextHash.sortedInterCount($a, $b)")
+    extends StBinary[ArrayData, ArrayData]("sorted_inter_count", IntegerType)(Arg.Longs, Arg.Longs) {
+  protected def op(a: ArrayData, b: ArrayData): Any = TextHash.sortedInterCount(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedInterCount =
     copy(left = l, right = r)
 }
@@ -367,11 +321,7 @@ case class ExplodeNgrams(first: Expression, second: Expression)
     if (first.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (STRING text, INT n), got (${first.dataType.sql}, ${second.dataType.sql})")
-    else if (second.dataType != IntegerType || !second.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName n must be an INT literal")
-    else if (second.eval() == null || second.eval().asInstanceOf[Int] <= 0)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName n must be positive")
-    else TypeCheckResult.TypeCheckSuccess
+    else SizeArg.check(prettyName, "n", second, 1)
   }
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow)

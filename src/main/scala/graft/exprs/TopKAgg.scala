@@ -49,11 +49,7 @@ case class TopKAgg(
       TypeCheckResult.TypeCheckFailure(
         s"$prettyName needs (BIGINT key, BIGINT score, INT k), got " +
           s"(${first.dataType.sql}, ${second.dataType.sql}, ${third.dataType.sql})")
-    else if (third.dataType != IntegerType || !third.foldable)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be an INT literal")
-    else if (third.eval() == null || third.eval().asInstanceOf[Int] <= 0)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName k must be positive")
-    else TypeCheckResult.TypeCheckSuccess
+    else SizeArg.check(prettyName, "k", third, 1)
   }
 
   override def dataType: DataType = ArrayType(

@@ -1,7 +1,7 @@
 package graft
 
 import graft.exprs._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -11,12 +11,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (reference: spark_job/process_geodata.py:102-139).
   *
   * SQL text (`spark.sql("... st_area(g) ...")`) reaches the same
-  * expressions through one table, [[sqlFunctions]], with two installers:
+  * expressions through one table, [[sqlFunctions]], and one installer:
   * [[GraftSparkExtensions]] (`spark.sql.extensions`, the analogue of
   * Sedona's extension-based registration, reference:
-  * airflow_dag/dag_geo_pipeline.py:20; every [[Session]] takes this path)
-  * and [[registerAll]] for a session built without that conf. Only the
-  * extension also installs the optimizer rules and `graft_series`.
+  * airflow_dag/dag_geo_pipeline.py:20; every [[Session]] takes this path),
+  * which also installs the optimizer rules, the spatial-join strategy and
+  * `graft_series`.
   */
 object functions {
   private def col(e: Expression): Column = Bridge.column(e)
@@ -170,7 +170,7 @@ object functions {
     col(HilbertIndex(ex(n), ex(x), ex(y)))
   def hilbert_xy(n: Column, d: Column): Column = col(HilbertXY(ex(n), ex(d)))
   def minhash_bands(text: Column, numBands: Column, rowsPerBand: Column, shingleLen: Column): Column =
-    col(MinHashBands(Seq(ex(text), ex(numBands), ex(rowsPerBand), ex(shingleLen))))
+    col(MinHashBands(ex(text), ex(numBands), ex(rowsPerBand), ex(shingleLen)))
   def simhash64(text: Column, shingleLen: Column): Column =
     col(SimHash64(ex(text), ex(shingleLen)))
   def hamming64(a: Column, b: Column): Column = col(Hamming64(ex(a), ex(b)))
@@ -295,10 +295,8 @@ object functions {
   /** The SQL function table: every graft function that SQL text can call,
     * by name, with its builder. Each builder checks the argument count, so
     * SQL like `st_dwithin(a, b)` fails with Spark's named wrong-num-args
-    * analysis error, not an IndexOutOfBoundsException. Two installers read
-    * it: [[GraftSparkExtensions]] injects it into every session built with
-    * `spark.sql.extensions`, and [[registerAll]] registers it on a session
-    * built without that conf. */
+    * analysis error, not an IndexOutOfBoundsException. [[GraftSparkExtensions]]
+    * injects it into every session built with `spark.sql.extensions`. */
   private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
     def fn(name: String, arity: Int)(b: Seq[Expression] => Expression) =
       name -> { (es: Seq[Expression]) =>
@@ -419,7 +417,7 @@ object functions {
       f3("hilbert_index", HilbertIndex(_, _, _)),
       f2("hilbert_xy", HilbertXY),
       f3("minhash_sig", MinHashSig(_, _, _)),
-      fn("minhash_bands", 4)(MinHashBands(_)),
+      fn("minhash_bands", 4)(es => MinHashBands(es.head, es(1), es(2), es(3))),
       f2("simhash64", SimHash64),
       f2("hamming64", Hamming64),
       f3("ngram_jaccard", NGramJaccard(_, _, _)),
@@ -440,25 +438,5 @@ object functions {
         }
       }),
       f2("might_contain", GraftMightContain(_, _)))
-  }
-
-  /** Register every [[sqlFunctions]] entry for SQL-text use on this
-    * session. Idempotent; temp (session-scoped) registrations. Also
-    * installs the spatial-join planner strategy when the session's planner
-    * lacks it (a session built with the extension already has it). For
-    * sessions built without `spark.sql.extensions=graft.GraftSparkExtensions`;
-    * it does not install the extension's optimizer rules or
-    * `graft_series`, and it does not size Spark's codegen cache, a static
-    * conf: a JVM whose first codegen runs under such a session keeps
-    * Spark's 100-entry cache, so repeated queries recompile part of their
-    * generated code. */
-  def registerAll(spark: SparkSession): Unit = {
-    if (!Bridge.plannerStrategies(spark).contains(graft.plans.SpatialJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.SpatialJoinStrategy
-    val reg = Bridge.functionRegistry(spark)
-    sqlFunctions.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
   }
 }

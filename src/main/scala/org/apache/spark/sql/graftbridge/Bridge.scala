@@ -2,16 +2,14 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Narrow bridge to `private[sql]` and `private[spark]` Spark internals:
-  * Column <-> Expression conversion, the session FunctionRegistry and
-  * planner, and the active context's conf. Lives under
-  * `org.apache.spark.sql` for access, exactly like other Spark extension
+  * Column <-> Expression conversion, plan and subquery wrapping, temp
+  * directories, Spark's named errors and the active context's conf. Lives
+  * under `org.apache.spark.sql` for access, exactly like other Spark extension
   * libraries do; everything else in graft uses only this object. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -32,12 +30,6 @@ object Bridge {
     * Spark's shutdown hook (`Utils.createTempDir`). */
   def tempDir(prefix: String): String =
     org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
-  def functionRegistry(spark: SparkSession): FunctionRegistry =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
-  /** Every strategy the session's planner runs: the `experimental` ones,
-    * then those injected through `spark.sql.extensions`, then Spark's own. */
-  def plannerStrategies(spark: SparkSession): Seq[SparkStrategy] =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
 
   /** Entries of Spark's generated-class cache on a graft context. Spark's
     * default, 100, is split by Guava into 4 LRU segments of 25, and one

@@ -4,14 +4,14 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark.sql.extensions injection path (the reference's Sedona
-  * mechanism): a session built with the extension class resolves every
-  * entry of the SQL function table from SQL text without registerAll. */
+  * mechanism), graft's one installer: a session built with the extension
+  * class resolves every entry of the SQL function table from SQL text. */
 class GraftSparkExtensionsSpec extends AnyFunSuite {
 
   /** Runs `body` on a fresh session over the shared context that gets the
-    * graft surface only from the extension: no registerAll call happens on
-    * it. spark.sql.extensions is a STATIC conf: it must be on the
-    * SparkContext (set by the first builder of the JVM — SparkFixture); a
+    * graft surface from the extension. spark.sql.extensions is a STATIC
+    * conf: it must be on the SparkContext (set by the first builder of the
+    * JVM — SparkFixture); a
     * fresh session over that context re-applies the extension injections. */
   private def withExtensionSession(body: SparkSession => Unit): Unit = {
     graft.SparkFixture.spark // ensure the context (with the static conf) exists
@@ -51,9 +51,9 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       assert("st_transform".r.findAllIn(optimized).size == 1,
         s"chained transforms should collapse to one:\n$optimized")
       assert(chained.head().getString(0) == "POINT (-5193566 -2698813)")
-      // SpatialJoinStrategy also arrives via the extension (no registerAll
-      // on this session): an st_intersects join over SQL text plans the
-      // R-tree operator, not BroadcastNestedLoopJoin
+      // SpatialJoinStrategy also arrives via the extension: an
+      // st_intersects join over SQL text plans the R-tree operator, not
+      // BroadcastNestedLoopJoin
       val join = s.sql(
         """SELECT /*+ BROADCAST(b) */ count(*) AS n
           |FROM (SELECT st_makeenvelope(0.0D, 0.0D, 1.0D, 1.0D) AS ga) a
@@ -62,8 +62,7 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       assert(join.queryExecution.sparkPlan.toString.contains("BroadcastRTreeSpatialJoin"),
         join.queryExecution.sparkPlan.toString.take(1200))
       assert(join.head().getLong(0) == 1L)
-      // full registerAll parity on an extensions-only session: st_dwithin
-      // and the bloom runtime-filter pair must resolve without registerAll
+      // st_dwithin and the bloom runtime-filter pair resolve in SQL text
       val parity = s.sql(
         """SELECT st_dwithin(st_point(0.0D, 0.0D), st_point(3.0D, 4.0D), 5.0D) AS d,
           |  might_contain((SELECT bloom_filter_agg(xxhash64(x)) FROM range(50) t(x)),
@@ -128,10 +127,7 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       val names = graft.functions.sqlFunctions.map(_._1)
       assert(names.distinct == names, s"duplicate names: ${names.diff(names.distinct)}")
       val missing = names.filterNot(s.catalog.functionExists)
-      assert(missing.isEmpty, s"not resolvable without registerAll: $missing")
-      // the same SQL on a session after registerAll returns the same row
-      val registered = s.newSession()
-      graft.functions.registerAll(registered)
+      assert(missing.isEmpty, s"not resolvable: $missing")
       Seq(
         "SELECT st_envelope_bounds(st_geomfromwkt('LINESTRING (1 2, 4 -3)')) AS b",
         "SELECT st_distance_geodesic(st_point(0.0D, 0.0D), st_point(1.0D, 1.0D)) AS d",
@@ -145,7 +141,6 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       ).foreach { sql =>
         val viaExtension = s.sql(sql).collect().toSeq
         assert(viaExtension.size == 1 && !viaExtension.head.isNullAt(0), sql)
-        assert(viaExtension == registered.sql(sql).collect().toSeq, sql)
       }
     }
   }
@@ -170,20 +165,6 @@ class GraftSparkExtensionsSpec extends AnyFunSuite {
       case (name, e) if e.prettyName != name => s"$name prints as ${e.prettyName}"
     }
     assert(misnamed.isEmpty, misnamed)
-  }
-
-  test("registerAll on an extension session keeps exactly one SpatialJoinStrategy") {
-    import org.apache.spark.sql.graftbridge.Bridge.plannerStrategies
-    withExtensionSession { s =>
-      def joinStrategies(x: SparkSession) = plannerStrategies(x).count(_ == graft.plans.SpatialJoinStrategy)
-      assert(joinStrategies(s) == 1)
-      graft.functions.registerAll(s)
-      graft.functions.registerAll(s)
-      assert(joinStrategies(s) == 1, plannerStrategies(s).mkString(", "))
-      val other = s.newSession()
-      graft.functions.registerAll(other)
-      assert(joinStrategies(other) == 1, plannerStrategies(other).mkString(", "))
-    }
   }
 
   test("Session.local leaves adaptive execution on, by Spark's default") {

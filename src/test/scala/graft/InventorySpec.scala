@@ -68,20 +68,32 @@ class InventorySpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"source files naming $base: $offenders")
   }
 
-  test("the spatial algebra has one code-generation path: its arity bases") {
-    // every St* function generates code through the template its arity
-    // base declares; a CodegenFallback mix-in or a hand-written doGenCode
-    // in a function class would bring back a second evaluation design
-    val src = read("src/main/scala/graft/exprs/SpatialExpressions.scala")
-    assert(!src.contains("CodegenFallback"), "SpatialExpressions.scala names CodegenFallback")
-    val Definition = """^(?:sealed |abstract |case )*(?:class|trait|object) (\w+).*""".r
-    val declarers = src.linesIterator.foldLeft((Option.empty[String], Seq.empty[String])) {
-      case ((_, found), Definition(name)) => (Some(name), found)
-      case ((current, found), line) if line.contains("def doGenCode") =>
-        (current, found ++ current)
-      case (state, _) => state
-    }._2
+  test("every graft scalar function has one code-generation path: its arity bases") {
+    // every function in graft.exprs generates code through the template
+    // its arity base declares; a CodegenFallback mix-in outside a Generator
+    // or a hand-written doGenCode in a function class would bring back a
+    // second evaluation design
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/exprs")
+    val walk = java.nio.file.Files.list(dir)
+    val files = try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toList.sorted
+      finally walk.close()
+    assert(files.exists(_.endsWith("StFunction.scala")), s"no StFunction.scala among $files")
+    // each code line (not an import or a comment) with the top-level
+    // definition it belongs to
+    val Definition = """^(?:sealed |abstract |case |private\[\w+\] )*(?:class|trait|object) (\w+).*""".r
+    val owned = files.flatMap { f =>
+      read(f).linesIterator.scanLeft(("", "")) {
+        case (_, line @ Definition(name)) => (name, line)
+        case ((owner, _), line) => (owner, line)
+      }.drop(1).filterNot { case (_, l) => l.trim.matches("""(import |\*|/\*|//).*""") }
+    }
+    def owners(p: String => Boolean): Set[String] = owned.collect { case (o, l) if p(l) => o }.toSet
+    val generators = owners(_.contains("extends Generator"))
+    val fallbacks = owners(_.contains("CodegenFallback"))
+    assert(fallbacks.subsetOf(generators),
+      s"CodegenFallback mixed into $fallbacks, of which Generators: $generators")
+    val declarers = owners(_.contains("def doGenCode"))
     val bases = Set("StUnary", "StBinary", "StTernary", "StQuaternary")
-    assert(declarers.toSet == bases, s"doGenCode declared in $declarers, expected only in $bases")
+    assert(declarers == bases, s"doGenCode declared in $declarers, expected only in $bases")
   }
 }

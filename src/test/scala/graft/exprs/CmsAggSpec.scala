@@ -49,7 +49,6 @@ class CmsAggSpec extends AnyFunSuite {
 
   test("SQL-text surface: cms_agg in a scalar subquery probed by cms_estimate") {
     import spark.implicits._
-    graft.functions.registerAll(spark)
     Seq("a", "b", "a", "c", "a", "b").toDF("k").createOrReplaceTempView("cms_in")
     val got = spark.sql(
       """SELECT k, cms_estimate((SELECT cms_agg(k) FROM cms_in), k) AS est
@@ -62,7 +61,6 @@ class CmsAggSpec extends AnyFunSuite {
 
   test("misuse fails loudly: wrong-sized sketch and non-BMP key raise clear SparkThrowables") {
     import spark.implicits._
-    graft.functions.registerAll(spark)
     // wrong-sized sketch: any ARRAY<BIGINT> type-checks, so the size
     // contract must surface as a query error, not a bare require
     val eSize = intercept[Exception] {

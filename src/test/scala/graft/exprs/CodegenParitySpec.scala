@@ -9,17 +9,22 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 import org.locationtech.jts.geom.Coordinate
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Generated and interpreted evaluation of every spatial function agree
-  * byte for byte. Each function is built through its SQL table entry over
-  * bound input columns, then projected to an `UnsafeRow` once with
+/** Generated and interpreted evaluation of every graft scalar function
+  * on the `StFunction` bases agree byte for byte. Each function is built
+  * through its SQL table entry over bound input columns (`might_contain`
+  * over a literal bloom filter, the constant its type check asks for),
+  * then projected to an `UnsafeRow` once with
   * `spark.sql.codegen.factoryMode=CODEGEN_ONLY` (a compile failure fails
   * the test) and once with `NO_CODEGEN`, on the cross product of fixed
   * argument values: valid, invalid, empty, NULL and NaN-ordinate inputs,
-  * which covers both argument orders of every binary. A row either
-  * projects to the same bytes in both modes or fails with the same error.
+  * sorted, unsorted and NULL-holding arrays, and sketches of the right and
+  * the wrong size, which covers both argument orders of every binary. A
+  * row either projects to the same bytes in both modes or fails with the
+  * same error.
   * The cross product runs twice: with nullable input columns (the null
   * short-circuit and the null-result check) and with non-nullable ones
   * over the non-null rows (the code Spark generates for non-null input). */
@@ -44,19 +49,42 @@ class CodegenParitySpec extends AnyFunSuite {
         null),
       DoubleType -> Seq(1.0, 0.25, -2.0, 0.0, Double.NaN, null),
       IntegerType -> Seq(5, 1, 0, -1, null),
+      LongType -> Seq(16L, 3L, 0L, -5L, Long.MinValue, null),
       StringType -> Seq("POINT (1 2)", "LINESTRING (0 0, 3 4)", "POLYGN ((0 0", "EPSG:3857",
         "EPSG:5880", "EPSG:4326", null).map(s => if (s == null) null else UTF8String.fromString(s)),
       ArrayType(BinaryType) -> Seq(new GenericArrayData(Array[Any](square, point)),
         new GenericArrayData(Array.empty[Any]), new GenericArrayData(Array[Any](square, null)),
+        null),
+      ArrayType(LongType) -> Seq(
+        new GenericArrayData(Array[Any](1L, 3L, 5L, 16L)), // sorted
+        new GenericArrayData(Array[Any](16L, 1L, 5L)), // unsorted
+        new GenericArrayData(Array.empty[Any]),
+        new GenericArrayData(Array[Any](1L, null, 5L)),
+        new GenericArrayData(Array.tabulate[Any](CmsKernel.Cells)(i => (i % 7).toLong)), // a sketch
+        new GenericArrayData(Array.fill[Any](CmsKernel.Cells - 1)(1L)), // a wrong-size sketch
         null))
   }
 
-  /** Every SQL table entry whose expression is a spatial function, with
-    * its argument types, plus the two forms only the optimizer builds. */
+  /** A bloom filter holding 16 and 3, serialized: `might_contain` asks for
+    * a constant sketch. */
+  private val bloom: Array[Byte] = {
+    val bf = BloomFilter.create(100)
+    Seq(16L, 3L).foreach(bf.putLong)
+    val out = new java.io.ByteArrayOutputStream
+    bf.writeTo(out)
+    out.toByteArray
+  }
+
+  /** Every SQL table entry whose expression is on the `StFunction` bases,
+    * with its argument types, plus the two forms only the optimizer builds. */
   private val cases: Seq[(String, Seq[DataType], Seq[Expression] => Expression)] = {
     val registered = functions.sqlFunctions.flatMap { case (name, build) =>
       (1 to 4).iterator.flatMap(n => scala.util.Try(build(Seq.fill(n)(Literal(null)))).toOption)
-        .nextOption().collect { case f: StFunction => (name, f.inputTypes, build) }
+        .nextOption().collect {
+          case f: GraftMightContain =>
+            (name, f.inputTypes.tail, (es: Seq[Expression]) => build(Literal(bloom) +: es))
+          case f: StFunction => (name, f.inputTypes, build)
+        }
     }
     registered ++ Seq[(String, Seq[DataType], Seq[Expression] => Expression)](
       ("st_envelope_bounds_rect", Seq.fill(4)(DoubleType),
@@ -72,8 +100,7 @@ class CodegenParitySpec extends AnyFunSuite {
     val proj = SQLConf.withExistingConf(conf)(UnsafeProjection.create(Seq(e)))
     rows.map { r =>
       try Right(proj(r).copy().getBytes.toSeq)
-      catch { case t @ (_: Exception | _: StackOverflowError) =>
-        Left(s"${t.getClass.getName}: ${t.getMessage}") }
+      catch { case t: Exception => Left(s"${t.getClass.getName}: ${t.getMessage}") }
     }
   }
 
@@ -88,7 +115,9 @@ class CodegenParitySpec extends AnyFunSuite {
     val names = cases.map(_._1)
     assert(names.size > 90, names)
     assert(Seq("st_geomfromwkt", "st_makeenvelope", "st_point", "st_transform", "st_intersects",
-      "st_envelope_bounds_rect").forall(names.contains), names)
+      "st_envelope_bounds_rect", "minhash_sig", "minhash_bands", "simhash64", "hamming64",
+      "ngram_jaccard", "sorted_inter_count", "hilbert_index", "hilbert_xy", "cms_estimate",
+      "might_contain").forall(names.contains), names)
   }
 
   for ((name, types, build) <- cases) test(s"$name: generated code equals interpreted eval") {

@@ -12,7 +12,6 @@ class HilbertSpec extends AnyFunSuite {
   private lazy val spark = SparkFixture.spark
 
   test("hilbert_index is a bijection and consecutive indices are grid-adjacent (16x16)") {
-    graft.functions.registerAll(spark)
     val rows = spark.sql(
       """SELECT d, hilbert_xy(16L, d).x AS x, hilbert_xy(16L, d).y AS y,
         |       hilbert_index(16L, hilbert_xy(16L, d).x, hilbert_xy(16L, d).y) AS back
@@ -31,7 +30,6 @@ class HilbertSpec extends AnyFunSuite {
   }
 
   test("out-of-grid and non-power-of-two inputs are loud errors, null is null") {
-    graft.functions.registerAll(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT hilbert_index(16L, 16L, 0L)").collect()
     }
@@ -48,7 +46,6 @@ class HilbertSpec extends AnyFunSuite {
     // n = 2^32: n*n overflows Long, so the old bounds check rejected all
     // VALID indices with a misleading message and xy2d's s*s*3 walk would
     // overflow silently; the contract is a clear grid-size error instead
-    graft.functions.registerAll(spark)
     val e = intercept[Exception] {
       spark.sql(s"SELECT hilbert_xy(${1L << 32}L, 0L)").collect()
     }

@@ -986,4 +986,33 @@ class SpatialSqlSpec extends AnyFunSuite {
         }
       }
   }
+
+  test("a NaN tolerance: st_simplify raises a named error, in generated and interpreted code; " +
+      "st_simplifypreservetopology simplifies as at an infinite one") {
+    // JTS Douglas-Peucker recursed without end on a point at a NaN
+    // tolerance (StackOverflowError); the tolerance comes from a column,
+    // so the projection is not folded at planning
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+      SparkFixture.withConf("spark.sql.codegen.factoryMode", mode) {
+        SparkFixture.withConf("spark.sql.codegen.wholeStage", wholeStage) {
+          SparkFixture.withConf("spark.sql.codegen.fallback", "false") {
+            def simplify(fn: String, wkt: String) = spark.range(1)
+              .selectExpr(s"st_astext($fn(st_geomfromwkt('$wkt'), CAST('NaN' AS DOUBLE) + id))")
+              .head().getString(0)
+            for (wkt <- Seq("POINT (1 2)", "LINESTRING (0 0, 1 1, 2 0)")) {
+              val e = malformedError(simplify("st_simplify", wkt))
+              assert(e.getMessage == "st_simplify: tolerance is NaN", s"$mode $wkt: ${e.getMessage}")
+            }
+            // the topology-preserving simplifier terminates at NaN: every
+            // `distance > NaN` test is false, so it simplifies as far as
+            // topology allows, as an infinite tolerance would
+            assert(simplify("st_simplifypreservetopology", "POINT (1 2)") == "POINT (1 2)", mode)
+            assert(simplify("st_simplifypreservetopology", "LINESTRING (0 0, 1 1, 2 0)") ==
+              "LINESTRING (0 0, 2 0)", mode)
+            assert(simplify("st_simplifypreservetopology", "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))") ==
+              "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))", mode)
+          }
+        }
+      }
+  }
 }

@@ -49,7 +49,6 @@ class TopKAggSpec extends AnyFunSuite {
   }
 
   test("SQL-text surface: topk_agg(key, score, k) in spark.sql") {
-    graft.functions.registerAll(spark)
     spark.range(10).createOrReplaceTempView("tk_in")
     try {
       val got = spark.sql(

@@ -303,7 +303,6 @@ class PlanShapeSpec extends AnyFunSuite with FixtureDirs {
   test("st_dwithin LEFT SEMI also plans as the semi-mode R-tree operator") {
     import org.apache.spark.sql.functions._
     import graft.functions.{st_dwithin, st_makeenvelope}
-    graft.functions.registerAll(spark)
     val probe = spark.range(10).select(
       st_makeenvelope(col("id").cast("double"), lit(0.0),
         col("id").cast("double") + lit(0.5), lit(0.5)).as("g"))
@@ -325,7 +324,6 @@ class PlanShapeSpec extends AnyFunSuite with FixtureDirs {
   test("st_dwithin with a per-row distance COLUMN plans as the R-tree operator; null/negative match nothing") {
     import org.apache.spark.sql.functions._
     import graft.functions.{st_dwithin, st_makeenvelope}
-    graft.functions.registerAll(spark)
     // column-distance query's own plan
     val p = planOf("q_spatial_dwithin_col")
     assert(p.contains("BroadcastRTreeSpatialJoin"), p.take(2000))
